@@ -21,7 +21,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     import GraftExtensions.{intArg, markerList}
-    e.injectPlannerStrategy(_ => graft.plans.CosineTopKStrategy)
     e.injectFunction((FunctionIdentifier("poly_hash"),
       info("poly_hash", "poly_hash(str) - mod-p polynomial fold of a string"),
       (es: Seq[Expression]) => PolyHashExpr(es.head)))

@@ -138,9 +138,9 @@ object Ann {
     * ranks the ENTIRE corpus per query, and Spark executes each
     * query's partition as ONE task — per-query work and memory are
     * O(N), unbounded by any heap. Its job is to be obviously-correct
-    * ground truth that the scale paths (ann_topk_agg / ann_topk_plan's
-    * bounded heaps, and the IVF/PQ/LSH family) are cross-validated
-    * against in AnnRecallSpec. The require() below keeps it from being
+    * ground truth that the scale paths (ann_topk_agg's bounded heap,
+    * and the IVF/PQ/LSH family) are cross-validated against in
+    * AnnRecallSpec. The require() below keeps it from being
     * pointed at a production-sized query set by accident; raise
     * MaxBruteForceQueries consciously if a larger validation sweep is
     * ever needed.
@@ -202,24 +202,10 @@ object Ann {
       .orderBy("query_id", "rank")
   }
 
-  /** Brute-force top-k through the custom whole-operator plan
-    * (graft.plans.CosineTopK: LogicalPlan + SparkStrategy + physical
-    * exec with per-partition bounded heaps — the (c) route). Same
-    * results, same oracle as ann_topk.
+  /** ann_topk_agg's bounded-heap route and oracle under a second
+    * registered id.
     */
-  val topkPlan = Q(
-    "ann_topk_plan",
-    topk.oracle.get) { (spark, dir) =>
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.addStrategy(spark, graft.plans.CosineTopKStrategy)
-    val c = corpus(spark, dir).select("vec_id", "e", "nrm")
-    val q = c.filter(col("vec_id") < NumQueries)
-    val plan = graft.plans.CosineTopK(Bridge.planOf(q), Bridge.planOf(c), TopK)
-    Bridge.ofRows(spark, plan)
-      .select(col("query_id"), col("neighbor_id"),
-        round(lit(1e-9) + col("cosine"), 6).as("cosine"), col("rank"))
-      .orderBy("query_id", "rank")
-  }
+  val topkPlan = Q("ann_topk_plan", topkAgg.fn, topkAgg.oracle)
 
   /** LSH-bucketed ANN: candidates share ≥1 of the 4 8-bit hyperplane
     * bands with the query — multi-band lookup has far better recall

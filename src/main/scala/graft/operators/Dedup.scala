@@ -251,7 +251,7 @@ object Dedup {
     * connected components and assign each member its canonical doc
     * (the component's smallest doc_id).
     *
-    * Spark side: min-label propagation with pointer jumping (see
+    * Spark side: two-phase large-star / small-star contraction (see
     * [[connectedComponents]]) — O(log diameter) rounds, one action per
     * round, bounded lineage. Each round joins over the PAIR set only
     * (tiny relative to the corpus: only docs that appear in a verified
@@ -278,25 +278,6 @@ object Dedup {
       Seq(edges)
     }.head
 
-  /** Distributed connected components over a symmetric edge set
-    * (columns u, v): min-label propagation with pointer jumping.
-    *
-    * Each round takes the min over neighbour labels AND the label of
-    * the current label (label(label(u))), so the reach doubles per
-    * round and a chain of eccentricity n converges in O(log n) rounds
-    * — not the O(n) of plain one-hop propagation. Loop hygiene:
-    * exactly ONE action per round (the changed-count — `next` carries
-    * the old label so no second join is needed; it also materializes
-    * the round's lazy localCheckpoint), and the label lineage is
-    * truncated EVERY round — the pointer-jump self-join otherwise
-    * doubles the logical plan per round, which is exponential in both
-    * replay depth and plan-string size. If the cap is hit while labels
-    * are still changing the call FAILS LOUDLY instead of silently
-    * emitting partial components.
-    *
-    * Returns the (doc, label) frame — label = component minimum — and
-    * the number of rounds taken (asserted O(log n) in ClustersSpec).
-    */
   /** Release the block-storage partitions behind a localCheckpoint'd
     * frame. Dataset.unpersist only covers cache-manager entries; the
     * checkpoint blocks belong to the RDD inside the LogicalRDD the
@@ -455,8 +436,8 @@ object Dedup {
     }
     // Final labels, eagerly checkpointed so the returned frame is
     // self-contained and every loop intermediate can be released now.
-    // Nodes never leave the working edge set (each star op and the
-    // jump keep every touched endpoint attached to its minimum), so
+    // Nodes never leave the working edge set (each star op keeps
+    // every touched endpoint attached to its minimum), so
     // the fixpoint min-frame covers the entire input node set — the
     // node-frame left-join is only needed to restore nodes whose only
     // edges were self-loops, and only runs when such edges exist.
@@ -679,7 +660,7 @@ object Dedup {
     docs.select(col("doc_id"), wordHashes(col("text")).as("wh"))
       .select(col("doc_id"),
         greatest(size(col("wh")) - lit(SpanK - 1), lit(0)).cast("long").as("n_grams"),
-        // native single-pass gram projection; SpanGramsSpec pins it
+        // native single-pass gram projection; SpanDedupSpec pins it
         // equal to the HOF form (transform(sequence) + aggregate(slice))
         // it replaced — interpreted lambdas per window were the
         // dominant full-value cost of dd_spans (guide §1.2 step 2)
@@ -1045,7 +1026,7 @@ object Dedup {
           size(col("sha")).cast("long").as("na"), size(col("shb")).cast("long").as("nb"))
         .filter(col("n_common") > 0 && jac >= 0.5)
         .select("doc_a", "doc_b")
-      // persist before the CC loop: every pointer-jump round joins the
+      // persist before the CC loop: every star round joins the
       // edge set, which would otherwise re-run the band+verify pipeline
       // per round (the duplicateEdges pattern)
       val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
@@ -1067,7 +1048,7 @@ object Dedup {
     * standing band index, delta↔delta from banding the batch against
     * itself — are resolved against the standing labels by CONTRACTING
     * every touched base cluster to its label node and running the
-    * pointer-jump CC on that small graph only. Because a base label
+    * star CC on that small graph only. Because a base label
     * is its cluster's minimum doc id, the contracted minimum equals
     * the composed corpus's minimum, so each delta doc's canonical_id
     * is exactly what a full rebuild (dd_clusters) would assign — the
@@ -1151,7 +1132,7 @@ object Dedup {
       .select(col("doc_id").as("a"), col("corpus_id").as("b"))
     val rawEdges = crossC.unionByName(crossS)
       .unionByName(dd.select(col("doc_a").as("a"), col("doc_b").as("b")))
-    // persist before the CC loop — each pointer-jump round joins the
+    // persist before the CC loop — each star round joins the
     // edge set, which would otherwise re-run the probe+verify pipelines
     // per round (measured 9.3 → ~2 s at sf0.1)
     val edges = rawEdges.select(col("a").as("u"), col("b").as("v"))

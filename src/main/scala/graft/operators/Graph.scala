@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed link analysis — PageRank over the part↔supplier
@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * over the cached edges plus a |V|-row collect-and-broadcast. Each
   * iteration's ranks are lazily localCheckpoint'd so the composed
   * plan stays one-iteration deep and nothing is recomputed across
-  * the 10 broadcast-collect jobs. When |V| outgrows broadcast reach
+  * the 10 broadcast-collect jobs, and released once the next round
+  * is built ([[rounds]]). When |V| outgrows broadcast reach
   * (> [[BroadcastNodeCap]] nodes, decided from the build-time node
   * count — count-adaptive on BOTH engines' identical node sets) the
   * loop falls back to the shuffle-hash plan: edge frame partitioned
@@ -94,6 +95,10 @@ object Graph {
     }
   }
 
+  /** The build-time broadcast decision of the rank loops. */
+  private def underCap(spark: SparkSession, dir: String): Boolean =
+    nodeCount(spark, dir) <= BroadcastNodeCap
+
   /** The oracle unrolls the same 10 damped iterations as chained
     * CTEs (standard SQL recursive CTEs forbid aggregation in the
     * recursive member, so the fixed iteration count is spelled out).
@@ -117,37 +122,58 @@ object Graph {
        |ORDER BY node""".stripMargin
   }
 
-  val pagerank = Q("gr_pagerank", oracleSql) { (spark, dir) =>
-    val e2 = edgesWithDeg(spark, dir)
-    val broadcastRanks = nodeCount(spark, dir) <= BroadcastNodeCap
-    var ranks: DataFrame = e2.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("rank"))
-    for (it <- 1 to Iters) {
-      // name-based USING join sidesteps self-join column ambiguity
-      // (every iteration's ranks frame descends from e2 itself).
-      // Broadcast path: the |V|-row ranks replicate to the cached
-      // edge partitions; the cache is HashPartitioning(dst), which a
-      // broadcast join preserves, so groupBy(dst) aggregates IN
-      // PLACE — the iteration runs zero exchanges. The lazy
-      // localCheckpoint truncates the composed plan to one iteration
-      // (each broadcast-collect job materializes the previous
-      // round's checkpoint, so nothing is recomputed).
-      // Fallback (|V| past broadcast reach): SHUFFLE_HASH on the
-      // ranks side against the src-partitioned cache — only |V| rows
-      // exchange per iteration, and the edge side is streamed
-      // unsorted against a per-partition hash table.
-      val prev = ranks.withColumnRenamed("node", "src")
-      val joined =
-        if (broadcastRanks) e2.join(broadcast(prev), "src")
-        else e2.join(prev.hint("SHUFFLE_HASH"), "src")
-      val next = joined
-        .groupBy("dst")
-        .agg((lit(0.15) + lit(Damping) * sum(col("rank") / col("outdeg"))).as("rank"))
+  /** `n` rounds of r'(dst) = `agg` over the (src, dst, outdeg) edge
+    * frame joined on src with the (node, rank) frame, from `r0`;
+    * returns the round before the last and the last. The |V|-row ranks
+    * side is broadcast under [[BroadcastNodeCap]]: on the
+    * dst-partitioned edge cache the broadcast join preserves the
+    * partitioning, so groupBy(dst) aggregates IN PLACE and the round
+    * runs zero exchanges. Past the cap it joins SHUFFLE_HASH: only the
+    * |V| rows exchange, and the edge side streams unsorted against a
+    * per-partition hash table. The name-based USING join sidesteps
+    * self-join column ambiguity (every round descends from e2 itself).
+    * On the broadcast path every round but the last is lazily
+    * localCheckpoint'd: building round i+1 runs the broadcast job that
+    * materializes round i, and nothing reads round i's blocks after
+    * that, so they are released right there. The last round stays
+    * lazy, so the served plan is one round deep and the round before
+    * it is the only checkpoint that outlives the call. Off the
+    * broadcast path no round is checkpointed: nothing would
+    * materialize one before the caller's action, so none could be
+    * released inside the loop.
+    */
+  private def rounds(e2: DataFrame, r0: DataFrame, n: Int, agg: Column,
+      bcast: Boolean): (DataFrame, DataFrame) =
+    (1 to n).foldLeft((r0, r0)) { case ((_, cur), it) =>
+      val prev = cur.withColumnRenamed("node", "src")
+      val next = e2.join(if (bcast) broadcast(prev) else prev.hint("SHUFFLE_HASH"), "src")
+        .groupBy("dst").agg(agg.as("rank"))
         .select(col("dst").as("node"), col("rank"))
-      // the LAST iteration stays un-checkpointed so the served plan
-      // exposes the iteration shape (BHJ + in-place agg) to explain
-      ranks = if (broadcastRanks && it < Iters) next.localCheckpoint(false) else next
+      if (bcast && it < n) {
+        val ck = next.localCheckpoint(false)
+        if (it > 1) Dedup.releaseLocalCheckpoint(cur)
+        (cur, ck)
+      } else (cur, next)
     }
+
+  /** `n` damped rounds r' = base + 0.85·Σ r/outdeg ([[rounds]]);
+    * `base` may read `dst`.
+    */
+  private[graft] def dampedRanks(e2: DataFrame, r0: DataFrame, n: Int, base: Column,
+      bcast: Boolean): (DataFrame, DataFrame) =
+    rounds(e2, r0, n, base + lit(Damping) * sum(col("rank") / col("outdeg")), bcast)
+
+  val pagerank = Q("gr_pagerank", oracleSql)((spark, dir) =>
+    pagerankWith(spark, dir, underCap(spark, dir)))
+
+  /** gr_pagerank (likewise gr_ppr, gr_hits) on the broadcast branch
+    * the caller picks; the query passes [[underCap]].
+    */
+  private[graft] def pagerankWith(spark: SparkSession, dir: String, bcast: Boolean): DataFrame = {
+    val e2 = edgesWithDeg(spark, dir)
+    val r0 = e2.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(1.0).as("rank"))
+    val (_, ranks) = dampedRanks(e2, r0, Iters, lit(0.15), bcast)
     ranks.select(col("node"), round(lit(1e-9) + col("rank"), 6).as("rank"))
       .orderBy("node")
   }
@@ -277,9 +303,9 @@ object Graph {
     * The third classic graph statistic after rank (gr_pagerank) and
     * density (gr_triangles): community membership — and the
     * relational-graph face of the engine's one CC implementation
-    * (Dedup.connectedComponents pointer-jumping min-label loop, the
-    * same code dd_clusters and dd_embed_clusters resolve with; the
-    * corpus never enters the loop, only the edge set).
+    * (Dedup.connectedComponents' two-phase large-star/small-star
+    * loop, the same code dd_clusters and dd_embed_clusters resolve
+    * with; the corpus never enters the loop, only the edge set).
     */
   val components = Q(
     "gr_components",
@@ -671,7 +697,7 @@ object Graph {
     // edge partitions instead of exchanging the edge list (the sf10
     // leg measured 80 GB of per-round sort-join spill without this);
     // past the cap the plain shuffled join takes over.
-    val bcast = nodeCount(spark, dir) <= BroadcastNodeCap
+    val bcast = underCap(spark, dir)
     // Round 1 in closed form: r0 labels every node with its own id and
     // the edge list is distinct, so each neighbor label appears exactly
     // once and the (count DESC, label ASC) argmax degenerates to the
@@ -732,7 +758,7 @@ object Graph {
     val e2 = edgesWithDeg(spark, dir)
     val degDst = e2.groupBy(col("dst")).agg(count(lit(1)).as("d_dst"))
     val degF =
-      if (nodeCount(spark, dir) <= BroadcastNodeCap) broadcast(degDst) else degDst
+      if (underCap(spark, dir)) broadcast(degDst) else degDst
     e2.join(degF, "dst")
       .agg(count(lit(1)).as("n_edges"),
         round(lit(1e-9) + avg("outdeg"), 4).as("avg_src_deg"),
@@ -780,7 +806,7 @@ object Graph {
     // standard node cap governs the broadcast legitimately at any K
     // (the principled fix for the K-seed driver-memory concern: shrink
     // the frame, don't just gate it).
-    val bcast = nodeCount(spark, dir) <= BroadcastNodeCap
+    val bcast = underCap(spark, dir)
     def maybeBroadcast(df: org.apache.spark.sql.DataFrame) =
       if (bcast) broadcast(df) else df
     // 4 bounded rows of model state (the gr_bfs 1-row seed agg,
@@ -1022,7 +1048,7 @@ object Graph {
     * collects σ_u/σ_v·(1+δ_v) over deeper neighbors on the same
     * seed's tree (t_i>0); empty sums coalesce to 0.
     */
-  private def deltaAgg(i: Int): org.apache.spark.sql.Column =
+  private def deltaAgg(i: Int): Column =
     coalesce(sum(when(col(s"t$i") > 0 && col(s"s$i") > 0,
       col(s"s$i").cast("double") / col(s"t$i") * (lit(1.0) + col(s"e$i")))),
       lit(0.0)).as(s"d$i")
@@ -1083,27 +1109,18 @@ object Graph {
          |SELECT node, round(1e-9 + rank, 6) AS rank
          |FROM r$PprIters
          |ORDER BY node""".stripMargin
-    }) { (spark, dir) =>
+    })((spark, dir) => pprWith(spark, dir, underCap(spark, dir)))
+
+  private[graft] def pprWith(spark: SparkSession, dir: String, bcast: Boolean): DataFrame = {
     val e2 = edgesWithDeg(spark, dir)
-    val broadcastRanks = nodeCount(spark, dir) <= BroadcastNodeCap
     // 4 bounded rows of model state (the closeness seed convention)
     val seedIds = e2.select(col("src")).distinct()
       .orderBy("src").limit(PprSeeds).collect().map(_.getLong(0)).toSeq
-    var ranks: DataFrame = e2.select(col("src").as("node")).distinct()
+    val r0 = e2.select(col("src").as("node")).distinct()
       .select(col("node"),
         when(col("node").isin(seedIds: _*), lit(0.25)).otherwise(lit(0.0)).as("rank"))
-    for (it <- 1 to PprIters) {
-      val prev = ranks.withColumnRenamed("node", "src")
-      val joined =
-        if (broadcastRanks) e2.join(broadcast(prev), "src")
-        else e2.join(prev.hint("SHUFFLE_HASH"), "src")
-      val next = joined
-        .groupBy("dst")
-        .agg((when(col("dst").isin(seedIds: _*), lit(PprTele)).otherwise(lit(0.0))
-          + lit(Damping) * sum(col("rank") / col("outdeg"))).as("rank"))
-        .select(col("dst").as("node"), col("rank"))
-      ranks = if (broadcastRanks && it < PprIters) next.localCheckpoint(false) else next
-    }
+    val tele = when(col("dst").isin(seedIds: _*), lit(PprTele)).otherwise(lit(0.0))
+    val (_, ranks) = dampedRanks(e2, r0, PprIters, tele, bcast)
     ranks.select(col("node"), round(lit(1e-9) + col("rank"), 6).as("rank"))
       .orderBy("node")
   }
@@ -1126,8 +1143,9 @@ object Graph {
     * |V|-row score frame (the gr_pagerank zero-exchange trick, twice
     * per round); normalization happens ONCE at the end (scale-invariant
     * recursion — see the loop comment), so each round is exactly one
-    * join+aggregate per half-step. Per-round lazy localCheckpoint keeps
-    * the composed plan one-round deep. Only FINAL scores round (6 dp);
+    * join+aggregate per half-step. The half-steps run through
+    * [[rounds]], whose checkpoints keep the composed plan one
+    * half-step deep. Only FINAL scores round (6 dp);
     * end-vs-per-round normalization drifts ~1e-15 across engines'
     * partial-sum orders, far under the nudge.
     */
@@ -1153,18 +1171,13 @@ object Graph {
          |  UNION ALL
          |  SELECT node, 'authority' AS kind, x FROM a$HitsIters)
          |ORDER BY kind, node""".stripMargin
-    }) { (spark, dir) =>
+    })((spark, dir) => hitsWith(spark, dir, underCap(spark, dir)))
+
+  private[graft] def hitsWith(spark: SparkSession, dir: String, bcast: Boolean): DataFrame = {
     val e2 = edgesWithDeg(spark, dir)
-    val bcast = nodeCount(spark, dir) <= BroadcastNodeCap
-    def maybeB(df: DataFrame) = if (bcast) broadcast(df) else df.hint("SHUFFLE_HASH")
-    // the cache's two directions: p→s rows drive a = Eᵀh (group by the
-    // supplier dst), s→p rows drive h = Ea (group by the part dst) —
-    // both aggregations land on the cache's own dst partitioning
-    val fwd = e2.filter(col("src") < SuppOffset).select(col("src").as("p"), col("dst").as("s"))
-    val rev = e2.filter(col("src") >= SuppOffset).select(col("src").as("s"), col("dst").as("p"))
     def normalize(raw: DataFrame): DataFrame = {
-      val nm = raw.agg(sqrt(sum(col("x") * col("x"))).as("nm"))
-      raw.crossJoin(broadcast(nm)).select(col("node"), (col("x") / col("nm")).as("x"))
+      val nm = raw.agg(sqrt(sum(col("rank") * col("rank"))).as("nm"))
+      raw.crossJoin(broadcast(nm)).select(col("node"), (col("rank") / col("nm")).as("x"))
     }
     // Iterate UNNORMALIZED: the per-round L2 division is scale-invariant
     // (a_i ∝ (EᵀE)^… h0 regardless of interleaved scaling), so one
@@ -1173,17 +1186,11 @@ object Graph {
     // the r12 audit flagged. Double range absorbs the growth (≤ ~1e30
     // after 10 half-steps at sf10); fp drift vs the oracle's per-round
     // division is ~1e-15, far under the 1e-9 round nudge.
-    var h: DataFrame = fwd.select(col("p").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("x"))
-    var a: DataFrame = null
-    for (it <- 1 to HitsIters) {
-      val aRaw = fwd.join(maybeB(h.withColumnRenamed("node", "p")), "p")
-        .groupBy(col("s").as("node")).agg(sum("x").as("x"))
-      a = aRaw.localCheckpoint(false) // ≥2 consumers every round
-      val hRaw = rev.join(maybeB(a.withColumnRenamed("node", "s")), "s")
-        .groupBy(col("p").as("node")).agg(sum("x").as("x"))
-      h = hRaw.localCheckpoint(false)
-    }
+    // Half-steps alternate by themselves: from hub (part) scores the
+    // p→s rows give a, from authority (supplier) scores the s→p rows h.
+    val h0 = e2.filter(col("src") < SuppOffset).select(col("src").as("node")).distinct()
+      .select(col("node"), lit(1.0).as("rank"))
+    val (a, h) = rounds(e2, h0, 2 * HitsIters, sum("rank"), bcast)
     normalize(h).select(col("node"), lit("hub").as("kind"), col("x"))
       .unionByName(
         normalize(a).select(col("node"), lit("authority").as("kind"), col("x")))
@@ -1223,25 +1230,12 @@ object Graph {
       basePairs.count()
       // converged stored ranks: the same zero-exchange loop gr_pagerank
       // runs, executed ONCE at build time
-      var ranks: DataFrame = baseDeg.select(col("src").as("node"), lit(1.0).as("rank"))
-      val intermediates = scala.collection.mutable.Buffer[DataFrame]()
-      for (it <- 1 to Iters) {
-        val prev = ranks.withColumnRenamed("node", "src")
-        val joined =
-          if (bcast) baseE2.join(broadcast(prev), "src")
-          else baseE2.join(prev.hint("SHUFFLE_HASH"), "src")
-        val next = joined
-          .groupBy("dst")
-          .agg((lit(0.15) + lit(Damping) * sum(col("rank") / col("outdeg"))).as("rank"))
-          .select(col("dst").as("node"), col("rank"))
-        ranks = if (it < Iters) {
-          val ck = next.localCheckpoint(false); intermediates += ck; ck
-        } else next
-      }
-      val baseRanks = ranks
+      val (penult, last) = dampedRanks(baseE2,
+        baseDeg.select(col("src").as("node"), lit(1.0).as("rank")), Iters, lit(0.15), bcast)
+      val baseRanks = last
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       baseRanks.count()
-      intermediates.foreach(Dedup.releaseLocalCheckpoint)
+      if (bcast) Dedup.releaseLocalCheckpoint(penult)
       Seq(baseE2, basePairs, baseDeg, baseRanks)
     }
 
@@ -1322,9 +1316,10 @@ object Graph {
     *    O(|delta|) + 2 map passes over the cached edges, vs 10 full
     *    iterations for a cold rebuild.
     *
-    * Approximation posture: warm-starting a converged vector for 2
-    * rounds bounds the residual by λ²·‖Δr₀‖ (λ = 0.85 damping), and
-    * PrIncrSpec pins warm-vs-cold max |Δrank| on the combined graph.
+    * Approximation posture: every node of the combined graph has
+    * outdegree ≥ 1, so a damped round is a λ-contraction in L1
+    * (λ = 0.85) and 2 warm rounds bound the residual by λ²·‖w₀ − r*‖₁;
+    * PrIncrSpec pins that bound against a 60-round cold run.
     * The ORACLE is exact — DuckDB replays the identical algebra.
     */
   val pagerankIncremental = Q("gr_pagerank_incremental", prIncrOracle) { (spark, dir) =>

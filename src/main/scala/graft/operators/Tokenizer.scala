@@ -52,15 +52,6 @@ object Tokenizer {
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
-  /** Release the blocks behind a localCheckpoint'd frame (Dataset
-    * .unpersist only covers cache-manager entries — same rationale as
-    * the connected-components loop, Dedup.scala).
-    */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   /** Memoized train: Seq(mergeTable, finalVocab). The merge table is
     * (rank, lhs, rhs, merged, pair_count) — the learned tokenizer;
     * finalVocab is (word, cnt, syms) after all rounds — the lookup
@@ -129,12 +120,12 @@ object Tokenizer {
               .as("syms"))
           .localCheckpoint(false)
         next.count()
-        releaseLocalCheckpoint(vocab) // superseded snapshot
+        Dedup.releaseLocalCheckpoint(vocab) // superseded snapshot
         vocab = next
       }
       val mergeTable = merges.result().reduce(_ union _).persist(lvl)
       mergeTable.count()
-      merges.result().foreach(releaseLocalCheckpoint)
+      merges.result().foreach(Dedup.releaseLocalCheckpoint)
       Seq(mergeTable, vocab)
   }
 

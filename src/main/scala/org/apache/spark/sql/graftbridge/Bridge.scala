@@ -13,17 +13,6 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Build a DataFrame from a logical plan (classic sessions only). */
-  def ofRows(
-      spark: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Analyzed logical plan of a DataFrame. */
-  def planOf(df: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
-
   /** localCheckpoint WITHOUT origin-stats inheritance. Spark's
     * Dataset.checkpoint (SPARK-39834) copies the pre-checkpoint
     * plan's Statistics onto the LogicalRDD it returns. In an
@@ -50,16 +39,6 @@ object Bridge {
             l.output, l.rdd, l.outputPartitioning, l.outputOrdering, l.isStreaming)(
             cds.sparkSession, None, None))
       case _ => ck
-    }
-  }
-
-  /** Idempotently register an extra planner strategy on a live session. */
-  def addStrategy(
-      spark: org.apache.spark.sql.SparkSession,
-      s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(s)) {
-      cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
     }
   }
 }

@@ -26,22 +26,20 @@ class GraphSpec extends AnyFunSuite {
   test("on a regular symmetric graph every rank is exactly 1") {
     import spark.implicits._
     // 4-cycle: every node has degree 2 → uniform ranks are the fixed
-    // point and iteration never leaves it
+    // point and iteration never leaves it — through the engine's own
+    // damped round, on the broadcast branch and past it
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L))
     val e0 = edges.toDF("src", "dst")
     val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
     val deg = sym.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val e2 = sym.join(deg, "src")
-    var ranks = deg.select(col("src").as("node"), lit(1.0).as("rank"))
-    for (_ <- 1 to 10) {
-      ranks = e2.join(ranks.withColumnRenamed("node", "src"), "src")
-        .groupBy("dst")
-        .agg((lit(0.15) + lit(0.85) * sum(col("rank") / col("outdeg"))).as("rank"))
-        .select(col("dst").as("node"), col("rank"))
+    val r0 = deg.select(col("src").as("node"), lit(1.0).as("rank"))
+    for (bcast <- Seq(true, false)) {
+      val (_, ranks) = operators.Graph.dampedRanks(e2, r0, 10, lit(0.15), bcast)
+      val out = ranks.collect().map(r => (r.getAs[Long]("node"), r.getAs[Double]("rank")))
+      assert(out.length == 4, s"bcast=$bcast")
+      out.foreach { case (_, r) => assert(math.abs(r - 1.0) < 1e-12, s"bcast=$bcast") }
     }
-    val out = ranks.collect().map(r => (r.getAs[Long]("node"), r.getAs[Double]("rank")))
-    assert(out.length == 4)
-    out.foreach { case (_, r) => assert(math.abs(r - 1.0) < 1e-12) }
   }
 
   test("gr_kcore reaches the true 2-core: min-degree holds and peeling bit") {
