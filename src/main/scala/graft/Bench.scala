@@ -155,10 +155,10 @@ object Bench {
         operators.Search.bm25Stats(spark, sfDir)
       },
       built("audit_caches",
-        Seq("ma_audit", "ma_summary", "ma_report", "ma_report_full",
-          "ma_report_json", "ma_report_basic", "ma_probe_consistency",
-          "ma_probe_consistency_by_category", "ma_detect_confusion")) {
-        operators.Style.warmSharedCaches(spark, sfDir)
+        (operators.Audit.all ++ operators.Style.all).map(_.name) ++
+          Seq("ma_summary", "ma_report_features", "ma_report", "ma_report_json",
+            "ma_report_full", "ma_report_basic")) {
+        operators.Audit.corpus(spark, sfDir)
       },
       built("km_centroids", Seq("km_topics", "km_profile")) {
         operators.Cluster.centroids(spark, sfDir)

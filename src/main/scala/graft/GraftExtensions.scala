@@ -39,7 +39,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((FunctionIdentifier("topk_by_score"),
       info("topk_by_score", "topk_by_score(score, id, k) - bounded top-k aggregate"),
       (es: Seq[Expression]) => TopKByScore(es(0), es(1),
-        intArg("topk_by_score", "k", es(2))).toAggregateExpression()))
+        intArg("topk_by_score", "k", es(2)), None).toAggregateExpression()))
     e.injectFunction((FunctionIdentifier("word_bigrams"),
       info("word_bigrams", "word_bigrams(str) - adjacent \\w+ word pairs"),
       (es: Seq[Expression]) => WordBigramsExpr(es.head)))

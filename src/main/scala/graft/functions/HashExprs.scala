@@ -866,7 +866,7 @@ object HashExprs {
       "scala_udf")
     reg.createOrReplaceTempFunction("topk_by_score",
       es => TopKByScore(es(0), es(1),
-        graft.GraftExtensions.intArg("topk_by_score", "k", es(2))).toAggregateExpression(),
+        graft.GraftExtensions.intArg("topk_by_score", "k", es(2)), None).toAggregateExpression(),
       "scala_udf")
   }
 }

@@ -1,20 +1,22 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, SessionMemo, Tables}
 import graft.functions.AuditDefs._
+import graft.functions.MarkerExprs.{marker_total, word_bigrams, word_count, word_tokens}
+import graft.functions.TopKAgg.topk_by_score
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** The reference's model-audit surface, re-expressed as Spark
   * operators over the `documents` corpus (`text` = collected model
   * responses, `source` = model identity).
   *
-  * Every operator is a map-side feature extraction followed by at
-  * most one narrow aggregation on the low-cardinality model key;
-  * pairwise model comparison happens on the aggregated table
-  * (|models|² rows), so cost is independent of corpus size — the
-  * layout that survives 100 TB.
+  * Every signal (llmmap, DLI, style) is a per-document map and a mean
+  * per model, so the family reads the corpus once per dir ([[corpus]]):
+  * one projection computes every map, one groupBy(source) the means,
+  * one token aggregation the vocabulary and bigram profile. Pairwise
+  * comparison and the verdicts project a self-join of the per-model
+  * rows (|models|² rows), so their cost is independent of corpus size.
   *
   * Oracle SQL is generated from the same AuditDefs constants as the
   * Spark plans. All SQL numeric literals are CAST to DOUBLE (DuckDB
@@ -28,15 +30,10 @@ object Audit {
   // ═══════════════ llmmap: per-response features ═══════════════
   // Reference: llmmap.py:28-67 (_extract_response_features)
 
-  /** Unrounded per-doc feature frame (Spark side). */
-  private def docFeats(spark: SparkSession, dir: String): DataFrame =
-    docFeatsOf(Tables.documents(spark, dir))
-
-  /** The same feature extraction over ANY frame with (doc_id, source,
-    * text) — one definition shared by the batch corpus queries and
-    * Streaming.fingerprint, so batch and stream cannot drift.
+  /** Unrounded per-doc llmmap feature columns over `text`, shared by
+    * the corpus pass and Streaming.fingerprint.
     */
-  private[graft] def docFeatsOf(docs: DataFrame): DataFrame = {
+  private def featureCols: Seq[Column] = {
     val t = col("text")
     val lt = lower(col("text"))
     val words = split(trim(t), "\\s+")
@@ -52,28 +49,25 @@ object Audit {
     val nonWs = length(regexp_replace(t, "\\s+", ""))
 
     val markerCols = llmmapMarkers.map { case (cat, ms) =>
-      (graft.functions.MarkerExprs.marker_total(lt, ms) / tWords).as(s"style_$cat")
+      (marker_total(lt, ms) / tWords).as(s"style_$cat")
     }
 
-    docs.select(
-      Seq(
-        col("doc_id"),
-        col("source"),
-        length(t).cast("long").as("length_chars"),
-        nWords.cast("long").as("length_words"),
-        size(sentences).cast("long").as("length_sentences"),
-        (nonWs / tWords).as("avg_word_length"),
-        (nWords / nSent).as("avg_sentence_length"),
-        (when(emptyDoc, lit(0)).otherwise(size(array_distinct(split(lower(trim(t)), "\\s+"))))
-          / tWords).as("unique_word_ratio"),
-        ((length(t) - length(regexp_replace(t, "[.,;:!?]", ""))) / tChars).as("punctuation_ratio"),
-        ((length(t) - length(regexp_replace(t, "\n", ""))) / tChars).as("newline_ratio"),
-        t.rlike(bulletRe).as("has_bullet_points"),
-        t.rlike(numberedRe).as("has_numbered_list"),
-        t.rlike(mdHeaderRe).as("has_markdown_headers"),
-        t.contains("```").as("has_code_blocks"),
-        refusalPrefixes.map(p => lt.startsWith(p)).reduce(_ || _).as("starts_with_refusal")
-      ) ++ markerCols: _*)
+    Seq(
+      length(t).cast("long").as("length_chars"),
+      nWords.cast("long").as("length_words"),
+      size(sentences).cast("long").as("length_sentences"),
+      (nonWs / tWords).as("avg_word_length"),
+      (nWords / nSent).as("avg_sentence_length"),
+      (when(emptyDoc, lit(0)).otherwise(size(array_distinct(split(lower(trim(t)), "\\s+"))))
+        / tWords).as("unique_word_ratio"),
+      ((length(t) - length(regexp_replace(t, "[.,;:!?]", ""))) / tChars).as("punctuation_ratio"),
+      ((length(t) - length(regexp_replace(t, "\n", ""))) / tChars).as("newline_ratio"),
+      t.rlike(bulletRe).as("has_bullet_points"),
+      t.rlike(numberedRe).as("has_numbered_list"),
+      t.rlike(mdHeaderRe).as("has_markdown_headers"),
+      t.contains("```").as("has_code_blocks"),
+      refusalPrefixes.map(p => lt.startsWith(p)).reduce(_ || _).as("starts_with_refusal")
+    ) ++ markerCols
   }
 
   /** Matching unrounded per-doc feature SQL (DuckDB side). */
@@ -123,18 +117,11 @@ object Audit {
        |  ${styleCats.map(c => s"round(1e-9 + $c, 6) AS $c").mkString(",\n  ")}
        |FROM ($docFeatsSql)
        |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
-    val f = docFeats(spark, dir)
-    f.select(
-      Seq(col("doc_id"), col("source"), col("length_chars"), col("length_words"),
-        col("length_sentences"),
-        round(lit(1e-9) + col("avg_word_length"), 6).as("avg_word_length"),
-        round(lit(1e-9) + col("avg_sentence_length"), 6).as("avg_sentence_length"),
-        round(lit(1e-9) + col("unique_word_ratio"), 6).as("unique_word_ratio"),
-        round(lit(1e-9) + col("punctuation_ratio"), 6).as("punctuation_ratio"),
-        round(lit(1e-9) + col("newline_ratio"), 6).as("newline_ratio"),
-        col("has_bullet_points"), col("has_numbered_list"), col("has_markdown_headers"),
-        col("has_code_blocks"), col("starts_with_refusal")) ++
-        styleCats.map(c => round(lit(1e-9) + col(c), 6).as(c)): _*)
+    // the counts and flags as they are, every ratio rounded
+    val exact = numericFeatures.filter(_.startsWith("length_")) ++ boolFeatures
+    corpus(spark, dir).docs.select(Seq(col("doc_id"), col("source")) ++
+      (numericFeatures ++ boolFeatures ++ styleCats).map(c =>
+        if (exact.contains(c)) col(c) else round(lit(1e-9) + col(c), 6).as(c)): _*)
       .orderBy("doc_id")
   }
 
@@ -145,29 +132,21 @@ object Audit {
   private[graft] val fpCols: Seq[String] =
     numericFeatures.map("avg_" + _) ++ boolFeatures.map("ratio_" + _) ++ styleCats
 
-  /** The fingerprint aggregation over any per-doc feature frame — one
-    * definition shared by the batch ma_fingerprint and
-    * Streaming.fingerprint. Every component is an algebraic mean, so
-    * on a stream Spark's agg state carries (sum, count) per source and
-    * maintains the fingerprint incrementally.
+  /** The fingerprint aggregation over per-doc feature columns, shared
+    * by the corpus pass and Streaming.fingerprint. Every component is an
+    * algebraic mean, so a stream maintains it incrementally.
     */
-  private[graft] def fingerprintAgg(feats: DataFrame): DataFrame =
-    feats.groupBy("source")
-      .agg(
-        avg(numericFeatures.head).as("avg_" + numericFeatures.head),
-        numericFeatures.tail.map(c => avg(c).as("avg_" + c)) ++
-          boolFeatures.map(c => avg(col(c).cast("int")).as("ratio_" + c)) ++
-          styleCats.map(c => avg(c).as(c)): _*)
+  private def fingerprintAggs: Seq[Column] =
+    numericFeatures.map(c => avg(c).as("avg_" + c)) ++
+      boolFeatures.map(c => avg(col(c).cast("int")).as("ratio_" + c)) ++
+      styleCats.map(c => avg(c).as(c))
 
   /** Streaming.fingerprint's entry: features + fingerprint agg over
     * any (doc_id, source, text) frame, batch or stream.
     */
   private[graft] def fingerprintOf(docs: DataFrame): DataFrame =
-    fingerprintAgg(docFeatsOf(docs))
-
-  /** Unrounded per-model fingerprint (Spark side). */
-  private def fingerprintDf(spark: SparkSession, dir: String): DataFrame =
-    fingerprintAgg(docFeats(spark, dir)).cache()
+    docs.select(col("source") +: featureCols: _*)
+      .groupBy("source").agg(fingerprintAggs.head, fingerprintAggs.tail: _*)
 
   private val fingerprintSql: String = {
     val aggs =
@@ -182,7 +161,7 @@ object Audit {
     s"""SELECT source, ${fpCols.map(c => s"round(1e-9 + $c, 6) AS $c").mkString(", ")}
        |FROM ($fingerprintSql)
        |ORDER BY source""".stripMargin) { (spark, dir) =>
-    fingerprintDf(spark, dir)
+    corpus(spark, dir).models
       .select(col("source") +: fpCols.map(c => round(lit(1e-9) + col(c), 6).as(c)): _*)
       .orderBy("source")
   }
@@ -222,71 +201,61 @@ object Audit {
          |)
          |ORDER BY model_a, model_b""".stripMargin
     }) { (spark, dir) =>
-    val fp = fingerprintDf(spark, dir)
-    val a = fp.select(col("source").as("model_a") +: fpCols.map(c => col(c).as(s"a_$c")): _*)
-    val b = fp.select(col("source").as("model_b") +: fpCols.map(c => col(c).as(s"b_$c")): _*)
-    val dot = fpCols.map(c => normC(col(s"a_$c"), c) * normC(col(s"b_$c"), c)).reduce(_ + _)
-    val na = sqrt(fpCols.map(c => { val n = normC(col(s"a_$c"), c); n * n }).reduce(_ + _))
-    val nb = sqrt(fpCols.map(c => { val n = normC(col(s"b_$c"), c); n * n }).reduce(_ + _))
-    val sim = when(na * nb === 0d, 0d).otherwise(dot / (na * nb))
-    a.join(b, col("model_a") < col("model_b"))
-      .select(col("model_a"), col("model_b"), sim.as("similarity"))
+    comparedDf(spark, dir)
       .select(
         col("model_a"), col("model_b"),
-        round(lit(1e-9) + col("similarity"), 6).as("similarity"),
-        (col("similarity") >= 0.85).as("is_derived"),
-        round(lit(1e-9) + least(abs(col("similarity") - 0.85) / 0.15, lit(1d)), 6).as("confidence"))
+        round(lit(1e-9) + col("fp_sim"), 6).as("similarity"),
+        (col("fp_sim") >= 0.85).as("is_derived"),
+        round(lit(1e-9) + least(abs(col("fp_sim") - 0.85) / 0.15, lit(1d)), 6).as("confidence"))
       .orderBy("model_a", "model_b")
   }
 
   // ═══════════════ DLI: behavior signature ═══════════════
   // Reference: dli.py:60-113 (_extract_behavior_signature)
 
-  /** Unrounded per-model DLI signature (Spark side). */
-  private def dliSigDf(spark: SparkSession, dir: String): DataFrame =
-    dliSigOf(Tables.documents(spark, dir)).cache()
-
-  /** Signature over any frame with (source, text) — reused by the
-    * multilingual golden spec on an inline corpus.
+  /** The DLI per-document parts the llmmap features lack: the
+    * signature's average length and markdown, list and code rates are
+    * the fingerprint's avg_length_words and ratio_* means (the same
+    * per-doc expressions), so they are not computed twice.
     */
-  private[graft] def dliSigOf(docs: DataFrame): DataFrame = {
+  private def dliDocCols: Seq[Column] = {
     val lt = lower(col("text"))
-    val perDoc = docs.select(
-      col("source"),
-      anySubC(lt, dliRefusalPhrases).cast("int").as("refusal"),
-      // same empty-doc guard as docFeats: Python len("".split()) == 0
-      when(length(trim(col("text"))) === 0, lit(0))
-        .otherwise(size(split(trim(col("text")), "\\s+"))).cast("double").as("n_split_words"),
-      graft.functions.MarkerExprs.word_count(lt).as("n_re_words"),
-      col("text").rlike(mdHeaderRe).cast("int").as("has_md"),
-      col("text").rlike(bulletRe).cast("int").as("has_list"),
-      col("text").contains("```").cast("int").as("has_code"),
-      graft.functions.MarkerExprs.marker_total(lt, dliHedging).as("hedge_cnt"),
-      graft.functions.MarkerExprs.marker_total(lt, dliCertainty).as("cert_cnt"))
-    val base = perDoc.groupBy("source").agg(
-      avg("refusal").as("refusal_rate"),
-      avg("n_split_words").as("avg_length"),
-      avg("has_md").as("markdown_rate"),
-      avg("has_list").as("list_rate"),
-      avg("has_code").as("code_block_rate"),
-      sum("hedge_cnt").as("hedge_total"),
-      sum("cert_cnt").as("cert_total"),
-      sum("n_re_words").as("word_total"))
-    val vocab = docs
-      .select(col("source"),
-        explode(graft.functions.MarkerExprs.word_tokens(lower(col("text")))).as("w"))
-      .groupBy("source")
-      .agg(countDistinct("w").as("n_vocab"))
-    base.join(vocab, Seq("source"))
-      .select(
-        col("source"),
-        col("refusal_rate"),
-        col("avg_length"),
-        (col("n_vocab") / greatest(col("word_total"), lit(1)).cast("double")).as("vocab_diversity"),
-        col("markdown_rate"), col("list_rate"), col("code_block_rate"),
-        (col("hedge_total") / greatest(col("word_total"), lit(1)).cast("double")).as("hedging_rate"),
-        (col("cert_total") / greatest(col("word_total"), lit(1)).cast("double")).as("certainty_rate"))
+    Seq(
+      anySubC(lt, dliRefusalPhrases).cast("int").as("dli_refusal"),
+      word_count(lt).as("dli_words"),
+      marker_total(lt, dliHedging).as("dli_hedge"),
+      marker_total(lt, dliCertainty).as("dli_cert"))
   }
+
+  private def dliAggs: Seq[Column] = Seq(
+    avg("dli_refusal").as("refusal_rate"),
+    sum("dli_hedge").as("hedge_total"),
+    sum("dli_cert").as("cert_total"),
+    sum("dli_words").as("word_total"))
+
+  /** The signature over the per-model sums and means; null without a
+    * word token (no `n_vocab`).
+    */
+  private def dliSigCols: Seq[Column] = {
+    val words = greatest(col("word_total"), lit(1)).cast("double")
+    Seq(
+      col("refusal_rate"),
+      col("avg_length_words").as("avg_length"),
+      (col("n_vocab") / words).as("vocab_diversity"),
+      col("ratio_has_markdown_headers").as("markdown_rate"),
+      col("ratio_has_bullet_points").as("list_rate"),
+      col("ratio_has_code_blocks").as("code_block_rate"),
+      (col("hedge_total") / words).as("hedging_rate"),
+      (col("cert_total") / words).as("certainty_rate"))
+  }
+
+  /** The sources with a word token, as the oracle's inner join. */
+  private def dliSignatureOf(models: DataFrame): DataFrame =
+    models.filter(col("n_vocab").isNotNull).select(col("source") +: dliFeatureNames.map(col): _*)
+
+  /** Signature over any (doc_id, source, text) frame (golden spec). */
+  private[graft] def dliSigOf(docs: DataFrame): DataFrame =
+    dliSignatureOf(modelsOf(projectionOf(docs)))
 
   private val dliSigSql: String = {
     val lt = "lower(text)"
@@ -323,7 +292,7 @@ object Audit {
        |  ${dliFeatureNames.map(c => s"round(1e-9 + $c, 6) AS $c").mkString(",\n  ")}
        |FROM ($dliSigSql)
        |ORDER BY source""".stripMargin) { (spark, dir) =>
-    dliSigDf(spark, dir)
+    dliSignatureOf(corpus(spark, dir).models)
       .select(col("source") +: dliFeatureNames.map(c => round(lit(1e-9) + col(c), 6).as(c)): _*)
       .orderBy("source")
   }
@@ -331,55 +300,13 @@ object Audit {
   // ═══════════════ DLI: bigram distribution (top-100) ═══════════════
   // Reference: dli.py:27-33, 65-73
 
-  /** Unrounded per-model top-100 bigram distribution (Spark side).
-    * Bigrams are formed by the native WordBigramsExpr in the scan
-    * stage (one map pass) — the composable alternatives either
-    * shuffle+sort every word in the corpus through a per-doc lead()
-    * window, or (transform-with-index lambda) re-inline the
-    * regexp_extract_all into every element access.
-    *
-    * Top-100 ties break by FIRST OCCURRENCE (smallest doc_id, then
-    * position), matching Python's insertion-ordered Counter
-    * .most_common (dli.py:66-73): sorted() is stable, so equal counts
-    * keep the order bigrams were first seen scanning responses in
-    * doc order. Encoded as one ordinal doc_id·2²⁰ + pos (docs are
-    * response texts, far under 2²⁰ words).
-    */
-  private def dliBigramDf(spark: SparkSession, dir: String): DataFrame =
-    dliBigramsOf(Tables.documents(spark, dir))
+  private def bigramRowsOf(models: DataFrame): DataFrame =
+    models.select(col("source"), explode(col("bigrams")).as("b"))
+      .select("source", "b.bigram", "b.cnt", "b.rank", "b.p")
 
-  /** Top-100 bigram distribution over any frame with
-    * (doc_id, source, text) — reused by the multilingual golden spec.
-    */
-  private[graft] def dliBigramsOf(docs: DataFrame): DataFrame = {
-    // (source, bigram) counts with the first-occurrence ordinal;
-    // cached because the bounded top-100 selection reads it twice
-    // (select + join-back). Fixed-width + short strings — safe for
-    // the columnar cache.
-    val counts = docs
-      .select(col("doc_id"), col("source"),
-        posexplode(graft.functions.MarkerExprs.word_bigrams(lower(col("text")))))
-      .withColumn("ord", col("doc_id") * lit(1048576L) + col("pos"))
-      .withColumn("bigram", col("col"))
-      .groupBy("source", "bigram")
-      .agg(count(lit(1)).as("cnt"), min("ord").as("first_ord"))
-      .cache()
-    // Top-100 per source via the bounded-heap aggregate: a row_number
-    // window would sort a source's ENTIRE bigram vocabulary in one
-    // partition. score = cnt with id = first_ord reproduces the
-    // (cnt DESC, first occurrence ASC) order exactly — the heap
-    // prefers the smaller id on score ties, and first_ord is unique
-    // per bigram (one bigram starts at each word position).
-    val top = counts.groupBy("source")
-      .agg(graft.functions.TopKAgg.topk_by_score(
-        col("cnt").cast("double"), col("first_ord"), 100).as("tk"))
-      .select(col("source"), explode(col("tk")).as("t"))
-      .select(col("source"), col("t.id").as("first_ord"), col("t.rank").as("rank"))
-    counts.join(top, Seq("source", "first_ord"))
-      .withColumn("p", col("cnt") / sum("cnt").over(Window.partitionBy("source")).cast("double"))
-      .select("source", "bigram", "cnt", "rank", "p")
-      .cache()
-  }
+  /** Bigram distribution over any (doc_id, source, text) frame. */
+  private[graft] def dliBigramsOf(docs: DataFrame): DataFrame =
+    bigramRowsOf(modelsOf(projectionOf(docs)))
 
   private val dliBigramSql: String =
     s"""SELECT source, bigram, cnt, rank,
@@ -406,7 +333,7 @@ object Audit {
     s"""SELECT source, bigram, cnt, rank, round(1e-9 + p, 6) AS p
        |FROM ($dliBigramSql)
        |ORDER BY source, rank""".stripMargin) { (spark, dir) =>
-    dliBigramDf(spark, dir)
+    bigramRowsOf(corpus(spark, dir).models)
       .select(col("source"), col("bigram"), col("cnt"), col("rank"), round(lit(1e-9) + col("p"), 6).as("p"))
       .orderBy("source", "rank")
   }
@@ -470,48 +397,123 @@ object Audit {
          |)
          |ORDER BY model_a, model_b""".stripMargin
     }) { (spark, dir) =>
-    val dist = dliBigramDf(spark, dir).select("source", "bigram", "p")
-    val sources = dist.select("source").distinct()
-    val pairs = sources.select(col("source").as("model_a"))
-      .join(sources.select(col("source").as("model_b")), col("model_a") < col("model_b"))
-
-    def klTerm(fromA: Boolean): DataFrame = {
-      val (mainSrc, otherSrc) = if (fromA) ("model_a", "model_b") else ("model_b", "model_a")
-      val main = dist.select(col("source").as("ms"), col("bigram"), col("p").as("pm"))
-      val other = dist.select(col("source").as("os"), col("bigram").as("ob"), col("p").as("po"))
-      pairs
-        .join(main, col(mainSrc) === col("ms"))
-        .join(other, col(otherSrc) === col("os") && col("bigram") === col("ob"), "left")
-        .groupBy("model_a", "model_b")
-        .agg(sum(col("pm") * log(col("pm") / ((col("pm") + coalesce(col("po"), lit(0d))) / 2)))
-          .as(if (fromA) "kl_pm" else "kl_qm"))
-    }
-
-    val js = klTerm(fromA = true).join(klTerm(fromA = false), Seq("model_a", "model_b"))
-      .select(col("model_a"), col("model_b"), ((col("kl_pm") + col("kl_qm")) / 2).as("js"))
-
-    val sig = dliSigDf(spark, dir)
-    val a = sig.select(col("source").as("model_a") +: dliFeatureNames.map(c => col(c).as(s"a_$c")): _*)
-    val b = sig.select(col("source").as("model_b") +: dliFeatureNames.map(c => col(c).as(s"b_$c")): _*)
-    val dot = dliFeatureNames.map(c => col(s"a_$c") * col(s"b_$c")).reduce(_ + _)
-    val na = sqrt(dliFeatureNames.map(c => col(s"a_$c") * col(s"a_$c")).reduce(_ + _))
-    val nb = sqrt(dliFeatureNames.map(c => col(s"b_$c") * col(s"b_$c")).reduce(_ + _))
-    val feat = a.join(b, col("model_a") < col("model_b"))
-      .select(col("model_a"), col("model_b"),
-        when(na * nb === 0d, 0d).otherwise(dot / (na * nb)).as("feat_cos"))
-
-    js.join(feat, Seq("model_a", "model_b"))
-      .withColumn("bigram_sim", lit(1d) - least(col("js") / log(lit(2d)), lit(1d)))
-      .withColumn("similarity", col("bigram_sim") * 0.4 + col("feat_cos") * 0.6)
+    comparedDf(spark, dir)
+      .filter(col("has_dli"))
       .select(
         col("model_a"), col("model_b"),
         round(lit(1e-9) + col("js"), 6).as("js_divergence"),
         round(lit(1e-9) + col("bigram_sim"), 6).as("bigram_sim"),
         round(lit(1e-9) + col("feat_cos"), 6).as("feature_cos"),
-        round(lit(1e-9) + col("similarity"), 6).as("similarity"),
-        (col("similarity") >= 0.80).as("is_derived"),
-        round(lit(1e-9) + least(abs(col("similarity") - 0.80) / 0.2, lit(1d)), 6).as("confidence"))
+        round(lit(1e-9) + col("dli_sim"), 6).as("similarity"),
+        (col("dli_sim") >= 0.80).as("is_derived"),
+        round(lit(1e-9) + least(abs(col("dli_sim") - 0.80) / 0.2, lit(1d)), 6).as("confidence"))
       .orderBy("model_a", "model_b")
+  }
+
+  // ═══════════════ the one pass over the corpus ═══════════════
+
+  /** Every per-document map over a (doc_id, source, text) frame: the
+    * word tokens and bigrams of the lower-cased text, the llmmap
+    * features, the DLI parts and the family scores `fs_<i>`.
+    */
+  private def projectionOf(docs: DataFrame): DataFrame = {
+    val lt = lower(col("text"))
+    Style.withScores(docs.select(Seq(col("doc_id"), col("source"), col("text"),
+      word_tokens(lt).as("words"), word_bigrams(lt).as("bigrams")) ++ featureCols ++ dliDocCols: _*))
+      .drop("text")
+  }
+
+  /** The projection without its token arrays. */
+  private def narrowOf(wide: DataFrame): DataFrame = wide.drop("words", "bigrams")
+
+  /** The exploded token aggregation: per source, the count of every
+    * distinct word and bigram (a word has no space, a bigram one), and
+    * for a bigram the ordinal doc_id·2²⁰ + pos of its first occurrence;
+    * position p of words ++ bigrams is bigram p - size(words).
+    */
+  private def tokensOf(wide: DataFrame): DataFrame = {
+    val nWords = size(col("words"))
+    wide.select(col("doc_id"), col("source"), nWords.as("n_words"),
+        posexplode(concat(col("words"), col("bigrams"))).as(Seq("p", "key")))
+      .groupBy("source", "key")
+      .agg(count(lit(1)).as("cnt"), min(when(col("p") >= col("n_words"),
+        col("doc_id") * lit(1048576L) + col("p") - col("n_words"))).as("first_ord"))
+  }
+
+  /** One row per model: the fingerprint, the DLI signature, `n_vocab`,
+    * the top-100 `bigrams` (rank, bigram, cnt, p) and the family means.
+    * Top-100 ties break by first occurrence, as Python's Counter
+    * .most_common does (dli.py:66-73): the bounded heap (not a window
+    * over a source's whole vocabulary) prefers the smaller first_ord
+    * on ties, skips the words' null ids and carries each bigram along.
+    */
+  private def modelsOf(wide: DataFrame): DataFrame = {
+    val perModel = narrowOf(wide).groupBy("source")
+      .agg(fingerprintAggs.head, fingerprintAggs.tail ++ dliAggs ++ Style.famMeans: _*)
+    val vocab = tokensOf(wide).groupBy("source")
+      .agg(count(when(col("first_ord").isNull, 1)).as("n_vocab"),
+        topk_by_score(col("cnt").cast("double"), col("first_ord"), 100, col("key")).as("tk"))
+      .withColumn("total", aggregate(col("tk"), lit(0d), (acc, t) => acc + t("score")))
+      .select(col("source"), col("n_vocab"), transform(col("tk"), t => struct(t("rank"),
+        t("payload").as("bigram"), t("score").cast("long").as("cnt"),
+        (t("score") / col("total")).as("p"))).as("bigrams"))
+    // both sides are already hash-partitioned by source: join in place
+    perModel.join(vocab.hint("shuffle_hash"), Seq("source"), "left")
+      .select(Seq(col("source")) ++ fpCols.map(col) ++ dliSigCols ++
+        Seq(col("n_vocab"), col("bigrams")) ++ families.indices.map(i => col(s"fm_$i")): _*)
+  }
+
+  /** The per-document projection (no token arrays) and per-model frame. */
+  private[graft] final case class Corpus(docs: DataFrame, models: DataFrame)
+
+  /** The one pass over `documents`, memoized per (session, dir): the
+    * `audit_caches` build. The projection with its token arrays is
+    * cached only while one action builds the two frames (the per-model
+    * aggregation reads the cached narrow part), then released; a loaded
+    * dependent cache survives its source's release.
+    */
+  private[graft] def corpus(spark: SparkSession, dir: String): Corpus = {
+    val Seq(docs, models) = SessionMemo.frames(spark, s"audit.corpus:$dir") {
+      val wide = projectionOf(Tables.documents(spark, dir)).cache()
+      val docs = narrowOf(wide).cache()
+      val models = modelsOf(wide).cache()
+      models.collect()
+      wide.unpersist()
+      Seq(docs, models)
+    }
+    Corpus(docs, models)
+  }
+
+  /** Every model pair (model_a < model_b): the unrounded llmmap cosine
+    * `fp_sim`, the DLI parts and `has_dli` (both have bigrams).
+    */
+  private[operators] def comparedDf(spark: SparkSession, dir: String): DataFrame = {
+    val models = corpus(spark, dir).models
+    val cols = fpCols ++ dliFeatureNames :+ "bigrams"
+    def side(s: String): DataFrame = models.select(col("source").as(s"model_$s") +:
+      cols.map(c => col(c).as(s"${s}_$c")) :+
+      map_from_arrays(col("bigrams.bigram"), col("bigrams.p")).as(s"${s}_p"): _*)
+    def cosine(names: Seq[String], v: (String, String) => Column): Column = {
+      def norm(side: String) = sqrt(names.map(c => { val n = v(side, c); n * n }).reduce(_ + _))
+      val dot = names.map(c => v("a", c) * v("b", c)).reduce(_ + _)
+      when(norm("a") * norm("b") === 0d, 0d).otherwise(dot / (norm("a") * norm("b")))
+    }
+    // Σ over one side's bigrams of p·ln(p / m), m = (p + q) / 2, with q
+    // the other side's p of the same bigram (0 when it has none)
+    def kl(from: String, to: String): Column =
+      aggregate(col(s"${from}_bigrams"), lit(0d), (acc, e) => {
+        val q = coalesce(element_at(col(s"${to}_p"), e("bigram")), lit(0d))
+        acc + e("p") * log(e("p") / ((e("p") + q) / 2))
+      })
+    side("a").join(side("b"), col("model_a") < col("model_b"))
+      .select(
+        col("model_a"), col("model_b"),
+        cosine(fpCols, (side, c) => normC(col(s"${side}_$c"), c)).as("fp_sim"),
+        ((kl("a", "b") + kl("b", "a")) / 2).as("js"),
+        cosine(dliFeatureNames, (side, c) => col(s"${side}_$c")).as("feat_cos"),
+        (size(col("a_bigrams")) > 0 && size(col("b_bigrams")) > 0).as("has_dli"))
+      .withColumn("bigram_sim", lit(1d) - least(col("js") / log(lit(2d)), lit(1d)))
+      .withColumn("dli_sim", col("bigram_sim") * 0.4 + col("feat_cos") * 0.6)
   }
 
   val all: Seq[Q] = Seq(features, fingerprint, fpCompare, dliSignature, dliBigrams, dliCompare)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, SessionMemo, Tables}
 import graft.functions.HashExprs.dot_product
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,68 +25,70 @@ object Reef {
 
   val MaxN = 128
 
-  /** Unordered CKA pair frame; |labels|² fixed-width rows — cached so
-    * the compare query doesn't recompute the Gram pipeline.
+  /** Unordered CKA pair frame; |labels|² fixed-width rows — memoized
+    * and cached, with the centered Gram frame it reads.
     */
-  private def ckaDf(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    // Bounded sample selection: the MaxN smallest vec_ids per label via
-    // the bounded-heap top-k aggregate (score = -vec_id, so rank 1 =
-    // smallest). A row_number window here would shuffle AND fully sort
-    // every embedding per label just to keep 128 — the aggregate
-    // carries ≤ MaxN entries per partition and merges map-side, so
-    // shuffle traffic is O(|labels|·MaxN) regardless of corpus size.
-    val sel = emb.groupBy("label")
-      .agg(graft.functions.TopKAgg.topk_by_score(
-        negate(col("vec_id").cast("double")), col("vec_id"), MaxN).as("tk"))
-      .select(col("label"), explode(col("tk")).as("t"))
-      .select(col("label"), col("t.id").as("vec_id"), col("t.rank").as("rn"))
-    // Rank alignment needs every label truncated to the same n =
-    // least(MaxN, min label count); counting the selected rows gives
-    // min(count, MaxN) per label, so min over labels is identical.
-    val n = sel.groupBy("label").agg(count(lit(1)).as("cnt"))
-      .agg(least(lit(MaxN), min("cnt")).as("n"))
-    // The selected (label, vec_id, rn) frame is ≤ |labels|·MaxN rows —
-    // broadcast it so the corpus never shuffles.
-    val ranked = emb.join(broadcast(sel), Seq("label", "vec_id"))
-      .crossJoin(broadcast(n)).filter(col("rn") <= col("n"))
-      .select(col("label"), col("rn"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
+  private def ckaDf(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.frames(spark, s"reef.cka:$dir") {
+      val emb = Tables.embeddings(spark, dir)
+      // Bounded sample selection: the MaxN smallest vec_ids per label via
+      // the bounded-heap top-k aggregate (score = -vec_id, so rank 1 =
+      // smallest). A row_number window here would shuffle AND fully sort
+      // every embedding per label just to keep 128 — the aggregate
+      // carries ≤ MaxN entries per partition and merges map-side, so
+      // shuffle traffic is O(|labels|·MaxN) regardless of corpus size.
+      val sel = emb.groupBy("label")
+        .agg(graft.functions.TopKAgg.topk_by_score(
+          negate(col("vec_id").cast("double")), col("vec_id"), MaxN).as("tk"))
+        .select(col("label"), explode(col("tk")).as("t"))
+        .select(col("label"), col("t.id").as("vec_id"), col("t.rank").as("rn"))
+      // Rank alignment needs every label truncated to the same n =
+      // least(MaxN, min label count); counting the selected rows gives
+      // min(count, MaxN) per label, so min over labels is identical.
+      val n = sel.groupBy("label").agg(count(lit(1)).as("cnt"))
+        .agg(least(lit(MaxN), min("cnt")).as("n"))
+      // The selected (label, vec_id, rn) frame is ≤ |labels|·MaxN rows —
+      // broadcast it so the corpus never shuffles.
+      val ranked = emb.join(broadcast(sel), Seq("label", "vec_id"))
+        .crossJoin(broadcast(n)).filter(col("rn") <= col("n"))
+        .select(col("label"), col("rn"),
+          transform(col("embedding"), x => x.cast("double")).as("e"))
 
-    // raw Gram entries per group: g(label, r, s) = x_r · x_s
-    val a = ranked.select(col("label"), col("rn").as("r"), col("e").as("ea"))
-    val b = ranked.select(col("label"), col("rn").as("s"), col("e").as("eb"))
-    val gram = a.join(b, Seq("label"))
-      .select(col("label"), col("r"), col("s"), dot_product(col("ea"), col("eb")).as("g"))
+      // raw Gram entries per group: g(label, r, s) = x_r · x_s
+      val a = ranked.select(col("label"), col("rn").as("r"), col("e").as("ea"))
+      val b = ranked.select(col("label"), col("rn").as("s"), col("e").as("eb"))
+      val gram = a.join(b, Seq("label"))
+        .select(col("label"), col("r"), col("s"), dot_product(col("ea"), col("eb")).as("g"))
 
-    // double-center: g̃ = g - mean_r - mean_s + grand_mean
-    val wr = Window.partitionBy("label", "r")
-    val ws = Window.partitionBy("label", "s")
-    val wl = Window.partitionBy("label")
-    val centered = gram
-      .withColumn("gc",
-        col("g") - avg("g").over(wr) - avg("g").over(ws) + avg("g").over(wl))
-      .select("label", "r", "s", "gc")
-      // barrier: the three window passes would otherwise replay for
-      // both sides of the pair join below
-      .cache()
+      // double-center: g̃ = g - mean_r - mean_s + grand_mean
+      val wr = Window.partitionBy("label", "r")
+      val ws = Window.partitionBy("label", "s")
+      val wl = Window.partitionBy("label")
+      val centered = gram
+        .withColumn("gc",
+          col("g") - avg("g").over(wr) - avg("g").over(ws) + avg("g").over(wl))
+        .select("label", "r", "s", "gc")
+        // barrier: the three window passes would otherwise replay for
+        // both sides of the pair join below
+        .cache()
 
-    val selfg = centered.groupBy("label").agg(sum(col("gc") * col("gc")).as("hsic_self"))
-    val ga = centered.select(col("label").as("la"), col("r"), col("s"), col("gc").as("gca"))
-    val gb = centered.select(col("label").as("lb"), col("r"), col("s"), col("gc").as("gcb"))
-    val crossg = ga.join(gb, col("la") < col("lb") && ga("r") === gb("r") && ga("s") === gb("s"))
-      .groupBy("la", "lb").agg(sum(col("gca") * col("gcb")).as("hsic_xy"))
+      val selfg = centered.groupBy("label").agg(sum(col("gc") * col("gc")).as("hsic_self"))
+      val ga = centered.select(col("label").as("la"), col("r"), col("s"), col("gc").as("gca"))
+      val gb = centered.select(col("label").as("lb"), col("r"), col("s"), col("gc").as("gcb"))
+      val crossg = ga.join(gb, col("la") < col("lb") && ga("r") === gb("r") && ga("s") === gb("s"))
+        .groupBy("la", "lb").agg(sum(col("gca") * col("gcb")).as("hsic_xy"))
 
-    crossg
-      .join(selfg.select(col("label").as("la"), col("hsic_self").as("ha")), Seq("la"))
-      .join(selfg.select(col("label").as("lb"), col("hsic_self").as("hb")), Seq("lb"))
-      .select(
-        col("la").cast("long").as("label_a"),
-        col("lb").cast("long").as("label_b"),
-        round(lit(1e-9) + when(sqrt(col("ha") * col("hb")) < 1e-10, 0d)
-          .otherwise(col("hsic_xy") / sqrt(col("ha") * col("hb"))), 6).as("cka"))
-      .cache()
-  }
+      val pairs = crossg
+        .join(selfg.select(col("label").as("la"), col("hsic_self").as("ha")), Seq("la"))
+        .join(selfg.select(col("label").as("lb"), col("hsic_self").as("hb")), Seq("lb"))
+        .select(
+          col("la").cast("long").as("label_a"),
+          col("lb").cast("long").as("label_b"),
+          round(lit(1e-9) + when(sqrt(col("ha") * col("hb")) < 1e-10, 0d)
+            .otherwise(col("hsic_xy") / sqrt(col("ha") * col("hb"))), 6).as("cka"))
+        .cache()
+      Seq(centered, pairs)
+    }.last
 
   private val ckaBodySql: String =
     s"""WITH ranked AS (

@@ -28,8 +28,8 @@ object ScalePrim {
     * pick ≈ sqrt(rows per group) so both passes stay balanced.
     *
     * Two escalations keep the shape scale-safe end to end, both
-    * switched by COUNTING the cached per-bucket summary (the data
-    * scan behind it still runs exactly once; both sides of each
+    * switched by COUNTING the per-bucket summary in one eager job (not
+    * persisted, so nothing outlives the query; both sides of each
     * switch are exercised in ScalePrimSpec):
     *
     *  - offsets JOIN: up to `maxBroadcastOffsetRows` the offsets are
@@ -67,7 +67,6 @@ object ScalePrim {
       .withColumn(bk, floor(col(ord) / bucketSize))
     val bsums = bucketed.groupBy(col(part), col(bk))
       .agg(sum(v).as(bsum))
-      .cache()
     val nOff = bsums.count()
     val offsets =
       if (nOff > maxWindowRows && nOff < prevRows) {

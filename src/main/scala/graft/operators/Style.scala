@@ -1,10 +1,9 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.Q
 import graft.functions.AuditDefs._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Stylistic-signature detection: score every text against the 12
   * model-family signatures, detect the source family per text,
@@ -15,7 +14,10 @@ import org.apache.spark.sql.expressions.Window
   *
   * Scale: scoring is map-only (the signature set is a compile-time
   * constant folded into the expression tree — nothing to broadcast,
-  * nothing to shuffle); detect/fingerprint add one narrow aggregation.
+  * nothing to shuffle). The corpus queries serve from the audit
+  * family's one pass ([[Audit.corpus]]): the 12 scores are columns of
+  * its per-document projection and their per-model means columns of
+  * its per-model frame.
   */
 object Style {
 
@@ -24,58 +26,70 @@ object Style {
   private val cjkLo = '一'
   private val cjkHi = '鿿'
 
-  /** Per-text base features + per-family scores over any frame with a
-    * `text` column, long format, with the family's declaration index
-    * for Python-dict-order tie-breaking. Scores are rounded to 4 dp
-    * (style.py:300). Reused by the corpus queries (keys doc_id/source)
-    * and the built-in benchmark (keys sample_id/label).
+  /** `df` with the 12 family scores `fs_<i>` of its `text` column,
+    * rounded to 4 dp (style.py:300) — one definition for the corpus
+    * pass, the stream and the built-in benchmark.
     */
-  private[operators] def scoresOf(docs: DataFrame, keyCols: Seq[String]): DataFrame = {
+  private[operators] def withScores(df: DataFrame): DataFrame = {
     val t = col("text")
     val lt = lower(t)
     val tWords = greatest(size(split(trim(lt), "\\s+")), lit(1))
     val cjk = length(regexp_replace(t, s"[^$cjkLo-$cjkHi]", ""))
     val textLang = when(cjk >= 10, "zh")
       .otherwise(when(cjk / greatest(length(t), lit(1)).cast("double") > 0.15, "zh").otherwise("en"))
-    val hasMd = t.rlike(mdHeaderRe)
-    val hasNum = t.rlike(numberedRe)
-    val hasCode = t.contains("```")
-    val verbose = tWords > 150
-    val refusalHint = anySubC(lt, refusalHintKeywords)
+    val inputs = Seq("lt" -> lt, "text_lang" -> textLang, "has_md" -> t.rlike(mdHeaderRe),
+      "has_num" -> t.rlike(numberedRe), "has_code" -> t.contains("```"),
+      "is_verbose" -> (tWords > 150), "refusal_hint" -> anySubC(lt, refusalHintKeywords))
+    df.select(col("*") +: inputs.map { case (n, c) => c.as(n) }: _*)
+      .select(col("*") +: families.zipWithIndex.map { case (f, i) => famScore(f).as(s"fs_$i") }: _*)
+      .drop(inputs.map(_._1): _*)
+  }
 
-    val base = docs.select(
-      keyCols.map(col) ++ Seq(lt.as("lt"),
-        textLang.as("text_lang"), hasMd.as("has_md"), hasNum.as("has_num"),
-        hasCode.as("has_code"), verbose.as("is_verbose"), refusalHint.as("refusal_hint")): _*)
+  private def famScore(f: FamilySig): Column = {
+    val langTerm =
+      if (f.lang == "both") when(lit(true), 0.10).otherwise(0d)
+      else when(col("text_lang") === f.lang, 0.20).otherwise(0d)
+    val hits = graft.functions.MarkerExprs.contains_count(col("lt"), f.markers)
+    val markerTerm = least(hits / lit(3).cast("double"), lit(1d)) * 0.50
+    val structPairs = Seq(
+      col("has_md") -> f.tendsMarkdown, col("has_num") -> f.tendsNumbered,
+      col("has_code") -> f.tendsCode, col("is_verbose") -> f.verbose)
+    val structTerm = structPairs.map { case (has, tends) =>
+      if (tends) when(has, 0.05).otherwise(0d) else when(has, -0.02).otherwise(0d)
+    }.reduce(_ + _)
+    val rhits = graft.functions.MarkerExprs.contains_count(col("lt"), f.refusalPatterns)
+    val refusalTerm = when(col("refusal_hint"),
+      rhits / lit(f.refusalPatterns.size).cast("double") * 0.10).otherwise(0d)
+    round(lit(1e-9) + langTerm + markerTerm + structTerm + refusalTerm, 4)
+  }
 
-    def famScore(f: FamilySig): Column = {
-      val langTerm =
-        if (f.lang == "both") when(lit(true), 0.10).otherwise(0d)
-        else when(col("text_lang") === f.lang, 0.20).otherwise(0d)
-      val hits = graft.functions.MarkerExprs.contains_count(col("lt"), f.markers)
-      val markerTerm = least(hits / lit(3).cast("double"), lit(1d)) * 0.50
-      val structPairs = Seq(
-        col("has_md") -> f.tendsMarkdown, col("has_num") -> f.tendsNumbered,
-        col("has_code") -> f.tendsCode, col("is_verbose") -> f.verbose)
-      val structTerm = structPairs.map { case (has, tends) =>
-        if (tends) when(has, 0.05).otherwise(0d) else when(has, -0.02).otherwise(0d)
-      }.reduce(_ + _)
-      val rhits = graft.functions.MarkerExprs.contains_count(col("lt"), f.refusalPatterns)
-      val refusalTerm = when(col("refusal_hint"),
-        rhits / lit(f.refusalPatterns.size).cast("double") * 0.10).otherwise(0d)
-      round(lit(1e-9) + langTerm + markerTerm + structTerm + refusalTerm, 4)
-    }
+  /** The per-family mean scores `fm_<i>` (a stream keeps them incrementally). */
+  private[operators] def famMeans: Seq[Column] =
+    families.indices.map(i => avg(s"fs_$i").as(s"fm_$i"))
 
+  /** One row per key and family of `value(i)`, with the family's index. */
+  private def perFamily(wide: DataFrame, keyCols: Seq[String], value: Int => Column): DataFrame = {
     val entries = families.zipWithIndex.map { case (f, i) =>
-      struct(lit(f.name).as("family"), lit(i).as("fidx"), famScore(f).as("score"))
+      struct(lit(f.name).as("family"), lit(i).as("fidx"), value(i).as("score"))
     }
-    base.select(keyCols.map(col) :+ explode(array(entries: _*)).as("e"): _*)
+    wide.select(keyCols.map(col) :+ explode(array(entries: _*)).as("e"): _*)
       .select(keyCols.map(col) ++ Seq(
         col("e.family").as("family"), col("e.fidx").as("fidx"), col("e.score").as("score")): _*)
   }
 
-  private def scoresDf(spark: SparkSession, dir: String): DataFrame =
-    scoresOf(Tables.documents(spark, dir), Seq("doc_id", "source")).cache()
+  /** Long-format (keys, family, fidx, score) over any `text` frame. */
+  private[operators] def scoresOf(docs: DataFrame, keyCols: Seq[String]): DataFrame =
+    perFamily(withScores(docs), keyCols, i => col(s"fs_$i"))
+
+  /** The best family as struct(score, nfidx, family) of `value(i)`: ties
+    * to the lowest index (`ORDER BY score DESC, fidx`).
+    */
+  private def bestFamily(value: Int => Column): Column =
+    greatest(families.zipWithIndex.map { case (f, i) =>
+      struct(value(i).as("score"), lit(-i).as("nfidx"), lit(f.name).as("family"))
+    }: _*)
+
+  private val docBest: Column = bestFamily(i => col(s"fs_$i"))
 
   /** Matching SQL: one CTE of base features, then a UNION ALL per
     * family, over any relation with a `text` column.
@@ -150,10 +164,10 @@ object Style {
     // `PARTITION BY doc_id`: source rides in the max-struct payload,
     // so a doc_id duplicated across sources can't yield two rows here
     // where the oracle yields one.
-    val best = scoresDf(spark, dir)
+    val best = Audit.corpus(spark, dir).docs
+      .select(col("doc_id"), col("source"), docBest.as("b"))
       .groupBy("doc_id")
-      .agg(max(struct(col("score"), (-col("fidx")).as("nfidx"),
-        col("family"), col("source"))).as("m"))
+      .agg(max(struct(col("b.score"), col("b.nfidx"), col("b.family"), col("source"))).as("m"))
       .select(col("doc_id"), col("m.source").as("source"), col("m.family").as("family"))
 
     // probe_idx = row_number over (PARTITION BY source ORDER BY doc_id)
@@ -161,29 +175,9 @@ object Style {
     // an exclusive prefix COUNT plus one, via the shared two-pass
     // primitive (bounded in-bucket windows + broadcast bucket offsets;
     // order-identical to the single-window formulation).
-    // CACHED like scoresDf: every consumer self-joins this frame on
-    // probe_idx (both probe-consistency queries, ma_report's dist and
-    // pc legs, ma_report_full's probe rows), so one action otherwise
-    // re-runs the argmax + prefix-sum pipeline up to FOUR times — the
-    // frame is |docs| narrow rows, the same cache class as scoresDf.
     ScalePrim.exclusivePrefixSum(best, "source", "doc_id", lit(1L), probeBucketSize)
       .withColumn("probe_idx", (col("prefix") + 1).cast("int"))
       .select("source", "family", "probe_idx")
-      .cache()
-  }
-
-  /** Bench-build warmer for the two shared cached frames the whole
-    * report family self-joins (detectedDf, auditDf — and their
-    * fingerprint/DLI upstreams transitively): populating them is a
-    * one-time cost that otherwise bills to whichever family query the
-    * bench happens to run first (ma_audit, 23 s at the 100× leg),
-    * making that entry useless for regression tracking. Declared in
-    * Bench `builds` — this SHIFTS the time into the visible build
-    * field, it does not save it.
-    */
-  private[graft] def warmSharedCaches(spark: SparkSession, dir: String): Unit = {
-    detectedDf(spark, dir).count()
-    auditDf(spark, dir).count()
   }
 
   // ═══════════════ queries ═══════════════
@@ -192,7 +186,8 @@ object Style {
     "ma_style_scores",
     s"""SELECT doc_id, family, score FROM ($scoresSql)
        |ORDER BY doc_id, family""".stripMargin) { (spark, dir) =>
-    scoresDf(spark, dir).select("doc_id", "family", "score").orderBy("doc_id", "family")
+    perFamily(Audit.corpus(spark, dir).docs, Seq("doc_id"), i => col(s"fs_$i"))
+      .select("doc_id", "family", "score").orderBy("doc_id", "family")
   }
 
   val styleDetect = Q(
@@ -206,28 +201,23 @@ object Style {
        |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
     // argmax via partial-aggregated struct-max (ties → lowest fidx),
     // not a per-doc row_number window — map-side combine, no sort.
-    scoresDf(spark, dir)
+    Audit.corpus(spark, dir).docs
       .groupBy("doc_id")
-      .agg(max(struct(col("score"), (-col("fidx")).as("nfidx"), col("family"))).as("m"))
+      .agg(max(docBest).as("m"))
       .select(col("doc_id"), col("m.family").as("predicted_model"), col("m.score").as("confidence"))
       .orderBy("doc_id")
   }
 
-  /** The per-(source, family) mean-score aggregation — ONE definition
-    * shared by the batch ma_style_fingerprint and
-    * Streaming.styleFingerprint so they cannot drift. The mean is
-    * algebraic, so on a stream Spark maintains it incrementally with
-    * (sum, count) state per source × family.
+  /** (source, family, avg_score) rows of the `fm_<i>` means, shared by
+    * ma_style_fingerprint and Streaming.styleFingerprint.
     */
-  private def styleFpAgg(scores: DataFrame): DataFrame =
-    scores.groupBy("source", "family")
-      .agg(round(lit(1e-9) + avg("score") + 1e-9, 4).as("avg_score"))
+  private def styleFpOf(means: DataFrame): DataFrame =
+    perFamily(means, Seq("source"), i => round(lit(1e-9) + col(s"fm_$i") + 1e-9, 4))
+      .select(col("source"), col("family"), col("score").as("avg_score"))
 
-  /** Streaming.styleFingerprint's entry: map-only scoring + the
-    * shared aggregation over any (source, text) frame.
-    */
+  /** Streaming.styleFingerprint's entry, over any (source, text) frame. */
   private[graft] def styleFingerprintOf(docs: DataFrame): DataFrame =
-    styleFpAgg(scoresOf(docs, Seq("source")))
+    styleFpOf(withScores(docs).groupBy("source").agg(famMeans.head, famMeans.tail: _*))
 
   val styleFingerprint = Q(
     "ma_style_fingerprint",
@@ -235,7 +225,7 @@ object Style {
        |FROM ($scoresSql)
        |GROUP BY source, family
        |ORDER BY source, family""".stripMargin) { (spark, dir) =>
-    styleFpAgg(scoresDf(spark, dir)).orderBy("source", "family")
+    styleFpOf(Audit.corpus(spark, dir).models).orderBy("source", "family")
   }
 
   /** Identity verification: best-matching family per source vs the
@@ -261,48 +251,35 @@ object Style {
          |)
          |ORDER BY source""".stripMargin
     }) { (spark, dir) =>
-    val fp = scoresDf(spark, dir)
-      .groupBy("source", "family", "fidx")
-      .agg(round(lit(1e-9) + avg("score") + 1e-9, 4).as("avg_score"))
-    val w = Window.partitionBy("source").orderBy(col("avg_score").desc, col("fidx"))
+    val best = bestFamily(i => round(lit(1e-9) + col(s"fm_$i") + 1e-9, 4))
     val claimed = families.foldRight(lit("unknown")) { (f, acc) =>
       when(lower(col("source")).contains(f.name), f.name).otherwise(acc)
     }
-    fp.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    Audit.corpus(spark, dir).models
       .select(
         col("source"), claimed.as("claimed_family"),
-        col("family").as("best_match"), col("avg_score").as("best_score"))
+        best.getField("family").as("best_match"), best.getField("score").as("best_score"))
       .withColumn("verified", col("claimed_family") === col("best_match"))
       .orderBy("source")
   }
 
   /** Combined audit verdict per model pair: majority vote over the
-    * llmmap and DLI comparisons (engine.py:294-306).
-    */
-  /** Cached audit verdict frame — |models|² fixed-width rows consumed
-    * by SIX queries (ma_audit and the whole report family); the cache
-    * means the fpCompare/dliCompare join pipeline executes once per
-    * session instead of once per consumer action.
+    * llmmap and DLI comparisons (engine.py:294-306). Shared by ma_audit
+    * and the report family.
     */
   private[operators] def auditDf(spark: SparkSession, dir: String): DataFrame = {
-    val llm = Audit.fpCompare.fn(spark, dir)
-      .select(col("model_a"), col("model_b"),
-        col("similarity").as("llmmap_similarity"), col("is_derived").as("llm_derived"))
-    val dli = Audit.dliCompare.fn(spark, dir)
-      .select(col("model_a"), col("model_b"),
-        col("similarity").as("dli_similarity"), col("is_derived").as("dli_derived"))
-    val avgSim = (col("llmmap_similarity") + col("dli_similarity")) / 2
-    llm.join(dli, Seq("model_a", "model_b"))
+    val llm = round(lit(1e-9) + col("fp_sim"), 6)
+    val dli = round(lit(1e-9) + col("dli_sim"), 6)
+    val avgSim = (llm + dli) / 2
+    Audit.comparedDf(spark, dir)
+      .filter(col("has_dli"))
       .select(
-        col("model_a"), col("model_b"),
-        col("llmmap_similarity"), col("dli_similarity"),
+        col("model_a"), col("model_b"), llm.as("llmmap_similarity"), dli.as("dli_similarity"),
         round(lit(1e-9) + avgSim, 7).as("avg_similarity"),
-        when(col("llm_derived").cast("int") + col("dli_derived").cast("int") > 1, "likely_derived")
+        when(col("fp_sim") >= 0.85 && col("dli_sim") >= 0.80, "likely_derived")
           .when(avgSim < 0.5, "independent")
           .otherwise("inconclusive").as("verdict"),
         round(lit(1e-9) + least(abs(avgSim - 0.85) / 0.15, lit(1d)), 6).as("confidence"))
-      .cache()
   }
 
   val audit = Q(
@@ -339,9 +316,9 @@ object Style {
        |)
        |GROUP BY source, predicted_model
        |ORDER BY source, predicted_model""".stripMargin) { (spark, dir) =>
-    scoresDf(spark, dir)
+    Audit.corpus(spark, dir).docs
       .groupBy("doc_id", "source")
-      .agg(max(struct(col("score"), (-col("fidx")).as("nfidx"), col("family"))).as("m"))
+      .agg(max(docBest).as("m"))
       .groupBy(col("source"), col("m.family").as("predicted_model"))
       .agg(count(lit(1)).as("n"))
       .orderBy("source", "predicted_model")

@@ -119,8 +119,8 @@ object Streaming {
     * of the stream equals the batch ma_fingerprint over the same
     * prefix — cross-validated in StreamingSpec against a replayed
     * corpus. Feature extraction and the aggregation are THE SAME
-    * definitions as the batch query (Audit.docFeatsOf /
-    * fingerprintAgg), so batch and stream cannot drift. Run with
+    * definitions as the batch query (Audit.featureCols /
+    * fingerprintAggs), so batch and stream cannot drift. Run with
     * outputMode complete (or update for deltas); state is bounded by
     * |sources| × |features|, independent of stream length.
     */

@@ -1,0 +1,82 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.StorageProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The audit family served from its one memoized pass over the
+  * corpus: what a cold audit costs in jobs, and what the memo leaves
+  * behind once it is evicted.
+  */
+class AuditMemoSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  /** Jobs of one cold ma_audit + ma_verify at sf0.001, measured at 16
+    * on two runs: 9 for the corpus pass (the parquet footer read, the
+    * round-robin repartition, building the projection, its narrow part
+    * and the per-model frame, the token, per-model and top-100
+    * shuffles, the collect), 4 for ma_audit (the pair broadcast, the
+    * sort's sample and shuffle, the result) and 3 for ma_verify. Before
+    * the one pass the same two queries ran 54 jobs. An upper bound: an
+    * added probe or re-read fails, while AQE may still fold a job away.
+    */
+  private val MaxColdAuditJobs = 16
+
+  private class GroupJobs(group: String) extends SparkListener {
+    val jobs = new AtomicInteger
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+        jobs.incrementAndGet()
+  }
+
+  private def coldAuditJobs(): Int = {
+    SessionMemo.evict(spark)
+    val group = "cold-audit"
+    val count = new GroupJobs(group)
+    val sc = spark.sparkContext
+    sc.addSparkListener(count)
+    sc.setJobGroup(group, "cold ma_audit + ma_verify")
+    try Seq("ma_audit", "ma_verify").foreach(q => SparkEntry.queries(q)(spark, sf).collect())
+    finally {
+      sc.clearJobGroup()
+      StorageProbe.drainListenerBus()
+      sc.removeSparkListener(count)
+    }
+    count.jobs.get
+  }
+
+  test("a cold ma_audit + ma_verify runs a bounded number of jobs") {
+    val runs = Seq(coldAuditJobs(), coldAuditJobs())
+    assert(runs.forall(_ <= MaxColdAuditJobs),
+      s"cold ma_audit + ma_verify ran ${runs.mkString(" and ")} jobs, at most $MaxColdAuditJobs expected")
+  }
+
+  test("SessionMemo.evict frees every block that serving the audit family made") {
+    // a private copy of the corpus, so no frame another spec cached
+    // for the shared test dir can stand in for this run's
+    val dir = Files.createTempDirectory("graft-audit-memo")
+    val tables = Seq("documents", "embeddings").map(t => dir.resolve(s"$t.parquet"))
+    tables.foreach(t => Files.copy(Paths.get(sf).resolve(t.getFileName), t))
+    try {
+      val before = StorageProbe.rddsWithBlocks()
+      for (q <- operators.Audit.all ++ operators.Style.all ++ operators.Reef.all)
+        q.fn(spark, dir.toString).collect()
+      assert((StorageProbe.rddsWithBlocks() -- before).nonEmpty, "the family cached nothing")
+      SessionMemo.evict(spark)
+      // unpersist(blocking = false) is asynchronous: poll, do not GC
+      val deadline = System.nanoTime() + 5L * 1000000000L
+      var held = StorageProbe.rddsWithBlocks() -- before
+      while (held.nonEmpty && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        held = StorageProbe.rddsWithBlocks() -- before
+      }
+      assert(held.isEmpty, s"${held.size} RDDs still hold blocks after SessionMemo.evict")
+    } finally {
+      tables.foreach(Files.deleteIfExists)
+      Files.deleteIfExists(dir)
+    }
+  }
+}

@@ -131,6 +131,37 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("row_number"), "no full vocabulary sort per source")
   }
 
+  test("the audit family's pass scans documents once; its aggregations read the cached projection") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every node, looking into adaptive plans and query stages and, if
+    // asked, into the plan of each cached relation read (once each)
+    val seen = scala.collection.mutable.Set[AnyRef]()
+    def nodes(p: SparkPlan, intoCaches: Boolean): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, intoCaches)
+      case s: QueryStageExec => nodes(s.plan, intoCaches)
+      case m: InMemoryTableScanExec if intoCaches =>
+        if (seen.add(m.relation.cacheBuilder)) nodes(m.relation.cachedPlan, intoCaches) else Nil
+      case _ => p.children.flatMap(nodes(_, intoCaches))
+    })
+    val models = operators.Audit.corpus(spark, sf).models
+    val build = nodes(models.queryExecution.executedPlan, intoCaches = false).collectFirst {
+      case m: InMemoryTableScanExec if m.relation.output.exists(_.name == "n_vocab") =>
+        m.relation.cachedPlan
+    }.getOrElse(fail("the per-model frame is not cached"))
+    val own = nodes(build, intoCaches = false)
+    assert(own.exists(_.isInstanceOf[BaseAggregateExec]))
+    assert(!own.exists(_.isInstanceOf[FileSourceScanExec]), "the aggregations must not read parquet")
+    val reads = own.collect { case m: InMemoryTableScanExec => m.relation.output.map(_.name) }
+    assert(reads.nonEmpty && reads.forall(c => c.contains("doc_id") && c.contains("fs_0")),
+      s"the aggregations must read the cached per-document projection, read: $reads")
+    val scans = nodes(build, intoCaches = true).collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"one parquet scan expected, planned ${scans.size}")
+    assert(scans.head.relation.location.rootPaths.map(_.getName) == Seq("documents.parquet"))
+  }
+
   test("ma_probe_consistency ranks probe_idx without a per-source single-partition window") {
     val p = plan("ma_probe_consistency")
     // The fat formulation was row_number() OVER (PARTITION BY source
