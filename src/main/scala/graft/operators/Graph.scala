@@ -163,6 +163,78 @@ object Graph {
       bcast: Boolean): (DataFrame, DataFrame) =
     rounds(e2, r0, n, base + lit(Damping) * sum(col("rank") / col("outdeg")), bcast)
 
+  /** Byte budget of a broadcast [[walk]] frame: 2× the rank loops'
+    * implied 128 MB (8 M nodes × 16 B), since one hop is built at a
+    * time. With K = 4 seeds it admits 3.7 M nodes at betweenness's 2K+1
+    * words and 4.2 M at closeness's 2K; sf10 has 2.1 M.
+    */
+  private val WalkBroadcastBytes = 256L << 20
+
+  /** Whether a frame of `words` 8-byte columns per node of the pagerank
+    * graph fits [[WalkBroadcastBytes]].
+    */
+  private def walkBroadcasts(spark: SparkSession, dir: String, words: Int): Boolean =
+    nodeCount(spark, dir) * words * 8L <= WalkBroadcastBytes
+
+  /** The `k` smallest distinct values of column `c`: the seeds. */
+  private def seedsOf(df: DataFrame, c: String, k: Int): Seq[Long] =
+    df.select(col(c)).distinct().orderBy(c).limit(k).collect().map(_.getLong(0)).toSeq
+
+  /** The bounded multi-source frontier walk over (u, v) `edges`.
+    * Every level is one row per node with one column `s$i` per seed;
+    * level 0 is the seeds (s_i = 1 on seed i). Level d+1 joins the
+    * edges with level d on u and groups by v with `agg` over each s_i;
+    * the visited bit mask (bit i: seed i reached the node on an earlier
+    * level) zeroes re-entries and all-zero rows drop. When `bcast`, each
+    * hop broadcasts level d (K+1 words per node) and the (node, mask)
+    * rows of every earlier level (at most K rows, 2K words, per node);
+    * else both sides shuffle. Each level is lazily localCheckpoint'd,
+    * and one count per hop both materializes it and probes for the
+    * exit: the walk stops after `maxHops` hops or at the first empty
+    * level. The caller releases the returned levels once its output is
+    * eagerly checkpointed.
+    */
+  private[graft] def walk(edges: DataFrame, seeds: Seq[Long], maxHops: Int,
+      agg: Column => Column, bcast: Boolean): Vector[DataFrame] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val cols = seeds.indices.map(i => s"s$i")
+    def side(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    def mask(f: DataFrame): DataFrame = f.select(col("node"), cols.indices.map { i =>
+      when(col(cols(i)) > 0, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_.bitwiseOR(_)).as("mask"))
+    val level0 = seeds.zipWithIndex.toDF("node", "seed")
+      .select(col("node") +: cols.indices.map(i =>
+        when(col("seed") === i, lit(1L)).otherwise(lit(0L)).as(cols(i))): _*)
+    var levels = Vector(level0)
+    var exhausted = false
+    while (levels.length <= maxHops && !exhausted) {
+      val next = edges
+        .join(side(levels.last.withColumnRenamed("node", "u")), "u")
+        .groupBy(col("v").as("node"))
+        .agg(agg(col(cols.head)).as(cols.head), cols.tail.map(c => agg(col(c)).as(c)): _*)
+        // one row per earlier level that holds the node; OR-ing them
+        // after the join reuses the node partitioning of the aggregate
+        // above, where OR-ing the levels first costs an exchange
+        .join(side(levels.map(mask).reduce(_ union _)), Seq("node"), "left")
+        .groupBy(col("node") +: cols.map(col): _*)
+        .agg(bit_or(col("mask")).as("vm"))
+        .select(col("node") +: cols.indices.map { i =>
+          when(coalesce(col("vm"), lit(0L)).bitwiseAND(lit(1L << i)) =!= 0, lit(0L))
+            .otherwise(col(cols(i))).as(cols(i))
+        }: _*)
+        .filter(cols.map(col(_) > 0).reduce(_ || _))
+        .localCheckpoint(false)
+      // counted through the RDD: one job, where Dataset.count adds an
+      // aggregate whose exchange adaptive execution runs as a second one
+      if (next.rdd.count() == 0L) {
+        exhausted = true
+        Dedup.releaseLocalCheckpoint(next)
+      } else levels :+= next
+    }
+    levels
+  }
+
   val pagerank = Q("gr_pagerank", oracleSql)((spark, dir) =>
     pagerankWith(spark, dir, underCap(spark, dir)))
 
@@ -387,7 +459,12 @@ object Graph {
          |JOIN a$CoreRounds x ON e.u = x.node JOIN a$CoreRounds y ON e.v = y.node
          |GROUP BY e.u
          |ORDER BY node""".stripMargin
-    }) { (spark, dir) =>
+    })((spark, dir) => kcoreWith(spark, dir, CoreRounds))
+
+  /** gr_kcore with the round cap the caller picks; the query passes
+    * [[CoreRounds]].
+    */
+  private[graft] def kcoreWith(spark: SparkSession, dir: String, rounds: Int): DataFrame = {
     val edges = coOrderEdges(spark, dir, CoreQty)
     // Round 1 in closed form: a0 is EVERY node, so the double
     // endpoint semi-join is the identity and the first peel is a bare
@@ -404,6 +481,12 @@ object Graph {
       .localCheckpoint(false)
     var nAlive = alive.count()
     val useBroadcast = nAlive <= BroadcastNodeCap
+    def side(d: DataFrame): DataFrame = if (useBroadcast) broadcast(d) else d
+    // the (u, d) degrees of the subgraph `alive` induces
+    def peel(alive: DataFrame): DataFrame = edges
+      .join(side(alive.select(col("node").as("u"))), "u")
+      .join(side(alive.select(col("node").as("v"))), "v")
+      .groupBy("u").agg(count(lit(1)).as("d"))
     var round = 1
     var fixed = false
     // One peel per job: a fused 2-peel variant was measured SLOWER at
@@ -412,46 +495,26 @@ object Graph {
     // under them is not reused across the checkpoint-free pair), so
     // the loop keeps per-round materialization; the closed-form first
     // round above is where the real win was.
-    while (round < CoreRounds && !fixed) {
-      def side(d: DataFrame): DataFrame = if (useBroadcast) broadcast(d) else d
-      val next = edges
-        .join(side(alive.select(col("node").as("u"))), "u")
-        .join(side(alive.select(col("node").as("v"))), "v")
-        .groupBy("u").agg(count(lit(1)).as("d"))
+    while (round < rounds && !fixed) {
+      val next = peel(alive)
         .filter(col("d") >= CoreK)
         .select(col("u").as("node"), col("d"))
         .localCheckpoint(false)
       val n = next.count()
-      if (n == nAlive) {
-        fixed = true // monotone peel: a no-op round is the fixpoint
-        Dedup.releaseLocalCheckpoint(alive)
-        alive = next // its d column is the final core_deg (see above)
-      } else {
-        Dedup.releaseLocalCheckpoint(alive)
-        alive = next; nAlive = n
-      }
+      fixed = n == nAlive // monotone peel: a no-op round is the fixpoint
+      Dedup.releaseLocalCheckpoint(alive)
+      alive = next; nAlive = n
       round += 1
     }
-    if (fixed) {
-      // fixpoint reached: the last peel already computed core_deg
-      val out = alive.select(col("node"), col("d").as("core_deg"))
-        .orderBy("node")
-        .localCheckpoint(true) // blocks self-clean once the frame is GC'd
-      Dedup.releaseLocalCheckpoint(alive)
-      out
-    } else {
-      // round cap hit pre-fixpoint: the stored d predates the final
-      // alive set — recompute degrees over it (the pre-round-13 path)
-      val out = edges
-        .join(if (useBroadcast) broadcast(alive.select(col("node").as("u"))) else alive.select(col("node").as("u")), "u")
-        .join(if (useBroadcast) broadcast(alive.select(col("node").as("v"))) else alive.select(col("node").as("v")), "v")
-        .groupBy("u").agg(count(lit(1)).as("core_deg"))
-        .select(col("u").as("node"), col("core_deg"))
-        .orderBy("node")
-        .localCheckpoint(true)
-      Dedup.releaseLocalCheckpoint(alive)
-      out
-    }
+    // at the fixpoint the last peel already computed core_deg; past the
+    // round cap the stored d predates the final alive set, so peel once
+    // more for the degrees over it
+    val out = (if (fixed) alive else peel(alive).select(col("u").as("node"), col("d")))
+      .select(col("node"), col("d").as("core_deg"))
+      .orderBy("node")
+      .localCheckpoint(true) // blocks self-clean once the frame is GC'd
+    Dedup.releaseLocalCheckpoint(alive)
+    out
   }
 
   private val BfsQty = 42
@@ -465,14 +528,8 @@ object Graph {
     * holds even when the graph's diameter exceeds the bound; the
     * oracle's recursive CTE deduplicates (node, dist) pairs per
     * round (UNION, not UNION ALL — path proliferation through cycles
-    * never materializes) and takes min(dist) at the end.
-    *
-    * Scale shape: the corpus collapses to the cached edge list once;
-    * each hop broadcast-joins the FRONTIER (new nodes only — at most
-    * |V| rows across ALL rounds combined, not per round) against the
-    * edges, anti-joins the visited set, and checkpoints. Early exit
-    * on an empty frontier. Per-round driver traffic is one count —
-    * the same posture as the kcore peel.
+    * never materializes) and takes min(dist) at the end. The walk is
+    * [[walk]] from one seed; a node's dist is its level.
     */
   val bfs = Q(
     "gr_bfs",
@@ -491,48 +548,26 @@ object Graph {
        |)
        |SELECT node, CAST(min(dist) AS INT) AS dist
        |FROM walk GROUP BY node
-       |ORDER BY node""".stripMargin) { (spark, dir) =>
+       |ORDER BY node""".stripMargin)((spark, dir) => bfsWith(spark, dir, true))
+
+  /** gr_bfs on the broadcast branch the caller picks; the query
+    * broadcasts.
+    */
+  private[graft] def bfsWith(spark: SparkSession, dir: String, bcast: Boolean): DataFrame = {
     val edges = coOrderEdges(spark, dir, BfsQty)
-    val seedRow = edges.agg(min(col("u")).as("s")).collect()(0)
-    if (seedRow.isNullAt(0)) {
+    val seeds = seedsOf(edges, "u", 1)
+    if (seeds.isEmpty) {
       val s = spark
       import s.implicits._
       Seq.empty[(Long, Int)].toDF("node", "dist")
     } else {
-      val seed = seedRow.getLong(0)
-      // only each NEW frontier is checkpointed (the isEmpty probe
-      // materializes it); the visited set stays a LAZY union of those
-      // cached frames — re-materializing the whole visited set per
-      // round cost ~40% of the query's wall time
-      val seedFrame = spark.range(1).select(
-        lit(seed).as("node"), lit(0).as("dist")).localCheckpoint(false)
-      var frontiers = Vector(seedFrame)
-      var hop = 0
-      var exhausted = false
-      while (hop < BfsMaxHops && !exhausted) {
-        val visited = frontiers.map(_.select("node")).reduce(_ union _)
-        val next = edges
-          .join(broadcast(frontiers.last.select(col("node").as("u"))), "u")
-          .select(col("v").as("node")).distinct()
-          .join(broadcast(visited), Seq("node"), "left_anti")
-          .select(col("node"), lit(hop + 1).as("dist"))
-          .localCheckpoint(false)
-        // count, not isEmpty: ONE driver job both answers the
-        // exhaustion probe AND materializes every checkpoint partition
-        // (isEmpty's limit(1) computed only partition 0, so the next
-        // hop's broadcast build re-ran the rest of the hop — two
-        // compute passes per hop for one load-bearing bit)
-        if (next.count() == 0L) {
-          exhausted = true
-          Dedup.releaseLocalCheckpoint(next)
-        } else frontiers :+= next
-        hop += 1
-      }
-      val out = frontiers.reduce(_ union _)
-        .select(col("node"), col("dist").cast("int").as("dist"))
+      val levels = walk(edges, seeds, BfsMaxHops, max(_), bcast)
+      val out = levels.zipWithIndex
+        .map { case (f, d) => f.select(col("node"), lit(d).as("dist")) }
+        .reduce(_ union _)
         .orderBy("node")
         .localCheckpoint(true)
-      frontiers.foreach(Dedup.releaseLocalCheckpoint)
+      levels.foreach(Dedup.releaseLocalCheckpoint)
       out
     }
   }
@@ -771,16 +806,10 @@ object Graph {
   /** Harmonic closeness centrality from K deterministic seeds (the K
     * smallest node ids — sampled-source centrality, the standard
     * tractable estimator; exact all-pairs closeness is O(V·E)): per
-    * seed, multi-source BFS to 6 hops, then H(s) = Σ_v 1/d(s,v) plus
-    * reach count and mean distance. The frontier carries (seed, node)
-    * pairs — at most K·\|V\| rows across ALL rounds combined — and
-    * follows gr_bfs's loop discipline exactly: only each new frontier
-    * checkpoints, the visited set stays a lazy union of those cached
-    * frames, broadcast under the PLAIN pagerank node cap — legitimate
-    * because the mask frames are one row per node of two longs,
-    * exactly the cap's 16-byte design point, whatever K is (shuffled
-    * joins past it) — early exit on an empty frontier. Oracle: one recursive CTE from the K-seed frame
-    * whose UNION dedups (seed, node, dist) triples.
+    * seed, BFS to 6 hops ([[walk]] from all K seeds at once), then
+    * H(s) = Σ_v 1/d(s,v) plus reach count and mean distance. Oracle:
+    * one recursive CTE from the K-seed frame whose UNION dedups
+    * (seed, node, dist) triples.
     */
   val closeness = Q(
     "gr_closeness",
@@ -799,56 +828,29 @@ object Graph {
        |  CAST(count(*) - 1 AS BIGINT) AS n_reached,
        |  round(1e-9 + sum(CASE WHEN dist > 0 THEN 1.0 / dist ELSE 0 END), 6) AS harmonic,
        |  round(1e-9 + avg(CASE WHEN dist > 0 THEN CAST(dist AS DOUBLE) END), 4) AS avg_dist
-       |FROM best GROUP BY seed ORDER BY seed""".stripMargin) { (spark, dir) =>
+       |FROM best GROUP BY seed ORDER BY seed""".stripMargin)((spark, dir) =>
+    closenessWith(spark, dir, walkBroadcasts(spark, dir, 2 * ClosenessSeeds)))
+
+  /** gr_closeness on the broadcast branch the caller picks; the query
+    * broadcasts under [[WalkBroadcastBytes]] for its widest frame,
+    * the walk's visited masks.
+    */
+  private[graft] def closenessWith(spark: SparkSession, dir: String, bcast: Boolean): DataFrame = {
     val edges = edgesWithDeg(spark, dir).select(col("src").as("u"), col("dst").as("v"))
-    // MASK frames: one row per node carrying the bit set of the seeds
-    // whose BFS wave sits on it — |V| rows (never K·|V| pairs), so the
-    // standard node cap governs the broadcast legitimately at any K
-    // (the principled fix for the K-seed driver-memory concern: shrink
-    // the frame, don't just gate it).
-    val bcast = underCap(spark, dir)
-    def maybeBroadcast(df: org.apache.spark.sql.DataFrame) =
-      if (bcast) broadcast(df) else df
-    // 4 bounded rows of model state (the gr_bfs 1-row seed agg,
-    // pluralized) — each seed owns one mask bit
-    val seedIds = edges.select(col("u")).distinct()
-      .orderBy("u").limit(ClosenessSeeds).collect().map(_.getLong(0)).toSeq
-    val s = spark
-    import s.implicits._
-    if (seedIds.isEmpty) {
+    val seeds = seedsOf(edges, "u", ClosenessSeeds)
+    if (seeds.isEmpty) {
+      val s = spark
+      import s.implicits._
       Seq.empty[(Long, Long, Double, Double)]
         .toDF("seed", "n_reached", "harmonic", "avg_dist")
     } else {
-      val f0 = seedIds.zipWithIndex.map { case (sd, i) => (sd, 1L << i) }
-        .toDF("node", "mask").localCheckpoint(true)
-      var frontiers = Vector((f0, 0))
-      var hop = 0
-      var exhausted = false
-      while (hop < ClosenessMaxHops && !exhausted) {
-        val visited = frontiers.map(_._1.select("node", "mask")).reduce(_ union _)
-          .groupBy("node").agg(bit_or(col("mask")).as("vm"))
-        val next = edges
-          .join(maybeBroadcast(frontiers.last._1
-            .select(col("node").as("u"), col("mask"))), "u")
-          .groupBy(col("v").as("node")).agg(bit_or(col("mask")).as("nm"))
-          .join(maybeBroadcast(visited), Seq("node"), "left")
-          .select(col("node"),
-            col("nm").bitwiseAND(bitwise_not(coalesce(col("vm"), lit(0L)))).as("mask"))
-          .filter(col("mask") =!= 0)
-          .localCheckpoint(false)
-        // count, not isEmpty — same single-job materialize+probe as
-        // the gr_bfs loop (see there)
-        if (next.count() == 0L) {
-          exhausted = true
-          Dedup.releaseLocalCheckpoint(next)
-        } else frontiers :+= ((next, hop + 1))
-        hop += 1
-      }
-      // unpack masks to (seed, dist) rows only for the final bounded agg
-      val seedArr = array(seedIds.indices.map { i =>
-        when(col("mask").bitwiseAND(lit(1L << i)) =!= 0, lit(seedIds(i)))
+      val levels = walk(edges, seeds, ClosenessMaxHops, max(_), bcast)
+      // unpack the seed columns to (seed, dist) rows only for the final
+      // bounded agg
+      val seedArr = array(seeds.indices.map { i =>
+        when(col(s"s$i") > 0, lit(seeds(i)))
       }: _*)
-      val perSeed = frontiers.map { case (f, d) =>
+      val perSeed = levels.zipWithIndex.map { case (f, d) =>
         f.select(lit(d).as("dist"),
           explode(filter(seedArr, x => x.isNotNull)).as("seed"))
       }.reduce(_ union _)
@@ -861,38 +863,27 @@ object Graph {
             .as("avg_dist"))
         .orderBy("seed")
         .localCheckpoint(true)
-      frontiers.foreach(f => Dedup.releaseLocalCheckpoint(f._1))
+      levels.foreach(Dedup.releaseLocalCheckpoint)
       out
     }
   }
 
   private val BetwMaxHops = 4
-  // Byte budget for the betweenness level-frame broadcasts (rows are
-  // (2K+1)×8 bytes wide, so the node bound = budget / width shrinks
-  // as K grows — the width-aware form of BroadcastNodeCap).
-  private val BetwBroadcastBytes = 256L << 20
 
   /** Sampled betweenness centrality (Brandes 2001 from the same K
     * deterministic seeds as gr_closeness, depth-bounded at 4 hops) —
     * completing the centrality family (degree → pagerank → closeness
-    * → betweenness). Forward: the multi-source frontier BFS carrying
-    * (seed, node, σ) where σ sums shortest-path counts over incoming
-    * previous-frontier edges — integer path counts, engine-exact.
-    * Backward: Brandes' dependency accumulation level by level,
+    * → betweenness). Forward: [[walk]] with σ summed over incoming
+    * previous-level edges — integer path counts, engine-exact.
+    * Backward: Brandes' dependency accumulation level by level over
+    * the same stored level frames,
     * δ(u) = Σ_{u→v, v one level deeper} σ(u)/σ(v) · (1 + δ(v)), and
     * betweenness(v) = Σ over seeds and levels ≥ 1 of δ — the standard
-    * tractable estimator (exact betweenness is O(V·E)). Every frame
-    * is ONE ROW PER NODE with a σ (and δ) column per seed — ≤ \|V\|
-    * rows of (2K+1)×8-byte width, never K·\|V\| pairs — per-level
-    * localCheckpoint with release, broadcasts gated by an explicit
-    * BYTE budget over the actual row width (so the admitted node
-    * count shrinks as K grows, instead of assuming the pagerank
-    * cap's 16-byte rows) —
-    * gr_closeness's loop discipline plus a backward pass over the
-    * SAME stored level frames. Oracle: the identical forward levels
-    * and backward recurrences macro-expanded as chained CTEs (the
-    * pagerank unroll discipline); only rounded positive nodes emit.
-    * Driver-side Brandes replay pinned in GraphSpec.
+    * tractable estimator (exact betweenness is O(V·E)). Oracle: the
+    * identical forward levels and backward recurrences macro-expanded
+    * as chained CTEs (the pagerank unroll discipline); only rounded
+    * positive nodes emit. Driver-side Brandes replay pinned in
+    * GraphSpec.
     */
   val betweenness = Q(
     "gr_betweenness", {
@@ -933,78 +924,26 @@ object Graph {
          |GROUP BY node
          |HAVING round(1e-9 + sum(delta), 6) > 0
          |ORDER BY node""".stripMargin
-    }) { (spark, dir) =>
+    })((spark, dir) =>
+      betweennessWith(spark, dir, walkBroadcasts(spark, dir, 2 * ClosenessSeeds + 1)))
+
+  /** gr_betweenness on the broadcast branch the caller picks; the query
+    * broadcasts under [[WalkBroadcastBytes]] for its widest frame, the
+    * backward pass's node + K σ + K δ columns.
+    */
+  private[graft] def betweennessWith(spark: SparkSession, dir: String,
+      bcast: Boolean): DataFrame = {
     val edges = edgesWithDeg(spark, dir).select(col("src").as("u"), col("dst").as("v"))
-    val seedIds = edges.select(col("u")).distinct()
-      .orderBy("u").limit(ClosenessSeeds).collect().map(_.getLong(0)).toSeq
-    val k = seedIds.length
-    // COLUMN-PER-SEED frames (the gr_closeness mask discipline with
-    // path counts): one row per node carrying K sigma columns — |V|
-    // rows, never K·|V| pairs. Unlike closeness's 16-byte mask rows,
-    // though, the widest broadcast frame here (backward pass: node +
-    // K sigmas + K deltas) is (2K+1)×8 bytes — so the gate is a BYTE
-    // budget that scales the admitted node count down with K instead
-    // of assuming the pagerank cap's 16-byte rows. Budget 256 MB, 2×
-    // the pagerank cap's implied 128 MB: exactly one level frame is
-    // live at a time here (per-level checkpoint + release) vs
-    // pagerank's rank/edge co-residency, and at the default K=4 this
-    // keeps the measured sf10 broadcast plan (2.1 M nodes × 72 B =
-    // 151 MB) while K=20 would drop to shuffled joins at 0.9 M nodes.
-    val bcast =
-      nodeCount(spark, dir) * (2L * math.max(k, 1) + 1) * 8L <= BetwBroadcastBytes
-    def maybeBroadcast(df: org.apache.spark.sql.DataFrame) =
-      if (bcast) broadcast(df) else df
-    val s = spark
-    import s.implicits._
-    if (seedIds.isEmpty) {
+    val seeds = seedsOf(edges, "u", ClosenessSeeds)
+    val k = seeds.length
+    def maybeBroadcast(df: DataFrame) = if (bcast) broadcast(df) else df
+    if (seeds.isEmpty) {
+      val s = spark
+      import s.implicits._
       Seq.empty[(Long, Double)].toDF("node", "betweenness")
     } else {
       val sigCols = (0 until k).map(i => s"s$i")
-      val f0 = seedIds.zipWithIndex.map { case (sd, i) =>
-        (sd, (0 until k).map(j => if (i == j) 1L else 0L))
-      }.toDF("node", "sv")
-        .select(col("node") +: (0 until k).map(i =>
-          element_at(col("sv"), i + 1).as(s"s$i")): _*)
-        .localCheckpoint(true)
-      // forward: per level, each seed's σ sums over incoming
-      // previous-level edges; the visited MASK (bit i = seed i already
-      // reached the node) zeroes re-entries
-      var fs = Vector(f0)
-      var hop = 0
-      def maskOf(f: DataFrame): DataFrame = f.select(col("node"),
-        (0 until k).map(i => when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("mask"))
-      // No per-hop isEmpty probe: the walk is depth-bounded at 4 on a
-      // co-purchase graph that never exhausts in 4 hops at any SF, so
-      // the probe was one extra driver-blocking job per hop for a
-      // branch that never fired; an empty frontier (degenerate inputs)
-      // just flows through as empty frames — every downstream join,
-      // union and aggregate of it is a no-op.
-      while (hop < BetwMaxHops) {
-        val visited = fs.map(maskOf).reduce(_ union _)
-          .groupBy("node").agg(bit_or(col("mask")).as("vm"))
-        val next = edges
-          .join(maybeBroadcast(fs.last.select(col("node").as("u") +:
-            sigCols.map(col): _*)), "u")
-          .groupBy(col("v").as("node"))
-          .agg(sum(s"s0").as("n0"), sigCols.drop(1).zipWithIndex.map {
-            case (c, i) => sum(c).as(s"n${i + 1}") }: _*)
-          .join(maybeBroadcast(visited), Seq("node"), "left")
-          .select(col("node") +: (0 until k).map { i =>
-            when(coalesce(col("vm"), lit(0L)).bitwiseAND(lit(1L << i)) =!= 0, lit(0L))
-              .otherwise(col(s"n$i")).as(s"s$i")
-          }: _*)
-          .filter((0 until k).map(i => col(s"s$i") > 0).reduce(_ || _))
-          .localCheckpoint(false)
-        // past the broadcast gate nothing pins this level's blocks
-        // until the final action, so concurrent consumers (the visited
-        // unions + both passes) could each recompute it — materialize
-        // eagerly there; on the broadcast path the next level's
-        // broadcast build does it for free
-        if (!bcast) next.count()
-        fs :+= next
-        hop += 1
-      }
+      val fs = walk(edges, seeds, BetwMaxHops, sum(_), bcast)
       val depth = fs.length - 1
       // backward: Brandes dependency accumulation per seed column over
       // the same stored level frames. LAZY checkpoints: each level is
@@ -1026,7 +965,8 @@ object Graph {
           .agg(
             deltaAgg(0), (1 until k).map(deltaAgg): _*)
           .localCheckpoint(false)
-        // same non-broadcast eager materialization as the forward pass
+        // past the broadcast gate nothing materializes this level before
+        // the final action, whose readers could each recompute it
         if (!bcast) dd.count()
         deltas +:= dd
       }
@@ -1113,9 +1053,7 @@ object Graph {
 
   private[graft] def pprWith(spark: SparkSession, dir: String, bcast: Boolean): DataFrame = {
     val e2 = edgesWithDeg(spark, dir)
-    // 4 bounded rows of model state (the closeness seed convention)
-    val seedIds = e2.select(col("src")).distinct()
-      .orderBy("src").limit(PprSeeds).collect().map(_.getLong(0)).toSeq
+    val seedIds = seedsOf(e2, "src", PprSeeds)
     val r0 = e2.select(col("src").as("node")).distinct()
       .select(col("node"),
         when(col("node").isin(seedIds: _*), lit(0.25)).otherwise(lit(0.0)).as("rank"))

@@ -70,6 +70,23 @@ class GraphSpec extends AnyFunSuite {
     assert(rows.length <= nRawPass)
   }
 
+  test("gr_kcore past its round cap equals a driver-side peel of as many rounds") {
+    val edges = operators.Graph.coOrderEdges(spark, sf, 45)
+      .collect().map(r => (r.getAs[Long]("u"), r.getAs[Long]("v")))
+    // degree of every node with an edge inside the subgraph `alive` induces
+    def degrees(alive: Long => Boolean): Map[Long, Long] =
+      edges.filter { case (u, v) => alive(u) && alive(v) }
+        .groupBy(_._1).map { case (u, es) => u -> es.length.toLong }
+    val a1 = degrees(_ => true).filter(_._2 >= 2).keySet
+    val a2 = degrees(a1).filter(_._2 >= 2).keySet
+    // the second round still peels, so the cap, not the fixpoint, ends
+    // the loop and the degrees come from one more peel over a2
+    assert(a2.size < a1.size, "two rounds reach the fixpoint at this scale")
+    val got = operators.Graph.kcoreWith(spark, sf, 2).collect()
+      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("core_deg")).toMap
+    assert(got == degrees(a2))
+  }
+
   test("gr_betweenness equals a driver-side Brandes replay from the same seeds") {
     // plain-Scala bounded-depth Brandes over the collected edge list —
     // the independent pin next to the macro-expanded SQL oracle
