@@ -2,21 +2,30 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** A one-time artifact that queries serve from: an index, a layout, a
+  * persisted edge set. `run` builds it, memoized per session and dir,
+  * so a second run is a hit. Each is declared once, beside the function
+  * that builds it, and named by every [[Q]] that reads it; `graft.Bench`
+  * runs the builds of the queries it times, untimed, under `name`.
+  */
+final case class Build(name: String, run: (SparkSession, String) => Any)
+
 /** One registered operator: a Spark query plus (optionally) the
-  * equivalent DuckDB oracle SQL over the same parquet tables.
+  * equivalent DuckDB oracle SQL over the same parquet tables, and the
+  * builds it serves from — after those, serving it builds nothing more.
   * Column names and rounding must match exactly between the two —
   * the driver sorts columns by name and hashes values.
   */
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    builds: Seq[Build])
 
 object Q {
-  def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, Some(oracle))
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
+  def apply(name: String, oracle: String, builds: Build*)(
+      fn: (SparkSession, String) => DataFrame): Q =
+    Q(name, fn, Some(oracle), builds)
 }
 
 /** Parquet table loaders. One read per table; Catalyst prunes

@@ -41,6 +41,10 @@ object SessionMemo {
 
   private val store = new ConcurrentHashMap[SparkSession, Entries]()
 
+  // sessions whose application-end listener is registered: one listener
+  // per session for the life of its context, however often it is evicted
+  private val watched = ConcurrentHashMap.newKeySet[SparkSession]()
+
   private def unpersistAll(frames: Seq[DataFrame]): Unit =
     frames.foreach { df =>
       try df.unpersist(blocking = false)
@@ -51,12 +55,13 @@ object SessionMemo {
     * the caller persisting + materializing) them on first use.
     */
   def frames(spark: SparkSession, key: String)(build: => Seq[DataFrame]): Seq[DataFrame] = {
-    val m = store.computeIfAbsent(spark, { s =>
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = evict(s)
-      })
-      new Entries
+    if (watched.add(spark)) spark.sparkContext.addSparkListener(new SparkListener {
+      override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+        evict(spark)
+        watched.remove(spark)
+      }
     })
+    val m = store.computeIfAbsent(spark, _ => new Entries)
     // the session's intrinsic lock is reentrant: a build that calls
     // frames() for another key (composed builds) does not deadlock;
     // concurrent first access from another thread blocks until the
@@ -85,6 +90,15 @@ object SessionMemo {
     Option(store.get(spark)).foreach { m =>
       m.synchronized {
         Option(m.remove(key)).foreach(unpersistAll)
+      }
+    }
+
+  /** The keys memoized for this session right now. */
+  private[graft] def keys(spark: SparkSession): Set[String] =
+    Option(store.get(spark)).fold(Set.empty[String]) { m =>
+      m.synchronized {
+        import scala.jdk.CollectionConverters._
+        m.keySet.asScala.toSet
       }
     }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -205,7 +205,7 @@ object Ann {
   /** ann_topk_agg's bounded-heap route and oracle under a second
     * registered id.
     */
-  val topkPlan = Q("ann_topk_plan", topkAgg.fn, topkAgg.oracle)
+  val topkPlan = topkAgg.copy(name = "ann_topk_plan")
 
   /** LSH-bucketed ANN: candidates share ≥1 of the 4 8-bit hyperplane
     * bands with the query — multi-band lookup has far better recall
@@ -369,6 +369,24 @@ object Ann {
        |  ) WHERE rn <= $NProbe
        |)""".stripMargin
 
+  /** One-time IVF index build per (session, dir): vec_id-seeded
+    * centroids refined by one deterministic Lloyd iteration, plus the
+    * cell assignment of every corpus vector — persisted and
+    * materialized eagerly, the way a production vector store builds
+    * its index once and serves many queries against it (same
+    * separation the q11 bucketed layout uses via ensureBucketed).
+    * Registered-query runs after the first then time the probe path,
+    * not the index build. Memoized per session reference (evicted and
+    * unpersisted on session stop — see graft.SessionMemo).
+    */
+  private[graft] def ivfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val fs = graft.SessionMemo.frames(spark, s"ann.ivfIndex:$dir") {
+      buildIvf(corpus(spark, dir))
+    }
+    (fs(0), fs(1))
+  }
+  val IvfIndex = Build("ivf_index", ivfIndex)
+
   val ivfTopk = Q(
     "ann_ivf",
     s"""WITH c AS ($corpusSql),
@@ -386,7 +404,7 @@ object Ann {
        |  JOIN c cq ON cq.vec_id = cand.query_id
        |  JOIN c cc ON cc.vec_id = cand.vec_id
        |) WHERE rank <= $TopK
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |ORDER BY query_id, rank""".stripMargin, IvfIndex) { (spark, dir) =>
     ivfTopkWith(spark, dir, NProbe)
   }
 
@@ -408,23 +426,6 @@ object Ann {
     vecs.crossJoin(broadcast(cent))
       .withColumn("ccos", dotC(col("e"), col("ce")) / (col("nrm") * col("cn")))
       .select("vec_id", "cid", "ccos")
-
-  /** One-time IVF index build per (session, dir): vec_id-seeded
-    * centroids refined by one deterministic Lloyd iteration, plus the
-    * cell assignment of every corpus vector — persisted and
-    * materialized eagerly, the way a production vector store builds
-    * its index once and serves many queries against it (same
-    * separation the q11 bucketed layout uses via ensureBucketed).
-    * Registered-query runs after the first then time the probe path,
-    * not the index build. Memoized per session reference (evicted and
-    * unpersisted on session stop — see graft.SessionMemo).
-    */
-  private[graft] def ivfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val fs = graft.SessionMemo.frames(spark, s"ann.ivfIndex:$dir") {
-      buildIvf(corpus(spark, dir))
-    }
-    (fs(0), fs(1))
-  }
 
   /** The IVF build over any (vec_id, e, nrm) corpus frame — shared by
     * the full-corpus index and ann_refresh's base-slice index.
@@ -472,6 +473,7 @@ object Ann {
     }
     (fs(0), fs(1))
   }
+  val IvfBaseIndex = Build("ivf_base_index", baseIvfIndex)
 
   /** IVF index MAINTENANCE under ingest — the fast path every vector
     * store runs between rebuilds (Faiss add(), Milvus growing
@@ -514,7 +516,7 @@ object Ann {
        |    coalesce(nn.n_new, 0) AS n_new,
        |    coalesce(nb.n_base, 0) + coalesce(nn.n_new, 0) AS n_total
        |  FROM cent LEFT JOIN nb ON cent.cid = nb.cell LEFT JOIN nn ON cent.cid = nn.cell)
-       |ORDER BY cell""".stripMargin) { (spark, dir) =>
+       |ORDER BY cell""".stripMargin, IvfBaseIndex) { (spark, dir) =>
     val (cent, assignedBase) = baseIvfIndex(spark, dir)
     val delta = corpus(spark, dir).filter(col("vec_id") % RefreshMod === RefreshRes)
     val dassign = argmaxCell(scoreAgainst(delta, cent))
@@ -648,6 +650,7 @@ object Ann {
       edges.count()
       Seq(edges)
     }.head
+  val EmbedEdges = Build("embed_edges", embedEdges)
 
   /** One-time semantic-cluster assignment build: the connected-
     * component labels over the verified embedding near-dup pairs,
@@ -664,6 +667,7 @@ object Ann {
       out.count()
       Seq(out)
     }.head
+  val EmbedClusterLabels = Build("embed_cluster_labels", embedClusterAssignment)
 
   /** The banded corpus INDEX of a (vec_id, e, nrm) frame: one row per
     * (band, key) membership carrying the vector itself, oversized
@@ -753,7 +757,7 @@ object Ann {
        |  CAST(count(*) FILTER (WHERE v != u) + 1 AS BIGINT) AS cluster_size
        |FROM (SELECT DISTINCT u, v FROM reach)
        |GROUP BY u
-       |ORDER BY vec_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY vec_id""".stripMargin, Ann.EmbedEdges) { (spark, dir) =>
     val (labels, _) = Dedup.connectedComponents(embedEdges(spark, dir))
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("label"))
@@ -910,6 +914,7 @@ object Ann {
     }
     (fs(0), fs(1))
   }
+  val PqIndex = Build("pq_index", pqIndex)
 
   /** The query-side ADC lookup table: the queries' exact dot products
     * against every codeword, as 1e-6-scaled BIGINTs so the per-
@@ -1002,7 +1007,7 @@ object Ann {
        |      ORDER BY round(1e-9 + a.adot6 / 1e6, 6) DESC, a.vec_id) AS BIGINT) AS rank
        |  FROM approx a
        |) WHERE rank <= $TopK
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |ORDER BY query_id, rank""".stripMargin, PqIndex) { (spark, dir) =>
     val c = corpus(spark, dir)
     val (book, codes) = pqIndex(spark, dir)
     val qtab = pqQueryTab(c, book)
@@ -1070,7 +1075,7 @@ object Ann {
        |  JOIN c cq ON cq.vec_id = pre.query_id
        |  JOIN c cc ON cc.vec_id = pre.vec_id
        |) WHERE rank <= $TopK
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |ORDER BY query_id, rank""".stripMargin, IvfIndex, PqIndex) { (spark, dir) =>
     ivfpqTopkWith(spark, dir, NProbe, NRerank)
   }
 
@@ -1160,6 +1165,7 @@ object Ann {
     }
     (fs(0), fs(1))
   }
+  val Sq8Index = Build("sq8_index", sqIndex)
 
   /** SQ8 flat top-k: every candidate is scored from its 8-bit codes.
     * The serve-path arithmetic is INTEGER: each query pre-multiplies
@@ -1202,7 +1208,7 @@ object Ann {
        |    CAST(row_number() OVER (PARTITION BY query_id
        |      ORDER BY acos DESC, vec_id) AS BIGINT) AS rank
        |  FROM scored) WHERE rank <= $TopK
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |ORDER BY query_id, rank""".stripMargin, Sq8Index) { (spark, dir) =>
     import graft.functions.HashExprs.{dot_product, long_dot_product}
     val (arrs, codes) = sqIndex(spark, dir)
     val queries = corpus(spark, dir).filter(col("vec_id") < NumQueries)
@@ -1348,6 +1354,7 @@ object Ann {
       packed.count()
       Seq(packed)
     }.head
+  val KnnCellIndex = Build("knn_cell_index", knnCellIndex)
 
   val knnJoin = Q(
     "ann_knn_join",
@@ -1378,7 +1385,7 @@ object Ann {
        |  JOIN c ca ON ca.vec_id = p.va
        |  JOIN c cb ON cb.vec_id = p.vb
        |) WHERE rank <= $KnnJoinK
-       |ORDER BY vec_id, rank""".stripMargin) { (spark, dir) =>
+       |ORDER BY vec_id, rank""".stripMargin, IvfIndex, KnnCellIndex) { (spark, dir) =>
     val c = corpus(spark, dir)
     val (cent, assigned) = ivfIndex(spark, dir)
     // Per-vector top-12 probe cells computed MAP-SIDE against the
@@ -1590,7 +1597,7 @@ object Ann {
        |  JOIN c cq ON cq.vec_id = cand.query_id
        |  JOIN c cc ON cc.vec_id = cand.vec_id
        |) WHERE rank <= $TopK
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |ORDER BY query_id, rank""".stripMargin, IvfIndex) { (spark, dir) =>
     import graft.functions.TopKAgg
     val c = corpus(spark, dir)
     val cand = ivfCandidates(spark, dir, NProbe)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, SessionMemo, Tables}
+import graft.{Build, Q, SessionMemo, Tables}
 import graft.functions.AuditDefs._
 import graft.functions.MarkerExprs.{marker_total, word_bigrams, word_count, word_tokens}
 import graft.functions.TopKAgg.topk_by_score
@@ -26,6 +26,82 @@ import org.apache.spark.sql.functions._
 object Audit {
 
   private def d(x: String): String = s"CAST($x AS DOUBLE)"
+
+  // ═══════════════ the one pass over the corpus ═══════════════
+
+  /** Every per-document map over a (doc_id, source, text) frame: the
+    * word tokens and bigrams of the lower-cased text, the llmmap
+    * features, the DLI parts and the family scores `fs_<i>`.
+    */
+  private def projectionOf(docs: DataFrame): DataFrame = {
+    val lt = lower(col("text"))
+    Style.withScores(docs.select(Seq(col("doc_id"), col("source"), col("text"),
+      word_tokens(lt).as("words"), word_bigrams(lt).as("bigrams")) ++ featureCols ++ dliDocCols: _*))
+      .drop("text")
+  }
+
+  /** The projection without its token arrays. */
+  private def narrowOf(wide: DataFrame): DataFrame = wide.drop("words", "bigrams")
+
+  /** The exploded token aggregation: per source, the count of every
+    * distinct word and bigram (a word has no space, a bigram one), and
+    * for a bigram the ordinal doc_id·2²⁰ + pos of its first occurrence;
+    * position p of words ++ bigrams is bigram p - size(words).
+    */
+  private def tokensOf(wide: DataFrame): DataFrame = {
+    val nWords = size(col("words"))
+    wide.select(col("doc_id"), col("source"), nWords.as("n_words"),
+        posexplode(concat(col("words"), col("bigrams"))).as(Seq("p", "key")))
+      .groupBy("source", "key")
+      .agg(count(lit(1)).as("cnt"), min(when(col("p") >= col("n_words"),
+        col("doc_id") * lit(1048576L) + col("p") - col("n_words"))).as("first_ord"))
+  }
+
+  /** One row per model: the fingerprint, the DLI signature, `n_vocab`,
+    * the top-100 `bigrams` (rank, bigram, cnt, p) and the family means.
+    * Top-100 ties break by first occurrence, as Python's Counter
+    * .most_common does (dli.py:66-73): the bounded heap (not a window
+    * over a source's whole vocabulary) prefers the smaller first_ord
+    * on ties, skips the words' null ids and carries each bigram along.
+    */
+  private def modelsOf(wide: DataFrame): DataFrame = {
+    val perModel = narrowOf(wide).groupBy("source")
+      .agg(fingerprintAggs.head, fingerprintAggs.tail ++ dliAggs ++ Style.famMeans: _*)
+    val vocab = tokensOf(wide).groupBy("source")
+      .agg(count(when(col("first_ord").isNull, 1)).as("n_vocab"),
+        topk_by_score(col("cnt").cast("double"), col("first_ord"), 100, col("key")).as("tk"))
+      .withColumn("total", aggregate(col("tk"), lit(0d), (acc, t) => acc + t("score")))
+      .select(col("source"), col("n_vocab"), transform(col("tk"), t => struct(t("rank"),
+        t("payload").as("bigram"), t("score").cast("long").as("cnt"),
+        (t("score") / col("total")).as("p"))).as("bigrams"))
+    // both sides are already hash-partitioned by source: join in place
+    perModel.join(vocab.hint("shuffle_hash"), Seq("source"), "left")
+      .select(Seq(col("source")) ++ fpCols.map(col) ++ dliSigCols ++
+        Seq(col("n_vocab"), col("bigrams")) ++ families.indices.map(i => col(s"fm_$i")): _*)
+  }
+
+  /** The per-document projection (no token arrays) and per-model frame. */
+  private[graft] final case class Corpus(docs: DataFrame, models: DataFrame)
+
+  /** The one pass over `documents`, memoized per (session, dir): the
+    * `audit_caches` build. The projection with its token arrays is
+    * cached only while one action builds the two frames (the per-model
+    * aggregation reads the cached narrow part), then released; a loaded
+    * dependent cache survives its source's release.
+    */
+  private[graft] def corpus(spark: SparkSession, dir: String): Corpus = {
+    val Seq(docs, models) = SessionMemo.frames(spark, s"audit.corpus:$dir") {
+      val wide = projectionOf(Tables.documents(spark, dir)).cache()
+      val docs = narrowOf(wide).cache()
+      val models = modelsOf(wide).cache()
+      models.collect()
+      wide.unpersist()
+      Seq(docs, models)
+    }
+    Corpus(docs, models)
+  }
+  val AuditCaches = Build("audit_caches", corpus)
+
 
   // ═══════════════ llmmap: per-response features ═══════════════
   // Reference: llmmap.py:28-67 (_extract_response_features)
@@ -116,7 +192,7 @@ object Audit {
        |  has_code_blocks, starts_with_refusal,
        |  ${styleCats.map(c => s"round(1e-9 + $c, 6) AS $c").mkString(",\n  ")}
        |FROM ($docFeatsSql)
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_id""".stripMargin, AuditCaches) { (spark, dir) =>
     // the counts and flags as they are, every ratio rounded
     val exact = numericFeatures.filter(_.startsWith("length_")) ++ boolFeatures
     corpus(spark, dir).docs.select(Seq(col("doc_id"), col("source")) ++
@@ -160,7 +236,7 @@ object Audit {
     "ma_fingerprint",
     s"""SELECT source, ${fpCols.map(c => s"round(1e-9 + $c, 6) AS $c").mkString(", ")}
        |FROM ($fingerprintSql)
-       |ORDER BY source""".stripMargin) { (spark, dir) =>
+       |ORDER BY source""".stripMargin, AuditCaches) { (spark, dir) =>
     corpus(spark, dir).models
       .select(col("source") +: fpCols.map(c => round(lit(1e-9) + col(c), 6).as(c)): _*)
       .orderBy("source")
@@ -200,7 +276,7 @@ object Audit {
          |  FROM fp a JOIN fp b ON a.source < b.source
          |)
          |ORDER BY model_a, model_b""".stripMargin
-    }) { (spark, dir) =>
+    }, AuditCaches) { (spark, dir) =>
     comparedDf(spark, dir)
       .select(
         col("model_a"), col("model_b"),
@@ -291,7 +367,7 @@ object Audit {
     s"""SELECT source,
        |  ${dliFeatureNames.map(c => s"round(1e-9 + $c, 6) AS $c").mkString(",\n  ")}
        |FROM ($dliSigSql)
-       |ORDER BY source""".stripMargin) { (spark, dir) =>
+       |ORDER BY source""".stripMargin, AuditCaches) { (spark, dir) =>
     dliSignatureOf(corpus(spark, dir).models)
       .select(col("source") +: dliFeatureNames.map(c => round(lit(1e-9) + col(c), 6).as(c)): _*)
       .orderBy("source")
@@ -332,7 +408,7 @@ object Audit {
     "ma_dli_bigrams",
     s"""SELECT source, bigram, cnt, rank, round(1e-9 + p, 6) AS p
        |FROM ($dliBigramSql)
-       |ORDER BY source, rank""".stripMargin) { (spark, dir) =>
+       |ORDER BY source, rank""".stripMargin, AuditCaches) { (spark, dir) =>
     bigramRowsOf(corpus(spark, dir).models)
       .select(col("source"), col("bigram"), col("cnt"), col("rank"), round(lit(1e-9) + col("p"), 6).as("p"))
       .orderBy("source", "rank")
@@ -396,7 +472,7 @@ object Audit {
          |  )
          |)
          |ORDER BY model_a, model_b""".stripMargin
-    }) { (spark, dir) =>
+    }, AuditCaches) { (spark, dir) =>
     comparedDf(spark, dir)
       .filter(col("has_dli"))
       .select(
@@ -408,80 +484,6 @@ object Audit {
         (col("dli_sim") >= 0.80).as("is_derived"),
         round(lit(1e-9) + least(abs(col("dli_sim") - 0.80) / 0.2, lit(1d)), 6).as("confidence"))
       .orderBy("model_a", "model_b")
-  }
-
-  // ═══════════════ the one pass over the corpus ═══════════════
-
-  /** Every per-document map over a (doc_id, source, text) frame: the
-    * word tokens and bigrams of the lower-cased text, the llmmap
-    * features, the DLI parts and the family scores `fs_<i>`.
-    */
-  private def projectionOf(docs: DataFrame): DataFrame = {
-    val lt = lower(col("text"))
-    Style.withScores(docs.select(Seq(col("doc_id"), col("source"), col("text"),
-      word_tokens(lt).as("words"), word_bigrams(lt).as("bigrams")) ++ featureCols ++ dliDocCols: _*))
-      .drop("text")
-  }
-
-  /** The projection without its token arrays. */
-  private def narrowOf(wide: DataFrame): DataFrame = wide.drop("words", "bigrams")
-
-  /** The exploded token aggregation: per source, the count of every
-    * distinct word and bigram (a word has no space, a bigram one), and
-    * for a bigram the ordinal doc_id·2²⁰ + pos of its first occurrence;
-    * position p of words ++ bigrams is bigram p - size(words).
-    */
-  private def tokensOf(wide: DataFrame): DataFrame = {
-    val nWords = size(col("words"))
-    wide.select(col("doc_id"), col("source"), nWords.as("n_words"),
-        posexplode(concat(col("words"), col("bigrams"))).as(Seq("p", "key")))
-      .groupBy("source", "key")
-      .agg(count(lit(1)).as("cnt"), min(when(col("p") >= col("n_words"),
-        col("doc_id") * lit(1048576L) + col("p") - col("n_words"))).as("first_ord"))
-  }
-
-  /** One row per model: the fingerprint, the DLI signature, `n_vocab`,
-    * the top-100 `bigrams` (rank, bigram, cnt, p) and the family means.
-    * Top-100 ties break by first occurrence, as Python's Counter
-    * .most_common does (dli.py:66-73): the bounded heap (not a window
-    * over a source's whole vocabulary) prefers the smaller first_ord
-    * on ties, skips the words' null ids and carries each bigram along.
-    */
-  private def modelsOf(wide: DataFrame): DataFrame = {
-    val perModel = narrowOf(wide).groupBy("source")
-      .agg(fingerprintAggs.head, fingerprintAggs.tail ++ dliAggs ++ Style.famMeans: _*)
-    val vocab = tokensOf(wide).groupBy("source")
-      .agg(count(when(col("first_ord").isNull, 1)).as("n_vocab"),
-        topk_by_score(col("cnt").cast("double"), col("first_ord"), 100, col("key")).as("tk"))
-      .withColumn("total", aggregate(col("tk"), lit(0d), (acc, t) => acc + t("score")))
-      .select(col("source"), col("n_vocab"), transform(col("tk"), t => struct(t("rank"),
-        t("payload").as("bigram"), t("score").cast("long").as("cnt"),
-        (t("score") / col("total")).as("p"))).as("bigrams"))
-    // both sides are already hash-partitioned by source: join in place
-    perModel.join(vocab.hint("shuffle_hash"), Seq("source"), "left")
-      .select(Seq(col("source")) ++ fpCols.map(col) ++ dliSigCols ++
-        Seq(col("n_vocab"), col("bigrams")) ++ families.indices.map(i => col(s"fm_$i")): _*)
-  }
-
-  /** The per-document projection (no token arrays) and per-model frame. */
-  private[graft] final case class Corpus(docs: DataFrame, models: DataFrame)
-
-  /** The one pass over `documents`, memoized per (session, dir): the
-    * `audit_caches` build. The projection with its token arrays is
-    * cached only while one action builds the two frames (the per-model
-    * aggregation reads the cached narrow part), then released; a loaded
-    * dependent cache survives its source's release.
-    */
-  private[graft] def corpus(spark: SparkSession, dir: String): Corpus = {
-    val Seq(docs, models) = SessionMemo.frames(spark, s"audit.corpus:$dir") {
-      val wide = projectionOf(Tables.documents(spark, dir)).cache()
-      val docs = narrowOf(wide).cache()
-      val models = modelsOf(wide).cache()
-      models.collect()
-      wide.unpersist()
-      Seq(docs, models)
-    }
-    Corpus(docs, models)
   }
 
   /** Every model pair (model_a < model_b): the unrounded llmmap cosine

@@ -171,7 +171,7 @@ object BenchmarkEval {
        |  '  [llmmap] 相似度: ' || printf('%.4f', llmmap_similarity + 1e-9) || ' (阈值: 0.85)' || chr(10) ||
        |  '  [dli] 相似度: ' || printf('%.4f', dli_similarity + 1e-9) || ' (阈值: 0.8)' AS summary
        |FROM audit
-       |ORDER BY model_a, model_b""".stripMargin) { (spark, dir) =>
+       |ORDER BY model_a, model_b""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
     Style.auditDf(spark, dir)
       .select(col("model_a"), col("model_b"),
         concat(

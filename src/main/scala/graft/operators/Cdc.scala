@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -345,6 +345,7 @@ object Cdc {
       h.count() // materialize: queries time the serve path
       Seq(h)
     }.head
+  val Scd2History = Build("scd2_history", scd2History)
 
   /** Point-in-time read (time travel): the value every (user, type)
     * key held AS OF a cutoff instant, served from the STORED SCD2
@@ -386,7 +387,7 @@ object Cdc {
       |FROM pick p JOIN s ON s.user_id = p.user_id
       |  AND s.event_type = p.event_type AND s.ts_us = p.since_us
       |  AND s.event_id = p.last_id
-      |ORDER BY p.user_id, p.event_type""".stripMargin) { (spark, dir) =>
+      |ORDER BY p.user_id, p.event_type""".stripMargin, Scd2History) { (spark, dir) =>
     val h = scd2History(spark, dir)
     val cut = h.agg(min("valid_from_us").as("mn"), max("valid_from_us").as("mx"))
       .select(expr("(mn + mx) div 2").as("c")) // integer floor, like the oracle's //

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import graft.functions.{BpeExprs, Hashing}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -311,6 +311,7 @@ object Classifier {
       ww.count()
       Seq(ww)
     }.head
+  val ClfTrainedWeights = Build("clf_trained_weights", trainedWeights)
 
   /** clf_score_trained — inference under the STORED trained weights:
     * every document's integer margin Σ w(h mod D) from the broadcast
@@ -365,7 +366,7 @@ object Classifier {
          |  (COALESCE(m.margin, 0) > 0) = (b.y = 1) AS agree
          |FROM base b LEFT JOIN m ON m.doc_id = b.doc_id
          |ORDER BY b.doc_id""".stripMargin
-    }) { (spark, dir) =>
+    }, ClfTrainedWeights) { (spark, dir) =>
     val ww = trainedWeights(spark, dir)
     val docs = Tables.documents(spark, dir)
     val wh = Hashing.wordHashes(col("text"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,6 +70,7 @@ object Cluster {
       centFinal.count()
       Seq(centFinal)
     }.head
+  val KmCentroids = Build("km_centroids", centroids)
 
   /** The WITH-chain deriving s3 (every vector scored against the two-
     * iteration centroids) — shared by the topics, profile and
@@ -104,7 +105,7 @@ object Cluster {
        |FROM (SELECT vec_id, cid, ccos,
        |    row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn
        |  FROM s3) WHERE rn = 1
-       |ORDER BY vec_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY vec_id""".stripMargin, KmCentroids) { (spark, dir) =>
     assignment(spark, dir).orderBy("vec_id")
   }
 
@@ -130,7 +131,7 @@ object Cluster {
          |  round(1e-9 + count(*) / CAST((SELECT count(*) FROM t) AS DOUBLE) + 1e-9, 6) AS share
          |FROM t GROUP BY cluster
          |ORDER BY cluster""".stripMargin
-    }) { (spark, dir) =>
+    }, KmCentroids) { (spark, dir) =>
     // one corpus pass: the total is a global-frame window over the k
     // ALREADY-AGGREGATED rows (a second agg branch would recompute the
     // scoring subplan — a whole extra corpus scan; a window over k=8
@@ -176,7 +177,7 @@ object Cluster {
        |  round(1e-9 + avg((c1 - c2) / greatest(1 - c1, 1 - c2, 1e-12)) + 1e-9, 6) AS avg_sil,
        |  round(1e-9 + min((c1 - c2) / greatest(1 - c1, 1 - c2, 1e-12)) + 1e-9, 6) AS min_sil
        |FROM pv GROUP BY cluster
-       |ORDER BY cluster""".stripMargin) { (spark, dir) =>
+       |ORDER BY cluster""".stripMargin, KmCentroids) { (spark, dir) =>
     val scored = Ann.scoreAgainst(Ann.corpus(spark, dir), centroids(spark, dir))
     // ONE aggregation: all k cosines per vector, sorted (ccos DESC,
     // cid ASC) via the negated-struct trick — a[0] is the assignment,

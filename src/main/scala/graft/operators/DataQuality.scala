@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -366,6 +366,7 @@ object DataQuality {
       stats.count()
       Seq(stats)
     }.head
+  val TableStats = Build("table_stats", tableStats)
 
   /** Serve the stored statistics — the `ANALYZE TABLE` result a user
     * (or the planner) reads. The oracle recomputes every statistic
@@ -396,7 +397,7 @@ object DataQuality {
            |FROM m_$cn, h_$cn""".stripMargin
       }.mkString("\nUNION ALL\n")
       s"WITH\n$blocks\n$selects\nORDER BY table_name, column_name"
-    }) { (spark, dir) =>
+    }, TableStats) { (spark, dir) =>
     tableStats(spark, dir).orderBy("table_name", "column_name")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import graft.functions.Hashing._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -277,6 +277,7 @@ object Dedup {
       edges.count()
       Seq(edges)
     }.head
+  val DedupEdges = Build("dedup_edges", duplicateEdges)
 
   /** Release the block-storage partitions behind a localCheckpoint'd
     * frame. Dataset.unpersist only covers cache-manager entries; the
@@ -417,7 +418,7 @@ object Dedup {
         // it costs one aggregation + one broadcast build + one join
         // (three serial stage barriers) EVERY round to save rounds
         // only on chain-like graphs, and measured net-negative at all
-        // three scales (sf1 CCProbe: phash 4.4→3.7 s at 6→8 rounds,
+        // three scales (sf1, timed per consumer: phash 4.4→3.7 s at 6→8 rounds,
         // embed 4.3→3.1 s at 5→6, chain-300 4.2→3.9 s at 7→11; sf10
         // consumer family 38.4→32.9 s). Star rounds alone still
         // converge in O(log n): LS+SS composition roughly halves
@@ -482,7 +483,7 @@ object Dedup {
          |FROM (SELECT DISTINCT u, v FROM reach)
          |GROUP BY u
          |ORDER BY doc_id""".stripMargin
-    }) { (spark, dir) =>
+    }, DedupEdges) { (spark, dir) =>
     val (labels, _) = connectedComponents(duplicateEdges(spark, dir))
     // cluster_size from the converged labels; reach-based oracle
     // counts distinct reachable others + self — identical by
@@ -916,6 +917,7 @@ object Dedup {
     }
     (fs(0), fs(1))
   }
+  val FuzzyCorpusIndex = Build("fuzzy_corpus_index", fuzzyCorpusIndex)
 
   /** Incremental NEAR-DUP dedup: the fuzzy twin of dd_incremental.
     * A delta batch (doc_id % 10 ≥ 8 playing "today's ingest") is
@@ -967,7 +969,7 @@ object Dedup {
        |  CASE WHEN b.jac >= CAST(0.5 AS DOUBLE) THEN 'dup_near' ELSE 'new' END AS verdict
        |FROM (SELECT doc_id, source FROM documents WHERE doc_id % 10 >= 8) d
        |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)
-       |ORDER BY d.doc_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY d.doc_id""".stripMargin, FuzzyCorpusIndex) { (spark, dir) =>
     val (idxBands, idxShing) = fuzzyCorpusIndex(spark, dir)
     val delta = Tables.documents(spark, dir).filter(col("doc_id") % 10 >= 8)
     // map-only over the delta: signature + banding per arriving doc
@@ -1039,6 +1041,7 @@ object Dedup {
       edges.unpersist(blocking = false)
       Seq(out)
     }.head
+  val BaseClusterLabels = Build("base_cluster_labels", baseClusterLabels)
 
   /** dd_clusters_incremental — incremental CLUSTER maintenance, the
     * third leg of the continuous-ingest dedup story (dd_incremental
@@ -1091,7 +1094,7 @@ object Dedup {
          |LEFT JOIN comp ON comp.doc_id = d.doc_id
          |LEFT JOIN hc ON hc.canonical = comp.canonical
          |ORDER BY d.doc_id""".stripMargin
-    }) { (spark, dir) =>
+    }, FuzzyCorpusIndex, BaseClusterLabels) { (spark, dir) =>
     val (idxBands, idxShing) = fuzzyCorpusIndex(spark, dir)
     val baseLabels = baseClusterLabels(spark, dir)
     val delta = Tables.documents(spark, dir).filter(col("doc_id") % 10 >= 8)

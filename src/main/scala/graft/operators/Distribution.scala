@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -283,6 +283,7 @@ object Distribution {
       frame.count() // materialize: the query times the SERVE path
       Seq(frame)
     }.head
+  val OutlierKllSketches = Build("outlier_kll_sketches", outlierKllFrames)
 
   /** tx_outliers_sketch — the MAD gate served from the stored KLL
     * sketches: per source, the exact gate results (median, threshold,
@@ -317,7 +318,7 @@ object Distribution {
       |  CASE WHEN any_value(t.thresh) IS NULL THEN NULL ELSE TRUE END AS share_ok
       |FROM documents d JOIN mad t ON d.source = t.source
       |GROUP BY d.source
-      |ORDER BY d.source""".stripMargin) { (spark, dir) =>
+      |ORDER BY d.source""".stripMargin, OutlierKllSketches) { (spark, dir) =>
     import graft.functions.KllAgg.{kll_quantile, kll_rank}
     val frame = outlierKllFrames(spark, dir)
     val share = col("n_outliers") / col("n_docs").cast("double")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -939,6 +939,7 @@ object Events {
       perDay.count(); wauExact.count() // materialize: queries time the serve
       Seq(perDay, wauExact)
     }
+  val DailyUserSketches = Build("daily_user_sketches", dailyUserFrames)
 
   /** Daily / weekly active users + stickiness — the engagement
     * dashboard every event stream feeds. DAU is the per-day exact
@@ -964,7 +965,7 @@ object Events {
       |  round(1e-9 + dau.dau / CAST(wau.wau AS DOUBLE), 6) AS stickiness,
       |  TRUE AS wau_est_ok
       |FROM dau JOIN wau ON dau.day = wau.day
-      |ORDER BY dau.day""".stripMargin) { (spark, dir) =>
+      |ORDER BY dau.day""".stripMargin, DailyUserSketches) { (spark, dir) =>
     val Seq(perDay, wauExact) = dailyUserFrames(spark, dir)
     // serve: |days|×7 sketch rows union down to |days| estimates —
     // events are NOT rescanned by this query

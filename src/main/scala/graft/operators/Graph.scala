@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,6 +82,7 @@ object Graph {
       e2.count() // materialize eagerly: queries time the iterations
       Seq(e2)
     }.head
+  val PagerankEdges = Build("pagerank_edges", edgesWithDeg)
 
   /** The build-time node count (re-derived from the cached frame if
     * the memo was populated in another classloader's build).
@@ -235,7 +236,7 @@ object Graph {
     levels
   }
 
-  val pagerank = Q("gr_pagerank", oracleSql)((spark, dir) =>
+  val pagerank = Q("gr_pagerank", oracleSql, PagerankEdges)((spark, dir) =>
     pagerankWith(spark, dir, underCap(spark, dir)))
 
   /** gr_pagerank (likewise gr_ppr, gr_hits) on the broadcast branch
@@ -313,6 +314,11 @@ object Graph {
       edges.count()
       Seq(edges)
     }.head
+  val CoorderEdges40 = Build("coorder_edges_40", coOrderEdges(_, _, 40))
+  val CoorderEdges42 = Build("coorder_edges_42", coOrderEdges(_, _, 42))
+  val CoorderEdges43 = Build("coorder_edges_43", coOrderEdges(_, _, 43))
+  val CoorderEdges45 = Build("coorder_edges_45", coOrderEdges(_, _, 45))
+  val CoorderEdges49 = Build("coorder_edges_49", coOrderEdges(_, _, 49))
 
   val triangles = Q(
     "gr_triangles",
@@ -337,7 +343,8 @@ object Graph {
       |       (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) FROM deg) AS n_wedges,
       |       (SELECT n FROM tri) AS n_triangles,
       |       round(1e-9 + 3.0 * (SELECT n FROM tri) /
-      |             (SELECT CAST(sum(d * (d - 1) // 2) AS DOUBLE) FROM deg), 6) AS gcc""".stripMargin) { (spark, dir) =>
+      |             (SELECT CAST(sum(d * (d - 1) // 2) AS DOUBLE) FROM deg), 6) AS gcc""".stripMargin,
+    CoorderEdges40) { (spark, dir) =>
     val e0 = coOrderEdges(spark, dir, 40).filter(col("u") < col("v"))
     val deg = e0.select(col("u").as("node"))
       .union(e0.select(col("v").as("node")))
@@ -396,7 +403,7 @@ object Graph {
       |  CAST(count(*) FILTER (WHERE v != u) + 1 AS BIGINT) AS component_size
       |FROM (SELECT DISTINCT u, v FROM reach)
       |GROUP BY u
-      |ORDER BY node""".stripMargin) { (spark, dir) =>
+      |ORDER BY node""".stripMargin, CoorderEdges49) { (spark, dir) =>
     val edges = coOrderEdges(spark, dir, 49)
     val (labels, _) = Dedup.connectedComponents(edges)
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("component_size"))
@@ -459,7 +466,7 @@ object Graph {
          |JOIN a$CoreRounds x ON e.u = x.node JOIN a$CoreRounds y ON e.v = y.node
          |GROUP BY e.u
          |ORDER BY node""".stripMargin
-    })((spark, dir) => kcoreWith(spark, dir, CoreRounds))
+    }, CoorderEdges45)((spark, dir) => kcoreWith(spark, dir, CoreRounds))
 
   /** gr_kcore with the round cap the caller picks; the query passes
     * [[CoreRounds]].
@@ -548,7 +555,7 @@ object Graph {
        |)
        |SELECT node, CAST(min(dist) AS INT) AS dist
        |FROM walk GROUP BY node
-       |ORDER BY node""".stripMargin)((spark, dir) => bfsWith(spark, dir, true))
+       |ORDER BY node""".stripMargin, CoorderEdges42)((spark, dir) => bfsWith(spark, dir, true))
 
   /** gr_bfs on the broadcast branch the caller picks; the query
     * broadcasts.
@@ -596,7 +603,7 @@ object Graph {
        |      log2(CAST(degree AS DOUBLE))), 6) AS fit_r2
        |  FROM h)
        |SELECT degree, n_nodes, alpha, fit_r2 FROM h CROSS JOIN fit
-       |ORDER BY degree""".stripMargin) { (spark, dir) =>
+       |ORDER BY degree""".stripMargin, PagerankEdges) { (spark, dir) =>
     val h = edgesWithDeg(spark, dir)
       .select(col("src"), col("outdeg")).distinct()
       .groupBy(col("outdeg").as("degree"))
@@ -653,7 +660,7 @@ object Graph {
          |  da AS deg_a, db AS deg_b, jaccard
          |FROM r WHERE rank <= $LinkTopK
          |ORDER BY rank""".stripMargin
-    }) { (spark, dir) =>
+    }, CoorderEdges43) { (spark, dir) =>
     val edges = coOrderEdges(spark, dir, LinkQty)
     val e0 = edges.filter(col("u") < col("v"))
     val deg = edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
@@ -725,7 +732,7 @@ object Graph {
          |$rounds
          |SELECT label, CAST(count(*) AS BIGINT) AS n_members
          |FROM r$LpaRounds GROUP BY label ORDER BY label""".stripMargin
-    }) { (spark, dir) =>
+    }, PagerankEdges) { (spark, dir) =>
     val edges = edgesWithDeg(spark, dir).select("src", "dst")
     // labels ≤ |V| rows of two longs: under the pagerank broadcast
     // node cap the per-round join replicates labels to the cached
@@ -788,7 +795,8 @@ object Graph {
        |SELECT CAST(count(*) AS BIGINT) AS n_edges,
        |  round(1e-9 + avg(a.d), 4) AS avg_src_deg,
        |  round(1e-9 + corr(a.d, b.d), 6) AS assortativity
-       |FROM edges e JOIN deg a ON e.src = a.v JOIN deg b ON e.dst = b.v""".stripMargin) {
+       |FROM edges e JOIN deg a ON e.src = a.v JOIN deg b ON e.dst = b.v""".stripMargin,
+    PagerankEdges) {
     (spark, dir) =>
     val e2 = edgesWithDeg(spark, dir)
     val degDst = e2.groupBy(col("dst")).agg(count(lit(1)).as("d_dst"))
@@ -828,7 +836,7 @@ object Graph {
        |  CAST(count(*) - 1 AS BIGINT) AS n_reached,
        |  round(1e-9 + sum(CASE WHEN dist > 0 THEN 1.0 / dist ELSE 0 END), 6) AS harmonic,
        |  round(1e-9 + avg(CASE WHEN dist > 0 THEN CAST(dist AS DOUBLE) END), 4) AS avg_dist
-       |FROM best GROUP BY seed ORDER BY seed""".stripMargin)((spark, dir) =>
+       |FROM best GROUP BY seed ORDER BY seed""".stripMargin, PagerankEdges)((spark, dir) =>
     closenessWith(spark, dir, walkBroadcasts(spark, dir, 2 * ClosenessSeeds)))
 
   /** gr_closeness on the broadcast branch the caller picks; the query
@@ -924,7 +932,7 @@ object Graph {
          |GROUP BY node
          |HAVING round(1e-9 + sum(delta), 6) > 0
          |ORDER BY node""".stripMargin
-    })((spark, dir) =>
+    }, PagerankEdges)((spark, dir) =>
       betweennessWith(spark, dir, walkBroadcasts(spark, dir, 2 * ClosenessSeeds + 1)))
 
   /** gr_betweenness on the broadcast branch the caller picks; the query
@@ -1049,7 +1057,7 @@ object Graph {
          |SELECT node, round(1e-9 + rank, 6) AS rank
          |FROM r$PprIters
          |ORDER BY node""".stripMargin
-    })((spark, dir) => pprWith(spark, dir, underCap(spark, dir)))
+    }, PagerankEdges)((spark, dir) => pprWith(spark, dir, underCap(spark, dir)))
 
   private[graft] def pprWith(spark: SparkSession, dir: String, bcast: Boolean): DataFrame = {
     val e2 = edgesWithDeg(spark, dir)
@@ -1109,7 +1117,7 @@ object Graph {
          |  UNION ALL
          |  SELECT node, 'authority' AS kind, x FROM a$HitsIters)
          |ORDER BY kind, node""".stripMargin
-    })((spark, dir) => hitsWith(spark, dir, underCap(spark, dir)))
+    }, PagerankEdges)((spark, dir) => hitsWith(spark, dir, underCap(spark, dir)))
 
   private[graft] def hitsWith(spark: SparkSession, dir: String, bcast: Boolean): DataFrame = {
     val e2 = edgesWithDeg(spark, dir)
@@ -1176,6 +1184,7 @@ object Graph {
       if (bcast) Dedup.releaseLocalCheckpoint(penult)
       Seq(baseE2, basePairs, baseDeg, baseRanks)
     }
+  val PagerankIncrBase = Build("pagerank_incr_base", prIncrFrames)
 
   /** The incremental oracle replays the full algebra: 10 base
     * iterations, then the delta merge and [[WarmIters]] warm rounds
@@ -1260,7 +1269,8 @@ object Graph {
     * PrIncrSpec pins that bound against a 60-round cold run.
     * The ORACLE is exact — DuckDB replays the identical algebra.
     */
-  val pagerankIncremental = Q("gr_pagerank_incremental", prIncrOracle) { (spark, dir) =>
+  val pagerankIncremental = Q("gr_pagerank_incremental", prIncrOracle,
+      PagerankIncrBase) { (spark, dir) =>
     val Seq(baseE2, basePairs, baseDeg, baseRanks) = prIncrFrames(spark, dir)
     val bcast = Option(vCounts.get((spark, s"prIncr:$dir")))
       .map(_.longValue()).getOrElse(baseDeg.count()) <= BroadcastNodeCap

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,6 +73,7 @@ object Layout {
       table, "ship_year", dir)
     table
   }
+  val PrunedLayout = Build("pruned_layout", ensureLineitemByYear)
 
   /** Registered query exercising the pruned path end-to-end: the 1996
     * pricing summary read from the year-partitioned layout. The
@@ -90,7 +91,7 @@ object Layout {
       |FROM lineitem
       |WHERE year(l_shipdate) = 1996
       |GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin) { (spark, dir) =>
+      |ORDER BY l_returnflag""".stripMargin, PrunedLayout) { (spark, dir) =>
     val table = ensureLineitemByYear(spark, dir)
     spark.table(table)
       .filter(col("ship_year") === 1996)
@@ -129,7 +130,7 @@ object Layout {
       |  SELECT DISTINCT year(o_orderdate) FROM orders
       |  WHERE o_orderdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31')
       |GROUP BY 1
-      |ORDER BY ship_year""".stripMargin) { (spark, dir) =>
+      |ORDER BY ship_year""".stripMargin, PrunedLayout) { (spark, dir) =>
     val table = ensureLineitemByYear(spark, dir)
     // distinct BEFORE the join: the semi-join build side and the DPP
     // subquery both see ≤|years| rows instead of every filtered order
@@ -259,6 +260,7 @@ object Layout {
       b.count()
       Seq(b)
     }.head
+  val ZorderBounds = Build("zorder_bounds", zorderBounds)
 
   /** The one-time z-order LAYOUT build for [[zorderRead]]: lineitem's
     * pruned projection written hive-partitioned by the 6-bit z bucket
@@ -281,6 +283,7 @@ object Layout {
     }, table, "zbucket", dir)
     table
   }
+  val ZorderLayout = Build("zorder_layout", ensureLineitemZorder)
 
   /** The part key [[zorderRead]] probes — exists at every SF (part
     * keys are dense from 1; the smallest corpus has 200).
@@ -337,7 +340,7 @@ object Layout {
        |FROM lineitem
        |WHERE l_partkey = $ZReadKey
        |GROUP BY l_suppkey
-       |ORDER BY l_suppkey""".stripMargin) { (spark, dir) =>
+       |ORDER BY l_suppkey""".stripMargin, ZorderLayout, ZorderBounds) { (spark, dir) =>
     zorderStrip(spark, dir)
       .groupBy("l_suppkey")
       .agg(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.functions._
 
 /** Re-aggregation patterns — the two ways a 100 TB warehouse avoids
@@ -57,6 +57,7 @@ object Maintain {
       perSource.count(); globalExact.count() // materialize: queries time the SERVE path
       Seq(perSource, globalExact)
     }
+  val HllSketches = Build("hll_sketches", sketchFrames)
 
   val sketchUnion = Q(
     "q19_sketch_union",
@@ -67,7 +68,7 @@ object Maintain {
       |  SELECT 'ALL' AS source, CAST(count(DISTINCT sha256(text)) AS BIGINT) AS n_exact
       |  FROM documents
       |)
-      |ORDER BY source""".stripMargin) { (spark, dir) =>
+      |ORDER BY source""".stripMargin, HllSketches) { (spark, dir) =>
     val Seq(perSource, globalExact) = sketchFrames(spark, dir)
     // serve path: per-source rows read straight from the stored
     // sketch table; the ALL row unions the |sources| sketch rows —
@@ -153,6 +154,7 @@ object Maintain {
       perGroup.count(); globalBrackets.count() // materialize: q26 times the SERVE path
       Seq(perGroup, globalBrackets)
     }
+  val KllSketches = Build("kll_sketches", kllFrames)
 
   /** Mergeable quantile serving: per-group medians/p95s read straight
     * from the stored KLL sketch table, the ALL row from a union of
@@ -183,7 +185,7 @@ object Maintain {
       |    round(1e-9 + quantile_cont(l_extendedprice, 0.95), 2) AS p95
       |  FROM lineitem
       |)
-      |ORDER BY grp""".stripMargin) { (spark, dir) =>
+      |ORDER BY grp""".stripMargin, KllSketches) { (spark, dir) =>
     import graft.functions.KllAgg.{kll_merge_agg, kll_quantile}
     val Seq(perGroup, globalBrackets) = kllFrames(spark, dir)
     val exCols = Seq("ex45", "ex50", "ex55", "ex90", "ex95", "ex99").map(col)
@@ -231,6 +233,7 @@ object Maintain {
       sketches.count(); exact.count()
       Seq(sketches, exact)
     }
+  val ThetaSketches = Build("theta_sketches", thetaFrames)
 
   /** Sketch-served cohort set operations — the Theta member of the
     * sketch trio (HLL distincts q19, KLL quantiles q26): how many
@@ -258,7 +261,7 @@ object Maintain {
       |UNION ALL
       |SELECT 'only_1997', CAST(count(*) AS BIGINT), TRUE
       |  FROM (SELECT * FROM b EXCEPT SELECT * FROM a)
-      |ORDER BY set_op""".stripMargin) { (spark, dir) =>
+      |ORDER BY set_op""".stripMargin, ThetaSketches) { (spark, dir) =>
     import graft.functions.ThetaAgg._
     val Seq(sketches, exact) = thetaFrames(spark, dir)
     val est = sketches.select(
@@ -313,6 +316,7 @@ object Maintain {
       perSource.count(); exactTop.count() // materialize: q29 times the SERVE path
       Seq(perSource, exactTop)
     }
+  val FreqSketches = Build("freq_sketches", freqFrames)
 
   /** Shared with Streaming.freqSketch (and StreamingSpec's merge)
     * so the streamed sketch can never silently diverge from the
@@ -346,7 +350,7 @@ object Maintain {
          |    CAST(row_number() OVER (ORDER BY tf DESC, h) AS BIGINT) AS rank FROM v)
          |SELECT rank, h, tf, TRUE AS est_ok FROM r WHERE rank <= $freqTopK
          |ORDER BY rank""".stripMargin
-    }) { (spark, dir) =>
+    }, FreqSketches) { (spark, dir) =>
     import graft.functions.FreqAgg._
     val Seq(perSource, exactTop) = freqFrames(spark, dir)
     val merged = perSource.agg(freq_merge_agg(col("sk"), freqMapSize).as("sk"))
@@ -389,6 +393,7 @@ object Maintain {
       sketches.count(); exact.count() // materialize: q30 times the SERVE path
       Seq(sketches, exact)
     }
+  val KllYearSketches = Build("kll_year_sketches", kllYearFrames)
 
   /** Sketch-served DISTRIBUTION DRIFT — the two-sample application
     * the sketch quartet exists for (ma_drift_psi watches categorical
@@ -420,7 +425,7 @@ object Maintain {
        |  TRUE AS est_ok_a, TRUE AS est_ok_b
        |FROM (SELECT xv, fr AS fa FROM f WHERE yr = $DriftYearA)
        |JOIN (SELECT xv, fr AS fb FROM f WHERE yr = $DriftYearB) USING (xv)
-       |ORDER BY x""".stripMargin) { (spark, dir) =>
+       |ORDER BY x""".stripMargin, KllYearSketches) { (spark, dir) =>
     import graft.functions.KllAgg.kll_rank
     val Seq(sketches, exact) = kllYearFrames(spark, dir)
     val fa = exact.filter(col("yr") === DriftYearA).select(col("xv"), col("fr").as("fa"))
@@ -466,6 +471,7 @@ object Maintain {
       tm.unpersist(false)
       Seq(perType, inter)
     }
+  val AudienceSketches = Build("audience_sketches", audienceFrames)
 
   /** Audience overlap by inclusion–exclusion on stored HLL sketches:
     * |A∩B| ≈ est(A) + est(B) − est(A∪B), the standard mergeable-
@@ -491,7 +497,7 @@ object Maintain {
       |JOIN n na ON na.event_type = a.event_type
       |JOIN n nb ON nb.event_type = b.event_type
       |GROUP BY a.event_type, b.event_type, na.n, nb.n
-      |ORDER BY type_a, type_b""".stripMargin) { (spark, dir) =>
+      |ORDER BY type_a, type_b""".stripMargin, AudienceSketches) { (spark, dir) =>
     val Seq(perType, inter) = audienceFrames(spark, dir)
     val a = perType.select(col("event_type").as("type_a"),
       col("sk").as("sk_a"), col("n_exact").as("n_a"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -390,6 +390,7 @@ object Multimodal {
       ph.count()
       Seq(ph)
     }.head
+  val PhashTable = Build("phash_table", phashTable)
 
   /** One-time standing perceptual-hash chunk index of the corpus —
     * the STATIC side of streaming image dedup (Streaming.phashDedup):
@@ -495,9 +496,28 @@ object Multimodal {
        |  FROM chunked a JOIN chunked b
        |    ON a.chunk = b.chunk AND a.key = b.key AND a.doc_id < b.doc_id
        |) WHERE hamming <= $PhashHammingMax
-       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_a, doc_b""".stripMargin, PhashTable) { (spark, dir) =>
     phashPairsFromTable(spark, dir).orderBy("doc_a", "doc_b")
   }
+
+  /** Standing chunk index over the CORPUS SPLIT only (doc_id % 10 < 8,
+    * corpus-side cap) — the delta-probe side of mm_phash_incremental;
+    * phashChunkIndex (whole corpus) stays the streaming replay's
+    * static side.
+    */
+  private[graft] def phashCorpusChunkIndex(
+      spark: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame =
+    graft.SessionMemo.frames(spark, s"multimodal.phashCorpusChunkIndex:$dir") {
+      val ph = phashTable(spark, dir).filter(col("doc_id") % 10 < 8)
+      val idx = Dedup.dropOversizedBuckets(phashChunks(ph), Seq("chunk", "key"), Dedup.BucketCap)
+        .select(col("chunk"), col("key"),
+          col("doc_id").as("corpus_id"), col("dhash").as("h_c"))
+        .persist()
+      idx.count()
+      Seq(idx)
+    }.head
+  val PhashCorpusIndex = Build("phash_corpus_index", phashCorpusChunkIndex)
 
   /** mm_phash_incremental — the multimodal member of the incremental
     * dedup trio (dd_incremental exact, dd_minhash_incremental fuzzy
@@ -536,7 +556,7 @@ object Multimodal {
        |  CASE WHEN b.corpus_id IS NOT NULL THEN 'dup_image' ELSE 'new' END AS verdict
        |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 >= 8) d
        |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)
-       |ORDER BY d.doc_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY d.doc_id""".stripMargin, PhashTable, PhashCorpusIndex) { (spark, dir) =>
     val idx = phashCorpusChunkIndex(spark, dir)
     // delta hashes read from the stored column, not recomputed — at
     // ingest the dHash arrives with the batch; here the table memo IS
@@ -558,24 +578,6 @@ object Multimodal {
         when(col("best_corpus_id").isNotNull, "dup_image").otherwise("new").as("verdict"))
       .orderBy("doc_id")
   }
-
-  /** Standing chunk index over the CORPUS SPLIT only (doc_id % 10 < 8,
-    * corpus-side cap) — the delta-probe side of mm_phash_incremental;
-    * phashChunkIndex (whole corpus) stays the streaming replay's
-    * static side.
-    */
-  private[graft] def phashCorpusChunkIndex(
-      spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.frames(spark, s"multimodal.phashCorpusChunkIndex:$dir") {
-      val ph = phashTable(spark, dir).filter(col("doc_id") % 10 < 8)
-      val idx = Dedup.dropOversizedBuckets(phashChunks(ph), Seq("chunk", "key"), Dedup.BucketCap)
-        .select(col("chunk"), col("key"),
-          col("doc_id").as("corpus_id"), col("dhash").as("h_c"))
-        .persist()
-      idx.count()
-      Seq(idx)
-    }.head
 
   /** Energy-gate segmentation — the voice-activity-detection (VAD)
     * shape of an audio pipeline: threshold each sample into
@@ -753,6 +755,7 @@ object Multimodal {
       selfConnected.count()
       Seq(cross, selfConnected)
     }
+  val PhashRepEdges = Build("phash_rep_edges", phashRepEdges)
 
   val phashClusters = Q(
     "mm_phash_clusters", {
@@ -773,7 +776,7 @@ object Multimodal {
          |FROM (SELECT DISTINCT u, v FROM reach)
          |GROUP BY u
          |ORDER BY doc_id""".stripMargin
-    }) { (spark, dir) =>
+    }, PhashTable, PhashRepEdges) { (spark, dir) =>
     // HASH-LEVEL CONTRACTION — exactly the doc-level semantics, on a
     // graph |distinct hashes| big instead of |pairs| big: docs sharing
     // a dhash have IDENTICAL bucket membership (the 3 chunk keys are

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import graft.functions.{Hashing, TopKAgg}
 import org.apache.spark.sql.functions._
 
@@ -522,6 +522,7 @@ object Pipeline {
     }
     fs.head.head.getAs[Array[Byte]](0)
   }
+  val EvalBloom = Build("eval_bloom", evalBloom)
 
   /** Bloom-accelerated decontamination: IDENTICAL output to
     * pipe_decontaminate (same oracle SQL), different plan. The eval
@@ -539,7 +540,7 @@ object Pipeline {
     * itself rides the task binary instead of a shuffle.
     */
   val deconBloom = Q(
-    "pipe_decon_bloom", decontaminate.oracle.get) { (spark, dir) =>
+    "pipe_decon_bloom", decontaminate.oracle.get, EvalBloom) { (spark, dir) =>
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graftbridge.Bridge
     import org.apache.spark.sql.types.BinaryType
@@ -1008,7 +1009,7 @@ object Pipeline {
   val e2e = mkE2e("pipe_e2e", sem = false)
 
   /** The funnel plus the SemDeDup stage (seven stages). */
-  val e2eSem = mkE2e("pipe_e2e_sem", sem = true)
+  val e2eSem = mkE2e("pipe_e2e_sem", sem = true).copy(builds = Seq(Ann.EmbedClusterLabels))
 
   // ═══════════════ chunking (embedding / RAG prep) ═══════════════
 
@@ -1254,7 +1255,7 @@ object Pipeline {
          |FROM assigned
          |GROUP BY split
          |ORDER BY split""".stripMargin
-    }) { (spark, dir) =>
+    }, Dedup.DedupEdges) { (spark, dir) =>
     val (labels, _) = Dedup.connectedComponents(Dedup.duplicateEdges(spark, dir))
     val canon = labels.select(col("doc").as("doc_id"), col("label").as("cl"))
     val d = Tables.documents(spark, dir)

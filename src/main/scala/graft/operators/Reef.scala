@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, SessionMemo, Tables}
+import graft.{Build, Q, SessionMemo, Tables}
 import graft.functions.HashExprs.dot_product
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -89,6 +89,7 @@ object Reef {
         .cache()
       Seq(centered, pairs)
     }.last
+  val ReefCka = Build("reef_cka", ckaDf)
 
   private val ckaBodySql: String =
     s"""WITH ranked AS (
@@ -127,7 +128,7 @@ object Reef {
   val cka = Q(
     "ma_reef_cka",
     s"""$ckaBodySql
-       |ORDER BY label_a, label_b""".stripMargin) { (spark, dir) =>
+       |ORDER BY label_a, label_b""".stripMargin, ReefCka) { (spark, dir) =>
     ckaDf(spark, dir).orderBy("label_a", "label_b")
   }
 
@@ -146,7 +147,7 @@ object Reef {
        |  round(1e-9 + least(abs(avg(cka) - CAST(0.85 AS DOUBLE)) / CAST(0.15 AS DOUBLE),
        |    CAST(1 AS DOUBLE)), 6) AS confidence
        |FROM cka
-       |WHERE label_b = label_a + 5 AND label_a < 5""".stripMargin) { (spark, dir) =>
+       |WHERE label_b = label_a + 5 AND label_a < 5""".stripMargin, ReefCka) { (spark, dir) =>
     ckaDf(spark, dir)
       .filter(col("label_b") === col("label_a") + 5 && col("label_a") < 5)
       .agg(

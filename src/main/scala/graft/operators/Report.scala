@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Q
+import graft.{Build, Q}
 import graft.functions.AuditDefs._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -84,6 +84,71 @@ object Report {
     a.join(b, col("model_a") < col("model_b"))
   }
 
+  /** ma_report's per-pair frame: fingerprints, verdicts, probe
+    * consistency and the detected-style distribution joined, with the
+    * report's evidence flags, as a |pairs|-row barrier.
+    * Memoized per (session, dir): repeat invocations reuse ONE
+    * materialized barrier instead of leaving a fresh checkpoint-block
+    * set behind each time.
+    */
+  private[graft] def flags(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.frames(spark, s"report.flags:$dir") {
+      // per-pair detected-style distribution, most_common order
+      val det = Style.detectedDf(spark, dir)
+      val pairDet = det.select(col("source").as("model_a"), col("probe_idx"))
+        .join(det.select(col("source").as("model_b"), col("family").as("fb"), col("probe_idx")),
+          Seq("probe_idx"))
+        .filter(col("model_a") < col("model_b"))
+      val wp = Window.partitionBy("model_a", "model_b")
+      val dist = pairDet.groupBy("model_a", "model_b", "fb")
+        .agg(count(lit(1)).as("cnt"), min("probe_idx").as("first_idx"))
+        .withColumn("line", concat(col("fb"), lit(":"), format_string("%d", col("cnt")), lit(":"),
+          format_string("%.0f%%",
+            col("cnt") * lit(100d) / sum("cnt").over(wp) + lit(1e-9))))
+        .withColumn("s", struct((-col("cnt")).as("nc"), col("first_idx").as("fi"), col("line").as("line")))
+        .groupBy("model_a", "model_b")
+        .agg(array_join(transform(array_sort(collect_list(col("s"))), x => x.getField("line")), "; ")
+          .as("dist_str"))
+
+      val audit = Style.auditDf(spark, dir)
+        .select("model_a", "model_b", "llmmap_similarity", "dli_similarity", "verdict", "confidence")
+      val pc = Style.probeConsistency.fn(spark, dir)
+        .select("model_a", "model_b", "n_probes", "n_consistent")
+
+      Seq(pairsDf(spark, dir)
+        .join(audit, Seq("model_a", "model_b"))
+        .join(pc, Seq("model_a", "model_b"))
+        .join(dist, Seq("model_a", "model_b"))
+        .withColumn("max_sd", greatest(
+          abs(col("a_style_helpful") - col("b_style_helpful")),
+          abs(col("a_style_hedging") - col("b_style_hedging")),
+          abs(col("a_style_structured") - col("b_style_structured"))))
+        .withColumn("vocab_diff", abs(col("a_avg_unique_word_ratio") - col("b_avg_unique_word_ratio")))
+        .withColumn("punct_diff", abs(col("a_avg_punctuation_ratio") - col("b_avg_punctuation_ratio")))
+        .withColumn("pct", col("n_consistent") * lit(100d) / col("n_probes"))
+        .withColumn("chars_diff", abs(col("a_avg_length_chars") - col("b_avg_length_chars")))
+        .withColumn("sent_diff",
+          abs(col("a_avg_avg_sentence_length") - col("b_avg_avg_sentence_length")))
+        .withColumn("e1", when(col("llmmap_similarity") > 0.85, 1).otherwise(0))
+        .withColumn("e2", when(col("max_sd") < 0.005, 1).otherwise(0))
+        .withColumn("e4", when(col("vocab_diff") < 0.05 && col("punct_diff") < 0.01, 1).otherwise(0))
+        .withColumn("e5", when(col("pct") > 50d, 1).otherwise(0))
+        .withColumn("d1", when(col("chars_diff") > 200d, 1).otherwise(0))
+        .withColumn("d2", when(col("sent_diff") > 3d, 1).otherwise(0))
+        .withColumn("votes",
+          when(col("llmmap_similarity") >= 0.85, 1).otherwise(0)
+            + when(col("dli_similarity") >= 0.80, 1).otherwise(0))
+        // |pairs|-row barrier: ma_report's projection over it is a huge
+        // expression tree over this tiny frame, and every ACTION on the
+        // un-truncated plan re-walks the full upstream (fingerprint +
+        // audit + detected pipelines) through analysis, cache lookup and
+        // optimization — measured 1.7 s per count at sf0.1 with all
+        // leaf caches warm. The eager checkpoint pays the upstream once
+        // and leaves a 190-row LogicalRDD under the projection.
+        .localCheckpoint(true))
+    }.head
+  val Flags = Build("report_flags", flags)
+
   // ═══════════════ ma_report_features ═══════════════
 
   val reportFeatures = Q(
@@ -102,7 +167,7 @@ object Report {
          |  $unions
          |)
          |ORDER BY model_a, model_b, feature""".stripMargin
-    }) { (spark, dir) =>
+    }, Audit.AuditCaches) { (spark, dir) =>
     val entries = displayFeatures.map { case (k, label, _) =>
       val diff = round(lit(1e-9) + abs(col(s"a_$k") - col(s"b_$k")), 6)
       struct(lit(k).as("feature"), lit(label).as("label"),
@@ -230,68 +295,10 @@ object Report {
          |      || ' 之间是否存在蒸馏关系。' END) AS report
          |FROM flags
          |ORDER BY model_a, model_b""".stripMargin
-    }) { (spark, dir) =>
+    }, Audit.AuditCaches, Flags) { (spark, dir) =>
     val nl = lit("\n")
 
-    // per-pair detected-style distribution, most_common order
-    val det = Style.detectedDf(spark, dir)
-    val pairDet = det.select(col("source").as("model_a"), col("probe_idx"))
-      .join(det.select(col("source").as("model_b"), col("family").as("fb"), col("probe_idx")),
-        Seq("probe_idx"))
-      .filter(col("model_a") < col("model_b"))
-    val wp = Window.partitionBy("model_a", "model_b")
-    val dist = pairDet.groupBy("model_a", "model_b", "fb")
-      .agg(count(lit(1)).as("cnt"), min("probe_idx").as("first_idx"))
-      .withColumn("line", concat(col("fb"), lit(":"), format_string("%d", col("cnt")), lit(":"),
-        format_string("%.0f%%",
-          col("cnt") * lit(100d) / sum("cnt").over(wp) + lit(1e-9))))
-      .withColumn("s", struct((-col("cnt")).as("nc"), col("first_idx").as("fi"), col("line").as("line")))
-      .groupBy("model_a", "model_b")
-      .agg(array_join(transform(array_sort(collect_list(col("s"))), x => x.getField("line")), "; ")
-        .as("dist_str"))
-
-    val audit = Style.auditDf(spark, dir)
-      .select("model_a", "model_b", "llmmap_similarity", "dli_similarity", "verdict", "confidence")
-    val pc = Style.probeConsistency.fn(spark, dir)
-      .select("model_a", "model_b", "n_probes", "n_consistent")
-
-    // Memoized per (session, dir): repeat invocations reuse ONE
-    // materialized barrier instead of leaving a fresh checkpoint-block
-    // set behind each time (the old per-invocation checkpoint could
-    // never be released because the returned frame depended on it).
-    val joined = graft.SessionMemo.frames(spark, s"report.flags:$dir") {
-      Seq(pairsDf(spark, dir)
-      .join(audit, Seq("model_a", "model_b"))
-      .join(pc, Seq("model_a", "model_b"))
-      .join(dist, Seq("model_a", "model_b"))
-      .withColumn("max_sd", greatest(
-        abs(col("a_style_helpful") - col("b_style_helpful")),
-        abs(col("a_style_hedging") - col("b_style_hedging")),
-        abs(col("a_style_structured") - col("b_style_structured"))))
-      .withColumn("vocab_diff", abs(col("a_avg_unique_word_ratio") - col("b_avg_unique_word_ratio")))
-      .withColumn("punct_diff", abs(col("a_avg_punctuation_ratio") - col("b_avg_punctuation_ratio")))
-      .withColumn("pct", col("n_consistent") * lit(100d) / col("n_probes"))
-      .withColumn("chars_diff", abs(col("a_avg_length_chars") - col("b_avg_length_chars")))
-      .withColumn("sent_diff",
-        abs(col("a_avg_avg_sentence_length") - col("b_avg_avg_sentence_length")))
-      .withColumn("e1", when(col("llmmap_similarity") > 0.85, 1).otherwise(0))
-      .withColumn("e2", when(col("max_sd") < 0.005, 1).otherwise(0))
-      .withColumn("e4", when(col("vocab_diff") < 0.05 && col("punct_diff") < 0.01, 1).otherwise(0))
-      .withColumn("e5", when(col("pct") > 50d, 1).otherwise(0))
-      .withColumn("d1", when(col("chars_diff") > 200d, 1).otherwise(0))
-      .withColumn("d2", when(col("sent_diff") > 3d, 1).otherwise(0))
-      .withColumn("votes",
-        when(col("llmmap_similarity") >= 0.85, 1).otherwise(0)
-          + when(col("dli_similarity") >= 0.80, 1).otherwise(0))
-      // |pairs|-row barrier: the report projection below is a huge
-      // expression tree over this tiny frame, and every ACTION on the
-      // un-truncated plan re-walks the full upstream (fingerprint +
-      // audit + detected pipelines) through analysis, cache lookup and
-      // optimization — measured 1.7 s per count at sf0.1 with all
-      // leaf caches warm. The eager checkpoint pays the upstream once
-      // and leaves a 190-row LogicalRDD under the projection.
-      .localCheckpoint(true))
-    }.head
+    val joined = flags(spark, dir)
 
     val llm4 = format_string("%.4f", col("llmmap_similarity") + lit(1e-9))
     val featLines = displayFeatures.map { case (k, label, fmt) =>
@@ -406,7 +413,7 @@ object Report {
          |  '"}') AS report_json
          |FROM audit
          |ORDER BY model_a, model_b""".stripMargin
-    }) { (spark, dir) =>
+    }, Audit.AuditCaches) { (spark, dir) =>
     def f4(c: Column): Column = format_string("%.4f", c + lit(1e-9))
     val summary = concat(
       lit("审计对象: "), col("model_a"), lit(" vs "), col("model_b"),

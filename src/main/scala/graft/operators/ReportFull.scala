@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Q
+import graft.{Build, Q}
 import graft.functions.AuditDefs._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -182,6 +182,83 @@ object ReportFull {
         s => s.getField("line")), "\n")
 
   // ═══════════════ ma_report_full ═══════════════
+
+  /** ma_report_full's per-pair frame: fingerprints, verdicts, the
+    * probe table and the style distribution joined, with the report's
+    * evidence flags, as a |pairs|-row barrier memoized per (session,
+    * dir) — the same one-materialization discipline as
+    * [[Report.flags]].
+    */
+  private[graft] def flags(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.frames(spark, s"reportfull.flags:$dir") {
+      val audit = Style.auditDf(spark, dir)
+        .select("model_a", "model_b", "llmmap_similarity", "dli_similarity", "verdict", "confidence")
+      val base = Report.pairsDf(spark, dir).join(audit, Seq("model_a", "model_b"))
+      val pairKeys = base.select("model_a", "model_b")
+      val probes = probeRowsDf(spark, dir, pairKeys)
+
+      val probeLine = concat(
+        lit("| "), format_string("%d", col("idx")), lit(" | "), col("cat_label"),
+        lit(" | "), col("probe_id"), lit(" | "),
+        when(col("s_teach"), concat(lit("**"), col("sfam"), lit("**"))).otherwise(col("sfam")),
+        lit(" | "),
+        when(col("t_teach"), concat(lit("**"), col("tfam"), lit("**"))).otherwise(col("tfam")),
+        lit(" | "), when(col("consistent"), "✓").otherwise(""), lit(" |"))
+      val pt = probes.groupBy("model_a", "model_b").agg(
+        aggLines(Seq(col("idx").as("i")), probeLine).as("probe_table"),
+        count(when(col("consistent"), 1)).as("n_consistent"),
+        count(when(col("s_teach"), 1)).as("ts_count"),
+        array_join(transform(
+          array_sort(collect_list(when(col("s_teach"),
+            struct(col("idx").as("i"), col("probe_id").as("p"))))),
+          s => s.getField("p")), ", ").as("ts_ids"))
+
+      val pctOf = (c: Column) => c * lit(100d) / ReportProbes
+      val dist0 = probes.groupBy("model_a", "model_b", "sfam")
+        .agg(count(lit(1)).as("cnt"), min("idx").as("fi"), max(col("s_teach")).as("teach"))
+      val distLine = when(col("teach"), concat(
+        lit("| **"), col("sfam"), lit("** | **"), format_string("%d", col("cnt")),
+        lit("** | **"), format_string("%.0f%%", pctOf(col("cnt")) + 1e-9), lit("** |")))
+        .otherwise(concat(
+          lit("| "), col("sfam"), lit(" | "), format_string("%d", col("cnt")),
+          lit(" | "), format_string("%.0f%%", pctOf(col("cnt")) + 1e-9), lit(" |")))
+      val dist = dist0.groupBy("model_a", "model_b").agg(
+        aggLines(Seq((-col("cnt")).as("nc"), col("fi").as("fi")), distLine).as("dist_table"))
+
+      Seq(base
+        .join(pt, Seq("model_a", "model_b"))
+        .join(dist, Seq("model_a", "model_b"))
+        .withColumn("max_sd", greatest(
+          abs(col("a_style_helpful") - col("b_style_helpful")),
+          abs(col("a_style_hedging") - col("b_style_hedging")),
+          abs(col("a_style_structured") - col("b_style_structured"))))
+        .withColumn("vocab_diff", abs(col("a_avg_unique_word_ratio") - col("b_avg_unique_word_ratio")))
+        .withColumn("punct_diff", abs(col("a_avg_punctuation_ratio") - col("b_avg_punctuation_ratio")))
+        .withColumn("pct", pctOf(col("n_consistent")))
+        .withColumn("ts_pct", pctOf(col("ts_count")))
+        .withColumn("chars_diff", abs(col("a_avg_length_chars") - col("b_avg_length_chars")))
+        .withColumn("sent_diff",
+          abs(col("a_avg_avg_sentence_length") - col("b_avg_avg_sentence_length")))
+        .withColumn("votes",
+          when(col("llmmap_similarity") >= 0.85, 1).otherwise(0)
+            + when(col("dli_similarity") >= 0.80, 1).otherwise(0))
+        .withColumn("e1", when(col("llmmap_similarity") > 0.85, 1).otherwise(0))
+        .withColumn("e2", when(col("max_sd") < 0.005, 1).otherwise(0))
+        .withColumn("e3", when(col("ts_count") > 0, 1).otherwise(0))
+        .withColumn("e4", when(col("vocab_diff") < 0.05 && col("punct_diff") < 0.01, 1).otherwise(0))
+        .withColumn("e5", when(col("pct") > 50d, 1).otherwise(0))
+        .withColumn("d1", when(col("chars_diff") > 200d, 1).otherwise(0))
+        .withColumn("d2", when(col("sent_diff") > 3d, 1).otherwise(0))
+        // |pairs|-row barrier before the six-section report projection
+        // — same rationale as ma_report: every action on the
+        // un-truncated plan re-walked the full probe/audit/fingerprint
+        // upstream through analysis + cache lookup + optimization
+        // (measured 7.0 s per count at sf0.1 with warm leaf caches);
+        // the eager checkpoint runs it once and leaves a 190-row
+        // LogicalRDD under the giant concat.
+        .localCheckpoint(true))
+    }.head
+  val Flags = Build("report_full_flags", flags)
 
   val reportFull: Q = {
     // ---- oracle SQL ----
@@ -366,78 +443,9 @@ object ReportFull {
     }
 
     // ---- Spark plan ----
-    Q("ma_report_full", sql) { (spark, dir) =>
+    Q("ma_report_full", sql, Audit.AuditCaches, Flags) { (spark, dir) =>
       val nl = lit("\n")
-      val audit = Style.auditDf(spark, dir)
-        .select("model_a", "model_b", "llmmap_similarity", "dli_similarity", "verdict", "confidence")
-      val base = Report.pairsDf(spark, dir).join(audit, Seq("model_a", "model_b"))
-      val pairKeys = base.select("model_a", "model_b")
-      val probes = probeRowsDf(spark, dir, pairKeys)
-
-      val probeLine = concat(
-        lit("| "), format_string("%d", col("idx")), lit(" | "), col("cat_label"),
-        lit(" | "), col("probe_id"), lit(" | "),
-        when(col("s_teach"), concat(lit("**"), col("sfam"), lit("**"))).otherwise(col("sfam")),
-        lit(" | "),
-        when(col("t_teach"), concat(lit("**"), col("tfam"), lit("**"))).otherwise(col("tfam")),
-        lit(" | "), when(col("consistent"), "✓").otherwise(""), lit(" |"))
-      val pt = probes.groupBy("model_a", "model_b").agg(
-        aggLines(Seq(col("idx").as("i")), probeLine).as("probe_table"),
-        count(when(col("consistent"), 1)).as("n_consistent"),
-        count(when(col("s_teach"), 1)).as("ts_count"),
-        array_join(transform(
-          array_sort(collect_list(when(col("s_teach"),
-            struct(col("idx").as("i"), col("probe_id").as("p"))))),
-          s => s.getField("p")), ", ").as("ts_ids"))
-
-      val pctOf = (c: Column) => c * lit(100d) / ReportProbes
-      val dist0 = probes.groupBy("model_a", "model_b", "sfam")
-        .agg(count(lit(1)).as("cnt"), min("idx").as("fi"), max(col("s_teach")).as("teach"))
-      val distLine = when(col("teach"), concat(
-        lit("| **"), col("sfam"), lit("** | **"), format_string("%d", col("cnt")),
-        lit("** | **"), format_string("%.0f%%", pctOf(col("cnt")) + 1e-9), lit("** |")))
-        .otherwise(concat(
-          lit("| "), col("sfam"), lit(" | "), format_string("%d", col("cnt")),
-          lit(" | "), format_string("%.0f%%", pctOf(col("cnt")) + 1e-9), lit(" |")))
-      val dist = dist0.groupBy("model_a", "model_b").agg(
-        aggLines(Seq((-col("cnt")).as("nc"), col("fi").as("fi")), distLine).as("dist_table"))
-
-      // memoized per (session, dir) — same one-materialization
-      // discipline as ma_report's barrier (see there)
-      val joined = graft.SessionMemo.frames(spark, s"reportfull.flags:$dir") {
-        Seq(base
-        .join(pt, Seq("model_a", "model_b"))
-        .join(dist, Seq("model_a", "model_b"))
-        .withColumn("max_sd", greatest(
-          abs(col("a_style_helpful") - col("b_style_helpful")),
-          abs(col("a_style_hedging") - col("b_style_hedging")),
-          abs(col("a_style_structured") - col("b_style_structured"))))
-        .withColumn("vocab_diff", abs(col("a_avg_unique_word_ratio") - col("b_avg_unique_word_ratio")))
-        .withColumn("punct_diff", abs(col("a_avg_punctuation_ratio") - col("b_avg_punctuation_ratio")))
-        .withColumn("pct", pctOf(col("n_consistent")))
-        .withColumn("ts_pct", pctOf(col("ts_count")))
-        .withColumn("chars_diff", abs(col("a_avg_length_chars") - col("b_avg_length_chars")))
-        .withColumn("sent_diff",
-          abs(col("a_avg_avg_sentence_length") - col("b_avg_avg_sentence_length")))
-        .withColumn("votes",
-          when(col("llmmap_similarity") >= 0.85, 1).otherwise(0)
-            + when(col("dli_similarity") >= 0.80, 1).otherwise(0))
-        .withColumn("e1", when(col("llmmap_similarity") > 0.85, 1).otherwise(0))
-        .withColumn("e2", when(col("max_sd") < 0.005, 1).otherwise(0))
-        .withColumn("e3", when(col("ts_count") > 0, 1).otherwise(0))
-        .withColumn("e4", when(col("vocab_diff") < 0.05 && col("punct_diff") < 0.01, 1).otherwise(0))
-        .withColumn("e5", when(col("pct") > 50d, 1).otherwise(0))
-        .withColumn("d1", when(col("chars_diff") > 200d, 1).otherwise(0))
-        .withColumn("d2", when(col("sent_diff") > 3d, 1).otherwise(0))
-        // |pairs|-row barrier before the six-section report projection
-        // — same rationale as ma_report: every action on the
-        // un-truncated plan re-walked the full probe/audit/fingerprint
-        // upstream through analysis + cache lookup + optimization
-        // (measured 7.0 s per count at sf0.1 with warm leaf caches);
-        // the eager checkpoint runs it once and leaves a 190-row
-        // LogicalRDD under the giant concat.
-        .localCheckpoint(true))
-      }.head
+      val joined = flags(spark, dir)
 
       val sim4 = format_string("%.4f", col("llmmap_similarity") + lit(1e-9))
       val dli4 = format_string("%.4f", col("dli_similarity") + lit(1e-9))
@@ -584,7 +592,7 @@ object ReportFull {
          |    CASE WHEN dli_similarity >= ${dd("0.80")} THEN '派生' ELSE '独立' END || ' |' || $nl,
          |  ${slNl(tail)}) AS report
          |FROM audit
-         |ORDER BY model_a, model_b""".stripMargin) { (spark, dir) =>
+         |ORDER BY model_a, model_b""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
       val nlC = lit("\n")
       Style.auditDf(spark, dir)
         .select(col("model_a"), col("model_b"), concat(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -96,6 +96,25 @@ object ScaleJoins {
     saltedFact.join(saltedDim, Seq(key, "__salt")).drop("__salt")
   }
 
+  /** q11's one-time layout: lineitem and orders written bucketed by
+    * the order key (8 buckets), under per-dir table names, since
+    * concurrent or alternating scale factors must never share a
+    * warehouse path (see Tables.tableTag). Returns the two tables.
+    */
+  private def bucketedTables(spark: SparkSession, dir: String): (String, String) = {
+    val nb = 8
+    val tag = Tables.tableTag(dir)
+    val liT = s"graft_li_bkt_$tag"; val ordT = s"graft_ord_bkt_$tag"
+    ensureBucketed(spark, Tables.lineitem(spark, dir)
+      .select("l_orderkey", "l_extendedprice", "l_discount"),
+      liT, "l_orderkey", nb, dir)
+    ensureBucketed(spark, Tables.orders(spark, dir)
+      .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority")),
+      ordT, "l_orderkey", nb, dir)
+    (liT, ordT)
+  }
+  val BucketedLayout = Build("bucketed_layout", bucketedTables)
+
   /** Registered query exercising the bucketed co-located join path
     * end-to-end: revenue per order priority over lineitem⋈orders with
     * BOTH sides first written bucketed by the order key (the one-time
@@ -114,18 +133,8 @@ object ScaleJoins {
       |  round(1e-9 + sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority
-      |ORDER BY o_orderpriority""".stripMargin) { (spark, dir) =>
-    val nb = 8
-    // per-dir table names: concurrent/alternating scale factors must
-    // never share a warehouse path (see Tables.tableTag)
-    val tag = Tables.tableTag(dir)
-    val liT = s"graft_li_bkt_$tag"; val ordT = s"graft_ord_bkt_$tag"
-    ensureBucketed(spark, Tables.lineitem(spark, dir)
-      .select("l_orderkey", "l_extendedprice", "l_discount"),
-      liT, "l_orderkey", nb, dir)
-    ensureBucketed(spark, Tables.orders(spark, dir)
-      .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority")),
-      ordT, "l_orderkey", nb, dir)
+      |ORDER BY o_orderpriority""".stripMargin, BucketedLayout) { (spark, dir) =>
+    val (liT, ordT) = bucketedTables(spark, dir)
     spark.table(liT).hint("merge")
       .join(spark.table(ordT), "l_orderkey")
       .groupBy("o_orderpriority")

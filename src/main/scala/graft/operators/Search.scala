@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,6 +51,7 @@ object Search {
       g.count()
       Seq(g)
     }.head
+  val Bm25Stats = Build("bm25_stats", bm25Stats)
 
   val bm25 = Q(
     "ix_bm25", {
@@ -76,7 +77,7 @@ object Search {
          |FROM tf, g
          |ORDER BY score DESC, doc_id
          |LIMIT $TopK""".stripMargin
-    }) { (spark, dir) =>
+    }, Bm25Stats) { (spark, dir) =>
     val tf = tfOf(spark, dir)
     val g = bm25Stats(spark, dir)
     val score = terms.map { t =>
@@ -92,6 +93,28 @@ object Search {
   }
 
   private val simVocabK = 32
+
+  /** ix_source_sim's (source, h) profile from ONE corpus tokenize:
+    * term totals AND the per-source doc membership count, from which
+    * df(h) = Σ_source nd (the (doc, h) counts are distinct by (doc, h)
+    * and doc → source is functional, so the sums agree with the
+    * oracle's per-h doc count). Both the vocab head and the tf pass
+    * read this |sources|·|vocab|-row frame, so the corpus is tokenized
+    * once, not once per consumer.
+    */
+  private[graft] def simProfile(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.frames(spark, s"search.simProfile:$dir") {
+      val f = Tables.documents(spark, dir)
+        .select(col("doc_id"), col("source"),
+          explode(graft.functions.Hashing.wordHashes(col("text"))).as("h"))
+        .groupBy("doc_id", "source", "h").agg(count(lit(1)).as("c"))
+        .groupBy("source", "h")
+        .agg(sum("c").as("tf"), count(lit(1)).as("nd"))
+        .persist()
+      f.count()
+      Seq(f)
+    }.head
+  val SimProfile = Build("sim_profile", simProfile)
 
   /** Source-to-source vocabulary similarity: each source (= model
     * identity) reduced to a tf-idf vector over the corpus's top-32
@@ -137,29 +160,8 @@ object Search {
          |JOIN nrm na ON na.source = d.src_a AND na.nrm > 0
          |JOIN nrm nb ON nb.source = d.src_b AND nb.nrm > 0
          |ORDER BY src_a, src_b""".stripMargin
-    }) { (spark, dir) =>
-    val dc = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"),
-        explode(graft.functions.Hashing.wordHashes(col("text"))).as("h"))
-      .groupBy("doc_id", "source", "h").agg(count(lit(1)).as("c"))
-    // ONE corpus tokenize: collapse straight to the (source, h)
-    // profile — term totals AND the per-source doc membership count —
-    // then derive df(h) = Σ_source nd (dc is distinct by (doc, h) and
-    // doc → source is functional, so the sums agree with the oracle's
-    // per-h doc count). The previous shape referenced dc from both the
-    // vocab head and the tf pass, tokenizing the corpus TWICE per
-    // action; sc is |sources|·|vocab| rows, cached so both consumers
-    // read one materialization.
-    // SessionMemo, not a bare cache(): the profile participates in the
-    // memo's LRU eviction instead of holding session-lifetime storage
-    // outside any reclamation discipline
-    val sc = graft.SessionMemo.frames(spark, s"search.simProfile:$dir") {
-      val f = dc.groupBy("source", "h")
-        .agg(sum("c").as("tf"), count(lit(1)).as("nd"))
-        .persist()
-      f.count()
-      Seq(f)
-    }.head
+    }, SimProfile) { (spark, dir) =>
+    val sc = simProfile(spark, dir)
     val v = sc.groupBy("h").agg(sum("nd").as("df"))
     val vocab = v
       .agg(graft.functions.TopKAgg.topk_by_score(
@@ -229,6 +231,29 @@ object Search {
   private val RrfC = 60    // the standard RRF constant (Cormack et al.)
   private val HybridTopK = 10
 
+  private def docTerms(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).select(col("doc_id"),
+      explode(array_distinct(graft.functions.Hashing.wordHashes(col("text")))).as("h"))
+
+  /** The hybrid query set's distinct terms: a pushed doc_id scan. */
+  private def queryTerms(spark: SparkSession, dir: String): DataFrame =
+    docTerms(spark, dir).filter(col("doc_id") < HybridQueries)
+      .select(col("doc_id").as("query_id"), col("h"))
+
+  /** The corpus's (doc, h) hits on the query terms: ix_hybrid's df
+    * aggregate and its lexical scoring join both read this one
+    * materialization, so the corpus is tokenized once, not once per
+    * consumer.
+    */
+  private[graft] def hybridHits(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.frames(spark, s"search.hybridHits:$dir") {
+      val f = docTerms(spark, dir)
+        .join(broadcast(queryTerms(spark, dir).select("h").distinct()), "h").persist()
+      f.count()
+      Seq(f)
+    }.head
+  val HybridHits = Build("hybrid_hits", hybridHits)
+
   val hybrid = Q(
     "ix_hybrid", {
       val whSql = graft.functions.Hashing.wordHashesSql("text")
@@ -270,7 +295,7 @@ object Search {
          |  PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank
          |FROM f QUALIFY rank <= $HybridTopK
          |ORDER BY query_id, rank""".stripMargin
-    }) {
+    }, HybridHits) {
     // Hybrid search: lexical tf-idf overlap ⊕ embedding cosine, fused
     // by reciprocal-rank fusion (1/(60+rank) — the score-free fusion
     // that needs no cross-retriever calibration; Cormack et al.) —
@@ -286,25 +311,10 @@ object Search {
     // The oracle formulates the same pipeline with windows — the
     // plan spec asserts the Spark side has none.
     (spark, dir) =>
-      import graft.functions.{Hashing, TopKAgg}
-      val docs = Tables.documents(spark, dir)
-      val dt = docs.select(col("doc_id"),
-        explode(array_distinct(Hashing.wordHashes(col("text")))).as("h"))
-      val qt = dt.filter(col("doc_id") < HybridQueries)
-        .select(col("doc_id").as("query_id"), col("h"))
-      val nn = docs.agg(count(lit(1)).as("n"))
-      // ONE corpus tokenize: restrict dt to query-term hits first and
-      // cache that (doc, h) hit stream — both the df aggregate and the
-      // lexical scoring join read it, where referencing dt from each
-      // tokenized the corpus TWICE per action (the query-side filter
-      // qt is a pushed doc_id scan, not a second pass).
-      // SessionMemo like the ix_source_sim profile: LRU-evictable
-      // instead of a session-lifetime bare cache
-      val dtq = graft.SessionMemo.frames(spark, s"search.hybridHits:$dir") {
-        val f = dt.join(broadcast(qt.select("h").distinct()), "h").persist()
-        f.count()
-        Seq(f)
-      }.head
+      import graft.functions.TopKAgg
+      val qt = queryTerms(spark, dir)
+      val nn = Tables.documents(spark, dir).agg(count(lit(1)).as("n"))
+      val dtq = hybridHits(spark, dir)
       val df = dtq.groupBy("h").agg(count(lit(1)).as("df"))
       val idf = df.crossJoin(broadcast(nn))
         .select(col("h"),
@@ -418,6 +428,7 @@ object Search {
       g.count()
       Seq(g)
     }.head
+  val Bm25StatsStanding = Build("bm25_stats_standing", bm25StatsStanding)
 
   /** Incremental BM25 serving — the retrieval twin of dd_incremental:
     * a delta batch (doc_id % 10 ≥ 8) is scored under the STANDING
@@ -458,7 +469,7 @@ object Search {
          |FROM dtf, g
          |ORDER BY score DESC, doc_id
          |LIMIT $TopK""".stripMargin
-    }) { (spark, dir) =>
+    }, Bm25StatsStanding) { (spark, dir) =>
     val words = split(trim(lower(col("text"))), "\\s+")
     val dtf = Tables.documents(spark, dir)
       .filter(col("doc_id") % 10 >= 8)
@@ -495,6 +506,7 @@ object Search {
       idx.count() // materialize: queries time the probe path
       Seq(idx)
     }.head
+  val PositionalIndex = Build("positional_index", posIndex)
 
   /** Exact phrase search served from the positional index — the
     * operator BM25's bag-of-words scoring cannot express: the query
@@ -532,7 +544,7 @@ object Search {
          |  coalesce(a.n_occ, 0) AS n_occ, a.first_doc, a.last_doc
          |FROM ph LEFT JOIN a USING (phrase)
          |ORDER BY ph.phrase""".stripMargin
-    }) { (spark, dir) =>
+    }, PositionalIndex) { (spark, dir) =>
     val idx = posIndex(spark, dir)
     val s = spark
     import s.implicits._

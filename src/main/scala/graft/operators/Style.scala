@@ -185,7 +185,7 @@ object Style {
   val styleScores = Q(
     "ma_style_scores",
     s"""SELECT doc_id, family, score FROM ($scoresSql)
-       |ORDER BY doc_id, family""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_id, family""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
     perFamily(Audit.corpus(spark, dir).docs, Seq("doc_id"), i => col(s"fs_$i"))
       .select("doc_id", "family", "score").orderBy("doc_id", "family")
   }
@@ -198,7 +198,7 @@ object Style {
        |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, fidx) AS rn
        |  FROM ($scoresSql)
        |) WHERE rn = 1
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_id""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
     // argmax via partial-aggregated struct-max (ties → lowest fidx),
     // not a per-doc row_number window — map-side combine, no sort.
     Audit.corpus(spark, dir).docs
@@ -224,7 +224,7 @@ object Style {
     s"""SELECT source, family, round(1e-9 + avg(score) + 1e-9, 4) AS avg_score
        |FROM ($scoresSql)
        |GROUP BY source, family
-       |ORDER BY source, family""".stripMargin) { (spark, dir) =>
+       |ORDER BY source, family""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
     styleFpOf(Audit.corpus(spark, dir).models).orderBy("source", "family")
   }
 
@@ -250,7 +250,7 @@ object Style {
          |  ) WHERE rn = 1
          |)
          |ORDER BY source""".stripMargin
-    }) { (spark, dir) =>
+    }, Audit.AuditCaches) { (spark, dir) =>
     val best = bestFamily(i => round(lit(1e-9) + col(s"fm_$i") + 1e-9, 4))
     val claimed = families.foldRight(lit("unknown")) { (f, acc) =>
       when(lower(col("source")).contains(f.name), f.name).otherwise(acc)
@@ -295,7 +295,7 @@ object Style {
        |    ELSE 'inconclusive' END AS verdict,
        |  round(1e-9 + least(abs((l.similarity + x.similarity) / 2 - ${d("0.85")}) / ${d("0.15")}, ${d("1")}), 6) AS confidence
        |FROM llm l JOIN dli x ON l.model_a = x.model_a AND l.model_b = x.model_b
-       |ORDER BY l.model_a, l.model_b""".stripMargin) { (spark, dir) =>
+       |ORDER BY l.model_a, l.model_b""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
     auditDf(spark, dir).orderBy("model_a", "model_b")
   }
 
@@ -315,7 +315,7 @@ object Style {
        |  ) WHERE rn = 1
        |)
        |GROUP BY source, predicted_model
-       |ORDER BY source, predicted_model""".stripMargin) { (spark, dir) =>
+       |ORDER BY source, predicted_model""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
     Audit.corpus(spark, dir).docs
       .groupBy("doc_id", "source")
       .agg(max(docBest).as("m"))
@@ -341,7 +341,7 @@ object Style {
        |FROM detected a
        |JOIN detected b ON a.probe_idx = b.probe_idx AND a.source < b.source
        |GROUP BY a.source, b.source
-       |ORDER BY model_a, model_b""".stripMargin) { (spark, dir) =>
+       |ORDER BY model_a, model_b""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
     val detected = detectedDf(spark, dir)
     val a = detected.select(col("source").as("model_a"), col("family").as("fa"), col("probe_idx"))
     val b = detected.select(col("source").as("model_b"), col("family").as("fb"), col("probe_idx"))
@@ -385,7 +385,7 @@ object Style {
          |  GROUP BY a.source, b.source, a.category
          |)
          |ORDER BY model_a, model_b, category""".stripMargin
-    }) { (spark, dir) =>
+    }, Audit.AuditCaches) { (spark, dir) =>
     val cats = typedLit(probeCatalog.map(_._2))
     val detected = detectedDf(spark, dir)
       .withColumn("category",

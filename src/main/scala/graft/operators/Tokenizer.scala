@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Build, Q, Tables}
 import graft.functions.{BpeExprs, Hashing}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,6 +69,7 @@ object Tokenizer {
     graft.SessionMemo.frames(spark, s"tokenizer.bpe:$dir") {
       trainLoop(spark, vocab0(spark, dir))
     }
+  val BpeMerges = Build("bpe_merges", bpeFrames)
 
   /** Memoized BYTE-LEVEL train — the identical merge loop over the
     * 256-byte base alphabet (2-hex-digit symbols) instead of code
@@ -80,6 +81,7 @@ object Tokenizer {
     graft.SessionMemo.frames(spark, s"tokenizer.bpeBytes:$dir") {
       trainLoop(spark, vocab0(spark, dir), BpeExprs.byte_split)
     }
+  val BpeBytesMerges = Build("bpe_bytes_merges", bpeBytesFrames)
 
   /** The merge loop over any (word, cnt) vocabulary frame — shared by
     * the batch build (code-point and byte alphabets, via `symsOf`)
@@ -205,7 +207,7 @@ object Tokenizer {
       s"""WITH ${bpeCteSql(MergeRounds)}
          |SELECT rank, lhs, rhs, merged, pair_count FROM ($union)
          |ORDER BY rank""".stripMargin
-    }) { (spark, dir) =>
+    }, BpeMerges) { (spark, dir) =>
     bpeFrames(spark, dir).head.orderBy("rank")
   }
 
@@ -241,7 +243,7 @@ object Tokenizer {
          |FROM dw JOIN vh USING (h)
          |GROUP BY doc_id, source
          |ORDER BY doc_id""".stripMargin
-    }) { (spark, dir) =>
+    }, BpeMerges) { (spark, dir) =>
     val vocabK = bpeFrames(spark, dir)(1)
     val vh = vocabK
       .select(Hashing.charFold(col("word")).as("h"),
@@ -279,7 +281,7 @@ object Tokenizer {
       s"""WITH ${bpeCteSql(MergeRounds, byteSymsSql)}
          |SELECT rank, lhs, rhs, merged, pair_count FROM ($union)
          |ORDER BY rank""".stripMargin
-    }) { (spark, dir) =>
+    }, BpeBytesMerges) { (spark, dir) =>
     bpeBytesFrames(spark, dir).head.orderBy("rank")
   }
 
@@ -312,7 +314,7 @@ object Tokenizer {
          |FROM dw JOIN vh USING (h)
          |GROUP BY doc_id, source
          |ORDER BY doc_id""".stripMargin
-    }) { (spark, dir) =>
+    }, BpeBytesMerges) { (spark, dir) =>
     val vocabK = bpeBytesFrames(spark, dir)(1)
     val vh = vocabK
       .select(Hashing.charFold(col("word")).as("h"),

@@ -65,10 +65,21 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  /** Each query runs from its declared builds alone: from an evicted
+    * memo, after those builds, serving and counting it must memoize
+    * nothing more — a build it reads but does not declare would be
+    * billed to its timed serve instead of to Bench's builds.
+    */
   for (q <- SparkEntry.registry) {
     test(s"${q.name} runs and returns rows at sf0.001") {
+      SessionMemo.evict(spark)
+      q.builds.foreach(_.run(spark, sf))
+      val declared = SessionMemo.keys(spark)
       val df = q.fn(spark, sf)
       assert(df.count() > 0)
+      val undeclared = SessionMemo.keys(spark) -- declared
+      assert(undeclared.isEmpty,
+        s"${q.name} memoized undeclared builds on serve: ${undeclared.toSeq.sorted.mkString(", ")}")
       assertBoundedUnpartitionedWindows(df, q.name)
     }
   }

@@ -67,6 +67,18 @@ class SessionMemoSpec extends AnyFunSuite {
     SessionMemo.evict(spark)
   }
 
+  test("repeated evict/build cycles register no further listeners") {
+    def build() = SessionMemo.frames(spark, "memo-listen") {
+      val f = spark.range(4).toDF().persist(); f.count(); Seq(f)
+    }
+    build()
+    val listeners = org.apache.spark.StorageProbe.listenerCount()
+    (1 to 5).foreach { _ => SessionMemo.evict(spark); build() }
+    assert(org.apache.spark.StorageProbe.listenerCount() == listeners,
+      "an evict followed by a build must not add an application-end listener")
+    SessionMemo.evict(spark)
+  }
+
   test("a racing first access builds once; the loser gets the winner's frames") {
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val entered = new java.util.concurrent.CountDownLatch(1)

@@ -17,6 +17,10 @@ object StorageProbe {
       .collect { case RDDBlockId(rddId, _) => rddId }
       .toSet
 
+  /** How many listeners the active context's listener bus holds. */
+  def listenerCount(): Int =
+    SparkContext.getActive.fold(0)(_.listenerBus.listeners.size)
+
   /** Wait until the listener bus has delivered every event posted so
     * far, so a listener's counts are complete.
     */
