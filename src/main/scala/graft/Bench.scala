@@ -159,6 +159,7 @@ object Bench {
     val failed = results.collect { case (k, _, false) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).sum
+    val buildsTotal = f"${builds.map(_._2).sum}%.2f"
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_last.json")
     // File artifact: full nanosecond precision, per-query times, build
     // times, and measured shuffle/spill. Stdout: a SUMMARY line only.
@@ -190,7 +191,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","action":"$action","queries":$qs,"failed":$failed$bs$sh,"sf":"$sfDir"}"""
     }
     println(
-      s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","action":"$action","n":${results.size},"failed":$failed,"artifact":"$out","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","action":"$action","n":${results.size},"builds_total":$buildsTotal,"failed":$failed,"artifact":"$out","sf":"$sfDir"}""")
     // Default file target is gitignored — casual runs must not clobber
     // the committed round artifact; round close copies it to BENCH_LAST.json
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
@@ -205,7 +206,7 @@ object Bench {
     // total fields, so even a head-truncating scrape still ends on the
     // parseable total/failed/sf tail.
     val summary =
-      s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","action":"$action","n":${results.size},"queries":$qsShort,"failed":$failed,"artifact":"$out","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","action":"$action","n":${results.size},"queries":$qsShort,"builds_total":$buildsTotal,"failed":$failed,"artifact":"$out","sf":"$sfDir"}"""
     println(s"GRAFT_BENCH_JSON $summary")
     println(summary)
     System.out.flush()

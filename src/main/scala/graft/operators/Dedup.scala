@@ -105,18 +105,24 @@ object Dedup {
       .select(col("doc_id"), shingleHashes(col("text")).as("shingles"))
       .filter(size(col("shingles")) > 0)
 
-  /** doc_id + k MinHash values. Fixed-width output is cached (shared
-    * by dd_minhash / dd_lsh_pairs / dd_jaccard and both self-join
-    * sides via CacheManager's canonical-plan dedup); the array-typed
-    * shingle column deliberately stays out of the cache.
+  /** doc_id + k MinHash values, persisted once per (session, dir)
+    * (SessionMemo, so evict and release free it): shared by
+    * dd_minhash, both self-join sides of dd_lsh_pairs / dd_jaccard,
+    * pipe_decon_fuzzy and the fuzzy band indexes. Fixed-width only —
+    * the array-typed shingle column deliberately stays out of storage.
     */
   private def minhashDf(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), minhashSig(col("text")).as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id") +:
-        (0 until NumPerms).map(j => element_at(col("sig"), j + 1).as(mhNames(j))): _*)
-      .cache()
+    graft.SessionMemo.frames(spark, s"dedup.minhash:$dir") {
+      val mh = Tables.documents(spark, dir)
+        .select(col("doc_id"), minhashSig(col("text")).as("sig"))
+        .filter(col("sig").isNotNull)
+        .select(col("doc_id") +:
+          (0 until NumPerms).map(j => element_at(col("sig"), j + 1).as(mhNames(j))): _*)
+        .persist()
+      mh.count()
+      Seq(mh)
+    }.head
+  val MinhashSigs = Build("minhash_sigs", minhashDf)
 
   /** Matching SQL CTE body: doc_id, shingles, mh00..mh23. */
   private val minhashSql: String = {
@@ -133,7 +139,7 @@ object Dedup {
     "dd_minhash",
     s"""SELECT doc_id, ${mhNames.mkString(", ")}
        |FROM ($minhashSql)
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_id""".stripMargin, MinhashSigs) { (spark, dir) =>
     minhashDf(spark, dir)
       .select("doc_id", mhNames: _*)
       .orderBy("doc_id")
@@ -187,7 +193,7 @@ object Dedup {
   val lshPairs = Q(
     "dd_lsh_pairs",
     s"""SELECT doc_a, doc_b FROM ($lshPairsSql)
-       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_a, doc_b""".stripMargin, MinhashSigs) { (spark, dir) =>
     lshPairsDf(spark, dir).orderBy("doc_a", "doc_b")
   }
 
@@ -212,7 +218,7 @@ object Dedup {
        |FROM inter i
        |JOIN sizes na ON na.doc_id = i.doc_a
        |JOIN sizes nb ON nb.doc_id = i.doc_b
-       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_a, doc_b""".stripMargin, MinhashSigs) { (spark, dir) =>
     // Verify on the shingle ARRAYS, not an exploded (doc, shingle)
     // relation: two array-carrying joins route each candidate pair's
     // sets together, and |∩| is one native hash-set probe per pair
@@ -533,27 +539,33 @@ object Dedup {
        |)""".stripMargin
   }
 
-  private def simhashDf(spark: SparkSession, dir: String): DataFrame = {
-    val words = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(wordHashes(col("text"))).as("wh"))
-      .withColumn("whx", expr(wideWordHash("wh")))
-    val sums = (0 until SimhashBits)
-      .map(b => sum(expr(s"CASE WHEN ((whx >> $b) & 1) = 1 THEN 1 ELSE -1 END")).as(s"s$b"))
-    val compose = (0 until SimhashBits)
-      .map(b => s"CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END")
-      .mkString(" + ")
-    words.groupBy("doc_id")
-      .agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"), expr(s"CAST($compose AS BIGINT)").as("simhash"))
-      // fixed-width (doc_id, simhash) — shared by dd_simhash and the
-      // pair query's two join sides via CacheManager plan dedup
-      .cache()
-  }
+  /** Fixed-width (doc_id, simhash), persisted once per (session, dir)
+    * (SessionMemo): shared by dd_simhash and both join sides of
+    * dd_simhash_pairs.
+    */
+  private def simhashDf(spark: SparkSession, dir: String): DataFrame =
+    graft.SessionMemo.frames(spark, s"dedup.simhash:$dir") {
+      val words = Tables.documents(spark, dir)
+        .select(col("doc_id"), explode(wordHashes(col("text"))).as("wh"))
+        .withColumn("whx", expr(wideWordHash("wh")))
+      val sums = (0 until SimhashBits)
+        .map(b => sum(expr(s"CASE WHEN ((whx >> $b) & 1) = 1 THEN 1 ELSE -1 END")).as(s"s$b"))
+      val compose = (0 until SimhashBits)
+        .map(b => s"CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END")
+        .mkString(" + ")
+      val sh = words.groupBy("doc_id")
+        .agg(sums.head, sums.tail: _*)
+        .select(col("doc_id"), expr(s"CAST($compose AS BIGINT)").as("simhash"))
+        .persist()
+      sh.count()
+      Seq(sh)
+    }.head
+  val SimhashSigs = Build("simhash_sigs", simhashDf)
 
   val simhash = Q(
     "dd_simhash",
     s"""SELECT doc_id, simhash FROM ($simhashBody)
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_id""".stripMargin, SimhashSigs) { (spark, dir) =>
     simhashDf(spark, dir).orderBy("doc_id")
   }
 
@@ -588,7 +600,7 @@ object Dedup {
        |  FROM chunked a JOIN chunked b
        |    ON a.chunk = b.chunk AND a.key = b.key AND a.doc_id < b.doc_id
        |) WHERE hamming <= 1
-       |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
+       |ORDER BY doc_a, doc_b""".stripMargin, SimhashSigs) { (spark, dir) =>
     val sh = simhashDf(spark, dir)
     val chunked0 = sh.select(col("doc_id"), col("simhash"),
       explode(array(
@@ -783,7 +795,7 @@ object Dedup {
        |  b.jac >= CAST(${Pipeline.contaminatedFloor} AS DOUBLE) AS contaminated
        |FROM best b JOIN documents d ON d.doc_id = b.doc_id
        |WHERE rn = 1 AND jac >= CAST(${Pipeline.suspectFloor} AS DOUBLE)
-       |ORDER BY b.doc_id""".stripMargin) { (spark, dir) =>
+       |ORDER BY b.doc_id""".stripMargin, MinhashSigs) { (spark, dir) =>
     val capped = dropOversizedBuckets(bandedMinhash(spark, dir), Seq("band", "key"), BucketCap)
     val cand = capped.filter(col("doc_id") % Pipeline.evalMod =!= Pipeline.evalRes)
       .join(capped.filter(col("doc_id") % Pipeline.evalMod === Pipeline.evalRes)

@@ -707,10 +707,11 @@ object Graph {
     * community sizes. Per round the plan is edges⋈labels shuffled on
     * the aggregation key, then ONE hash aggregate: max(struct(count,
     * −label)) picks highest-count-then-lowest-label without a window
-    * or second pass. Each round localCheckpoints (truncating plan
-    * growth) and releases the previous snapshot — the CC loop's
-    * discipline. Oracle: 3 chained MATERIALIZED CTEs with the same
-    * argmax as a row_number. Scale: per-round cost is one edge-scale
+    * or second pass. Round 1 runs in closed form (the minimum
+    * neighbor id, one aggregation, no join); rounds 2..k fuse into
+    * one lazy plan k − 1 joins deep, with no per-round checkpoint —
+    * only the output is localCheckpointed. Oracle: 3 chained
+    * MATERIALIZED CTEs with the same argmax as a row_number. Scale: per-round cost is one edge-scale
     * shuffle — the canonical distributed LPA; the edge frame is the
     * memoized one-time build shared with pagerank/components.
     */

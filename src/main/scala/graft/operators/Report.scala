@@ -27,7 +27,10 @@ import org.apache.spark.sql.expressions.Window
   *
   * Everything is computed on the per-model aggregate tables
   * (fingerprints, audit verdicts, probe detections) — |models|² rows,
-  * independent of corpus size.
+  * independent of corpus size. ma_report and ReportFull's
+  * ma_report_full serve from ONE memoized per-pair barrier,
+  * [[flags]], which holds the evidence both share and each one's own
+  * probe statistics.
   */
 object Report {
 
@@ -51,18 +54,50 @@ object Report {
        |  FROM fp a JOIN fp b ON a.source < b.source""".stripMargin
   }
 
-  private[operators] def fmtSql(fmt: String, e: String): String =
+  /** ma_audit's oracle as a CTE body. */
+  private[operators] def auditBody: String =
+    Style.audit.oracle.get.replace("ORDER BY l.model_a, l.model_b", "")
+
+  /** The `ev` and `flags` CTEs over `pairs` ⋈ `audit`: the evidence
+    * columns both reports share (the [[flags]] barrier's, by the same
+    * names); each report joins its own probe statistics onto `flags`.
+    */
+  private[operators] val evidenceSql: String =
+    s"""ev AS (
+       |  SELECT p.*, a.llmmap_similarity, a.dli_similarity, a.verdict, a.confidence,
+       |    greatest(abs(a_style_helpful - b_style_helpful),
+       |      abs(a_style_hedging - b_style_hedging),
+       |      abs(a_style_structured - b_style_structured)) AS max_sd,
+       |    abs(a_avg_unique_word_ratio - b_avg_unique_word_ratio) AS vocab_diff,
+       |    abs(a_avg_punctuation_ratio - b_avg_punctuation_ratio) AS punct_diff,
+       |    abs(a_avg_length_chars - b_avg_length_chars) AS chars_diff,
+       |    abs(a_avg_avg_sentence_length - b_avg_avg_sentence_length) AS sent_diff,
+       |    CASE WHEN a.llmmap_similarity >= ${dd("0.85")} THEN 1 ELSE 0 END
+       |      + CASE WHEN a.dli_similarity >= ${dd("0.80")} THEN 1 ELSE 0 END AS votes
+       |  FROM pairs p JOIN audit a USING (model_a, model_b)
+       |),
+       |flags AS (
+       |  SELECT *,
+       |    CASE WHEN llmmap_similarity > ${dd("0.85")} THEN 1 ELSE 0 END AS e1,
+       |    CASE WHEN max_sd < ${dd("0.005")} THEN 1 ELSE 0 END AS e2,
+       |    CASE WHEN vocab_diff < ${dd("0.05")} AND punct_diff < ${dd("0.01")} THEN 1 ELSE 0 END AS e4,
+       |    CASE WHEN chars_diff > ${dd("200")} THEN 1 ELSE 0 END AS d1,
+       |    CASE WHEN sent_diff > ${dd("3")} THEN 1 ELSE 0 END AS d2
+       |  FROM ev
+       |)""".stripMargin
+
+  private def fmtSql(fmt: String, e: String): String =
     if (fmt == "%.0f%%") s"printf('%.0f%%', ($e) * ${dd("100")} + 1e-9)"
     else s"printf('$fmt', ($e) + 1e-9)"
 
-  private[operators] def fmtC(fmt: String, c: Column): Column =
+  private def fmtC(fmt: String, c: Column): Column =
     if (fmt == "%.0f%%") format_string("%.0f%%", c * lit(100d) + lit(1e-9))
     else format_string(fmt, c + lit(1e-9))
 
   /** Judgement CASE over the 6-dp-rounded |diff| (rounding first makes
     * the branch decision identical across engines).
     */
-  private[operators] def judgeSql(k: String, diffE: String): String = {
+  private def judgeSql(k: String, diffE: String): String = {
     val (t1, t2, t3) = judgeThresholds(k)
     s"""CASE WHEN $diffE < ${dd(t1.toString)} THEN '$j1'
        |      WHEN $diffE < ${dd(t2.toString)} THEN '$j2'
@@ -70,9 +105,25 @@ object Report {
        |      ELSE '$j4' END""".stripMargin
   }
 
-  private[operators] def judgeC(k: String, diff: Column): Column = {
+  private def judgeC(k: String, diff: Column): Column = {
     val (t1, t2, t3) = judgeThresholds(k)
     when(diff < t1, j1).when(diff < t2, j2).when(diff < t3, j3).otherwise(j4)
+  }
+
+  /** The fingerprint table's rows, one per display feature, as the
+    * oracle's concat arguments and as Spark columns — both reports
+    * print the same table.
+    */
+  private[operators] val featLinesSql: String = displayFeatures.map { case (k, label, fmt) =>
+    val diff = s"round(1e-9 + abs(a_$k - b_$k), 6)"
+    s"'| $label | ' || ${fmtSql(fmt, s"b_$k")} || ' | ' || ${fmtSql(fmt, s"a_$k")} || ' | ' || " +
+      s"${fmtSql(fmt, diff)} || ' | ' || ${judgeSql(k, diff)} || ' |' || $NL"
+  }.mkString(",\n  ")
+
+  private[operators] def featLines: Seq[Column] = displayFeatures.map { case (k, label, fmt) =>
+    val diff = round(lit(1e-9) + abs(col(s"a_$k") - col(s"b_$k")), 6)
+    concat(lit(s"| $label | "), fmtC(fmt, col(s"b_$k")), lit(" | "), fmtC(fmt, col(s"a_$k")),
+      lit(" | "), fmtC(fmt, diff), lit(" | "), judgeC(k, diff), lit(" |"), lit("\n"))
   }
 
   // ═══════ Spark shared frames ═══════
@@ -84,67 +135,75 @@ object Report {
     a.join(b, col("model_a") < col("model_b"))
   }
 
-  /** ma_report's per-pair frame: fingerprints, verdicts, probe
-    * consistency and the detected-style distribution joined, with the
-    * report's evidence flags, as a |pairs|-row barrier.
-    * Memoized per (session, dir): repeat invocations reuse ONE
-    * materialized barrier instead of leaving a fresh checkpoint-block
-    * set behind each time.
+  /** ma_report's probe statistics per pair, over every probe both
+    * sources answered: ma_probe_consistency's n_probes and
+    * n_consistent, and model_b's detected-style distribution in
+    * most_common order (count desc, then first probe).
+    */
+  private def answeredProbes(det: DataFrame): DataFrame = {
+    val wp = Window.partitionBy("model_a", "model_b")
+    det.select(col("source").as("model_a"), col("family").as("fa"), col("probe_idx"))
+      .join(det.select(col("source").as("model_b"), col("family").as("fb"), col("probe_idx")),
+        Seq("probe_idx"))
+      .filter(col("model_a") < col("model_b"))
+      .groupBy("model_a", "model_b", "fb")
+      .agg(count(lit(1)).as("cnt"), count(when(col("fa") === col("fb"), 1)).as("same"),
+        min("probe_idx").as("first_idx"))
+      .withColumn("line", concat(col("fb"), lit(":"), format_string("%d", col("cnt")), lit(":"),
+        format_string("%.0f%%",
+          col("cnt") * lit(100d) / sum("cnt").over(wp) + lit(1e-9))))
+      .withColumn("s", struct((-col("cnt")).as("nc"), col("first_idx").as("fi"), col("line").as("line")))
+      .groupBy("model_a", "model_b")
+      .agg(sum("cnt").as("n_probes"), sum("same").as("n_consistent"),
+        array_join(transform(array_sort(collect_list(col("s"))), x => x.getField("line")), "; ")
+          .as("dist_str"))
+  }
+
+  /** The per-pair evidence of BOTH reports as one |pairs|-row barrier,
+    * memoized per (session, dir): the a_/b_ fingerprint columns, the
+    * audit verdict, the |diff|s, votes and the evidence flags both
+    * reports share, and beside them each report's own probe
+    * statistics — ma_report's over every probe both sources answered
+    * ([[answeredProbes]]; null for a pair with none), ma_report_full's
+    * over the first ReportProbes catalog probes
+    * ([[ReportFull.catalogProbes]]). Both derive from one detection
+    * frame, constructed here once.
     */
   private[graft] def flags(spark: SparkSession, dir: String): DataFrame =
     graft.SessionMemo.frames(spark, s"report.flags:$dir") {
-      // per-pair detected-style distribution, most_common order
       val det = Style.detectedDf(spark, dir)
-      val pairDet = det.select(col("source").as("model_a"), col("probe_idx"))
-        .join(det.select(col("source").as("model_b"), col("family").as("fb"), col("probe_idx")),
-          Seq("probe_idx"))
-        .filter(col("model_a") < col("model_b"))
-      val wp = Window.partitionBy("model_a", "model_b")
-      val dist = pairDet.groupBy("model_a", "model_b", "fb")
-        .agg(count(lit(1)).as("cnt"), min("probe_idx").as("first_idx"))
-        .withColumn("line", concat(col("fb"), lit(":"), format_string("%d", col("cnt")), lit(":"),
-          format_string("%.0f%%",
-            col("cnt") * lit(100d) / sum("cnt").over(wp) + lit(1e-9))))
-        .withColumn("s", struct((-col("cnt")).as("nc"), col("first_idx").as("fi"), col("line").as("line")))
-        .groupBy("model_a", "model_b")
-        .agg(array_join(transform(array_sort(collect_list(col("s"))), x => x.getField("line")), "; ")
-          .as("dist_str"))
-
       val audit = Style.auditDf(spark, dir)
         .select("model_a", "model_b", "llmmap_similarity", "dli_similarity", "verdict", "confidence")
-      val pc = Style.probeConsistency.fn(spark, dir)
-        .select("model_a", "model_b", "n_probes", "n_consistent")
-
-      Seq(pairsDf(spark, dir)
-        .join(audit, Seq("model_a", "model_b"))
-        .join(pc, Seq("model_a", "model_b"))
-        .join(dist, Seq("model_a", "model_b"))
+      val pair = Seq("model_a", "model_b")
+      val base = pairsDf(spark, dir).join(audit, pair)
+      Seq(base
+        .join(answeredProbes(det), pair, "left")
+        .join(ReportFull.catalogProbes(spark, det, base.select(pair.map(col): _*)), pair)
         .withColumn("max_sd", greatest(
           abs(col("a_style_helpful") - col("b_style_helpful")),
           abs(col("a_style_hedging") - col("b_style_hedging")),
           abs(col("a_style_structured") - col("b_style_structured"))))
         .withColumn("vocab_diff", abs(col("a_avg_unique_word_ratio") - col("b_avg_unique_word_ratio")))
         .withColumn("punct_diff", abs(col("a_avg_punctuation_ratio") - col("b_avg_punctuation_ratio")))
-        .withColumn("pct", col("n_consistent") * lit(100d) / col("n_probes"))
         .withColumn("chars_diff", abs(col("a_avg_length_chars") - col("b_avg_length_chars")))
         .withColumn("sent_diff",
           abs(col("a_avg_avg_sentence_length") - col("b_avg_avg_sentence_length")))
-        .withColumn("e1", when(col("llmmap_similarity") > 0.85, 1).otherwise(0))
-        .withColumn("e2", when(col("max_sd") < 0.005, 1).otherwise(0))
-        .withColumn("e4", when(col("vocab_diff") < 0.05 && col("punct_diff") < 0.01, 1).otherwise(0))
-        .withColumn("e5", when(col("pct") > 50d, 1).otherwise(0))
-        .withColumn("d1", when(col("chars_diff") > 200d, 1).otherwise(0))
-        .withColumn("d2", when(col("sent_diff") > 3d, 1).otherwise(0))
         .withColumn("votes",
           when(col("llmmap_similarity") >= 0.85, 1).otherwise(0)
             + when(col("dli_similarity") >= 0.80, 1).otherwise(0))
-        // |pairs|-row barrier: ma_report's projection over it is a huge
-        // expression tree over this tiny frame, and every ACTION on the
-        // un-truncated plan re-walks the full upstream (fingerprint +
-        // audit + detected pipelines) through analysis, cache lookup and
-        // optimization — measured 1.7 s per count at sf0.1 with all
-        // leaf caches warm. The eager checkpoint pays the upstream once
-        // and leaves a 190-row LogicalRDD under the projection.
+        .withColumn("e1", when(col("llmmap_similarity") > 0.85, 1).otherwise(0))
+        .withColumn("e2", when(col("max_sd") < 0.005, 1).otherwise(0))
+        .withColumn("e4", when(col("vocab_diff") < 0.05 && col("punct_diff") < 0.01, 1).otherwise(0))
+        .withColumn("d1", when(col("chars_diff") > 200d, 1).otherwise(0))
+        .withColumn("d2", when(col("sent_diff") > 3d, 1).otherwise(0))
+        // |pairs|-row barrier: each report's projection over it is a
+        // huge expression tree over this tiny frame, and every ACTION on
+        // the un-truncated plan re-walked the full upstream (fingerprint
+        // + audit + detection pipelines) through analysis, cache lookup
+        // and optimization — measured 1.7 s (ma_report) and 7.0 s
+        // (ma_report_full) per count at sf0.1 with all leaf caches warm.
+        // The eager checkpoint pays the upstream once and leaves a
+        // 190-row LogicalRDD under both projections.
         .localCheckpoint(true))
     }.head
   val Flags = Build("report_flags", flags)
@@ -186,18 +245,11 @@ object Report {
 
   val report = Q(
     "ma_report", {
-      val auditBody = Style.audit.oracle.get.replace("ORDER BY l.model_a, l.model_b", "")
       val pcBody = Style.probeConsistency.oracle.get.replace("ORDER BY model_a, model_b", "")
-
-      val featLines = displayFeatures.map { case (k, label, fmt) =>
-        val diff = s"round(1e-9 + abs(a_$k - b_$k), 6)"
-        s"'| $label | ' || ${fmtSql(fmt, s"b_$k")} || ' | ' || ${fmtSql(fmt, s"a_$k")} || ' | ' || " +
-          s"${fmtSql(fmt, diff)} || ' | ' || ${judgeSql(k, diff)} || ' |' || $NL"
-      }.mkString(",\n  ")
-
       s"""WITH fp AS ($fpBody),
          |pairs AS ($pairsSql),
          |audit AS ($auditBody),
+         |$evidenceSql,
          |pc AS ($pcBody),
          |det AS (${Style.detectedSql}),
          |dist AS (
@@ -213,32 +265,14 @@ object Report {
          |  ) GROUP BY model_a, model_b
          |),
          |calc AS (
-         |  SELECT p.*, a.llmmap_similarity, a.dli_similarity, a.verdict, a.confidence,
-         |    pc.n_probes, pc.n_consistent, d.dist_str,
-         |    greatest(abs(a_style_helpful - b_style_helpful),
-         |      abs(a_style_hedging - b_style_hedging),
-         |      abs(a_style_structured - b_style_structured)) AS max_sd,
-         |    abs(a_avg_unique_word_ratio - b_avg_unique_word_ratio) AS vocab_diff,
-         |    abs(a_avg_punctuation_ratio - b_avg_punctuation_ratio) AS punct_diff,
-         |    n_consistent * ${dd("100")} / n_probes AS pct,
-         |    abs(a_avg_length_chars - b_avg_length_chars) AS chars_diff,
-         |    abs(a_avg_avg_sentence_length - b_avg_avg_sentence_length) AS sent_diff
-         |  FROM pairs p
-         |  JOIN audit a USING (model_a, model_b)
-         |  JOIN pc USING (model_a, model_b)
-         |  JOIN dist d USING (model_a, model_b)
-         |),
-         |flags AS (
-         |  SELECT *,
-         |    CASE WHEN llmmap_similarity > ${dd("0.85")} THEN 1 ELSE 0 END AS e1,
-         |    CASE WHEN max_sd < ${dd("0.005")} THEN 1 ELSE 0 END AS e2,
-         |    CASE WHEN vocab_diff < ${dd("0.05")} AND punct_diff < ${dd("0.01")} THEN 1 ELSE 0 END AS e4,
-         |    CASE WHEN pct > ${dd("50")} THEN 1 ELSE 0 END AS e5,
-         |    CASE WHEN chars_diff > ${dd("200")} THEN 1 ELSE 0 END AS d1,
-         |    CASE WHEN sent_diff > ${dd("3")} THEN 1 ELSE 0 END AS d2,
-         |    CASE WHEN llmmap_similarity >= ${dd("0.85")} THEN 1 ELSE 0 END
-         |      + CASE WHEN dli_similarity >= ${dd("0.80")} THEN 1 ELSE 0 END AS votes
-         |  FROM calc
+         |  SELECT *, CASE WHEN pct > ${dd("50")} THEN 1 ELSE 0 END AS e5
+         |  FROM (
+         |    SELECT f.*, pc.n_probes, pc.n_consistent, d.dist_str,
+         |      pc.n_consistent * ${dd("100")} / pc.n_probes AS pct
+         |    FROM flags f
+         |    JOIN pc USING (model_a, model_b)
+         |    JOIN dist d USING (model_a, model_b)
+         |  )
          |)
          |SELECT model_a, model_b, concat(
          |  '# 模型蒸馏审计报告：' || model_b || ' vs ' || model_a || $NL,
@@ -255,7 +289,7 @@ object Report {
          |    CASE WHEN dli_similarity >= ${dd("0.80")} THEN '⚠️ 派生' ELSE '✓ 独立' END || ' |' || $NL,
          |  '投票结果: ' || printf('%d', votes) || '/2 方法判定为派生关系' || $NL,
          |  '指纹相似度详情:' || $NL,
-         |  $featLines,
+         |  $featLinesSql,
          |  '风格一致率: ' || printf('%d', n_consistent) || '/' || printf('%d', n_probes) ||
          |    ' (' || printf('%.0f%%', pct + 1e-9) || ')' || $NL,
          |  '关键发现:' || $NL,
@@ -293,20 +327,16 @@ object Report {
          |      || ' 的行为模式差异较大，不太可能存在蒸馏关系。'
          |    ELSE '审计判定: 无法确定 ' || model_b || ' 与 ' || model_a
          |      || ' 之间是否存在蒸馏关系。' END) AS report
-         |FROM flags
+         |FROM calc
          |ORDER BY model_a, model_b""".stripMargin
     }, Audit.AuditCaches, Flags) { (spark, dir) =>
     val nl = lit("\n")
-
-    val joined = flags(spark, dir)
+    // a pair no probe of both sources covers is absent from ma_report
+    val joined = flags(spark, dir).filter(col("n_probes").isNotNull)
+    val pct = col("n_consistent") * lit(100d) / col("n_probes")
+    val e5 = when(pct > 50d, 1).otherwise(0)
 
     val llm4 = format_string("%.4f", col("llmmap_similarity") + lit(1e-9))
-    val featLines = displayFeatures.map { case (k, label, fmt) =>
-      val diff = round(lit(1e-9) + abs(col(s"a_$k") - col(s"b_$k")), 6)
-      concat(lit(s"| $label | "), fmtC(fmt, col(s"b_$k")), lit(" | "), fmtC(fmt, col(s"a_$k")),
-        lit(" | "), fmtC(fmt, diff), lit(" | "), judgeC(k, diff), lit(" |"), nl)
-    }
-
     val reportCol = concat(Seq(
       concat(lit("# 模型蒸馏审计报告："), col("model_b"), lit(" vs "), col("model_a"), nl),
       concat(lit("判定: "),
@@ -328,7 +358,7 @@ object Report {
       featLines ++ Seq(
       concat(lit("风格一致率: "), format_string("%d", col("n_consistent")), lit("/"),
         format_string("%d", col("n_probes")), lit(" ("),
-        format_string("%.0f%%", col("pct") + lit(1e-9)), lit(")"), nl),
+        format_string("%.0f%%", pct + lit(1e-9)), lit(")"), nl),
       concat(lit("关键发现:"), nl),
       when(col("e1") === 1, concat(lit("1. 指纹相似度极高 ("), llm4,
         lit("): 远超 0.85 的蒸馏判定阈值"), nl)).otherwise(""),
@@ -337,10 +367,10 @@ object Report {
         format_string("%.3f", col("max_sd") + lit(1e-9)), lit(" 以内"), nl)).otherwise(""),
       when(col("e4") === 1, concat(format_string("%d", lit(1) + col("e1") + col("e2")),
         lit(". 词汇多样性、标点习惯几乎完全一致"), nl)).otherwise(""),
-      when(col("e5") === 1, concat(format_string("%d", lit(1) + col("e1") + col("e2") + col("e4")),
-        lit(". "), format_string("%.0f%%", col("pct") + lit(1e-9)),
+      when(e5 === 1, concat(format_string("%d", lit(1) + col("e1") + col("e2") + col("e4")),
+        lit(". "), format_string("%.0f%%", pct + lit(1e-9)),
         lit(" 的探测结果风格一致"), nl)).otherwise(""),
-      when(col("e1") + col("e2") + col("e4") + col("e5") === 0,
+      when(col("e1") + col("e2") + col("e4") + e5 === 0,
         concat(lit("未发现明显支持蒸馏关系的证据。"), nl)).otherwise(""),
       concat(lit("差异点:"), nl),
       when(col("d1") === 1, concat(lit("1. 回复长度: "), col("model_b"), lit(" 平均 "),
@@ -388,8 +418,7 @@ object Report {
     * to_json/json.dumps float formatting never enters the picture.
     */
   val reportJson = Q(
-    "ma_report_json", {
-      val auditBody = Style.audit.oracle.get.replace("ORDER BY l.model_a, l.model_b", "")
+    "ma_report_json",
       s"""WITH audit AS ($auditBody)
          |SELECT model_a, model_b, concat(
          |  '{"model_a": "', model_a,
@@ -412,8 +441,7 @@ object Report {
          |    '\\n  [dli] 相似度: ', printf('%.4f', dli_similarity + 1e-9), ' (阈值: 0.8)'),
          |  '"}') AS report_json
          |FROM audit
-         |ORDER BY model_a, model_b""".stripMargin
-    }, Audit.AuditCaches) { (spark, dir) =>
+         |ORDER BY model_a, model_b""".stripMargin, Audit.AuditCaches) { (spark, dir) =>
     def f4(c: Column): Column = format_string("%.4f", c + lit(1e-9))
     val summary = concat(
       lit("审计对象: "), col("model_a"), lit(" vs "), col("model_b"),

@@ -35,7 +35,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale: everything joins on per-model aggregate tables (|models|²
   * pairs × 20 probe rows); the only corpus-size-dependent work is the
-  * shared fingerprint/detection cache population.
+  * shared fingerprint/detection cache population. ma_report_full
+  * serves from the same per-pair barrier as ma_report
+  * ([[Report.flags]]), which joins in this report's probe statistics
+  * ([[catalogProbes]]).
   */
 object ReportFull {
 
@@ -143,27 +146,69 @@ object ReportFull {
       s"(${i + 1}, ${sl(pid)}, ${sl(catLabelMap(cat))})"
     }.mkString("SELECT * FROM (VALUES ", ", ", ") AS t(idx, probe_id, cat_label)")
 
-  /** Per-pair probe rows: catalog idx 1..20 × pairs, detected styles
-    * left-joined (missing → "unknown"), consistency + teacher-style
-    * flags. Returns (model_a, model_b, idx, probe_id, cat_label,
-    * tfam, sfam, consistent, s_teach, t_teach).
+  // sorted-struct string aggregation: collect (sort keys..., line),
+  // array_sort, extract line, join with \n
+  private def aggLines(sortKeys: Seq[Column], line: Column): Column =
+    array_join(
+      transform(array_sort(collect_list(struct(sortKeys :+ line.as("line"): _*))),
+        s => s.getField("line")), "\n")
+
+  /** ma_report_full's probe statistics per pair, over catalog idx
+    * 1..ReportProbes with the detected styles `det` left-joined
+    * (missing → "unknown"): the §3.3 probe table, its consistent-row
+    * count `table_consistent`, the teacher-style count and ids
+    * (`ts_count`, `ts_ids`) and the §4.3 distribution table. One row
+    * per pair of `pairKeys`; [[Report.flags]] joins it into the report
+    * barrier.
     */
-  private def probeRowsDf(spark: SparkSession, dir: String, pairKeys: DataFrame): DataFrame = {
-    val det = Style.detectedDf(spark, dir).filter(col("probe_idx") <= ReportProbes)
+  private[operators] def catalogProbes(
+      spark: SparkSession, det: DataFrame, pairKeys: DataFrame): DataFrame = {
+    val inReport = det.filter(col("probe_idx") <= ReportProbes)
     // the oracle caps probe rows at idx <= ReportProbes; mirror that on
     // the catalog side too so a catalog grown past ReportProbes can't
     // silently add unknown-family rows here that the oracle lacks
-    pairKeys.crossJoin(broadcast(catalogDf(spark).filter(col("idx") <= ReportProbes)))
-      .join(det.select(col("source").as("model_a"), col("probe_idx").as("idx"),
+    val probes = pairKeys.crossJoin(broadcast(catalogDf(spark).filter(col("idx") <= ReportProbes)))
+      .join(inReport.select(col("source").as("model_a"), col("probe_idx").as("idx"),
         col("family").as("tfam0")), Seq("model_a", "idx"), "left")
-      .join(det.select(col("source").as("model_b"), col("probe_idx").as("idx"),
+      .join(inReport.select(col("source").as("model_b"), col("probe_idx").as("idx"),
         col("family").as("sfam0")), Seq("model_b", "idx"), "left")
       .withColumn("tfam", coalesce(col("tfam0"), lit("unknown")))
       .withColumn("sfam", coalesce(col("sfam0"), lit("unknown")))
       .withColumn("consistent", col("tfam") === col("sfam"))
       .withColumn("s_teach", isTeacherC(col("sfam"), col("model_a")))
       .withColumn("t_teach", isTeacherC(col("tfam"), col("model_a")))
+
+    val probeLine = concat(
+      lit("| "), format_string("%d", col("idx")), lit(" | "), col("cat_label"),
+      lit(" | "), col("probe_id"), lit(" | "),
+      when(col("s_teach"), concat(lit("**"), col("sfam"), lit("**"))).otherwise(col("sfam")),
+      lit(" | "),
+      when(col("t_teach"), concat(lit("**"), col("tfam"), lit("**"))).otherwise(col("tfam")),
+      lit(" | "), when(col("consistent"), "✓").otherwise(""), lit(" |"))
+    val pt = probes.groupBy("model_a", "model_b").agg(
+      aggLines(Seq(col("idx").as("i")), probeLine).as("probe_table"),
+      count(when(col("consistent"), 1)).as("table_consistent"),
+      count(when(col("s_teach"), 1)).as("ts_count"),
+      array_join(transform(
+        array_sort(collect_list(when(col("s_teach"),
+          struct(col("idx").as("i"), col("probe_id").as("p"))))),
+        s => s.getField("p")), ", ").as("ts_ids"))
+
+    val dist0 = probes.groupBy("model_a", "model_b", "sfam")
+      .agg(count(lit(1)).as("cnt"), min("idx").as("fi"), max(col("s_teach")).as("teach"))
+    val distLine = when(col("teach"), concat(
+      lit("| **"), col("sfam"), lit("** | **"), format_string("%d", col("cnt")),
+      lit("** | **"), format_string("%.0f%%", pctOf(col("cnt")) + 1e-9), lit("** |")))
+      .otherwise(concat(
+        lit("| "), col("sfam"), lit(" | "), format_string("%d", col("cnt")),
+        lit(" | "), format_string("%.0f%%", pctOf(col("cnt")) + 1e-9), lit(" |")))
+    val dist = dist0.groupBy("model_a", "model_b").agg(
+      aggLines(Seq((-col("cnt")).as("nc"), col("fi").as("fi")), distLine).as("dist_table"))
+    pt.join(dist, Seq("model_a", "model_b"))
   }
+
+  /** A count over the report's catalog probes as a percentage. */
+  private def pctOf(c: Column): Column = c * lit(100d) / ReportProbes
 
   private val probesSqlCte: String =
     s"""SELECT pk.model_a, pk.model_b, c.idx, c.probe_id, c.cat_label,
@@ -174,95 +219,10 @@ object ReportFull {
        |  LEFT JOIN det ta ON ta.source = pk.model_a AND ta.probe_idx = c.idx
        |  LEFT JOIN det sb ON sb.source = pk.model_b AND sb.probe_idx = c.idx""".stripMargin
 
-  // sorted-struct string aggregation: collect (sort keys..., line),
-  // array_sort, extract line, join with \n
-  private def aggLines(sortKeys: Seq[Column], line: Column): Column =
-    array_join(
-      transform(array_sort(collect_list(struct(sortKeys :+ line.as("line"): _*))),
-        s => s.getField("line")), "\n")
-
   // ═══════════════ ma_report_full ═══════════════
-
-  /** ma_report_full's per-pair frame: fingerprints, verdicts, the
-    * probe table and the style distribution joined, with the report's
-    * evidence flags, as a |pairs|-row barrier memoized per (session,
-    * dir) — the same one-materialization discipline as
-    * [[Report.flags]].
-    */
-  private[graft] def flags(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionMemo.frames(spark, s"reportfull.flags:$dir") {
-      val audit = Style.auditDf(spark, dir)
-        .select("model_a", "model_b", "llmmap_similarity", "dli_similarity", "verdict", "confidence")
-      val base = Report.pairsDf(spark, dir).join(audit, Seq("model_a", "model_b"))
-      val pairKeys = base.select("model_a", "model_b")
-      val probes = probeRowsDf(spark, dir, pairKeys)
-
-      val probeLine = concat(
-        lit("| "), format_string("%d", col("idx")), lit(" | "), col("cat_label"),
-        lit(" | "), col("probe_id"), lit(" | "),
-        when(col("s_teach"), concat(lit("**"), col("sfam"), lit("**"))).otherwise(col("sfam")),
-        lit(" | "),
-        when(col("t_teach"), concat(lit("**"), col("tfam"), lit("**"))).otherwise(col("tfam")),
-        lit(" | "), when(col("consistent"), "✓").otherwise(""), lit(" |"))
-      val pt = probes.groupBy("model_a", "model_b").agg(
-        aggLines(Seq(col("idx").as("i")), probeLine).as("probe_table"),
-        count(when(col("consistent"), 1)).as("n_consistent"),
-        count(when(col("s_teach"), 1)).as("ts_count"),
-        array_join(transform(
-          array_sort(collect_list(when(col("s_teach"),
-            struct(col("idx").as("i"), col("probe_id").as("p"))))),
-          s => s.getField("p")), ", ").as("ts_ids"))
-
-      val pctOf = (c: Column) => c * lit(100d) / ReportProbes
-      val dist0 = probes.groupBy("model_a", "model_b", "sfam")
-        .agg(count(lit(1)).as("cnt"), min("idx").as("fi"), max(col("s_teach")).as("teach"))
-      val distLine = when(col("teach"), concat(
-        lit("| **"), col("sfam"), lit("** | **"), format_string("%d", col("cnt")),
-        lit("** | **"), format_string("%.0f%%", pctOf(col("cnt")) + 1e-9), lit("** |")))
-        .otherwise(concat(
-          lit("| "), col("sfam"), lit(" | "), format_string("%d", col("cnt")),
-          lit(" | "), format_string("%.0f%%", pctOf(col("cnt")) + 1e-9), lit(" |")))
-      val dist = dist0.groupBy("model_a", "model_b").agg(
-        aggLines(Seq((-col("cnt")).as("nc"), col("fi").as("fi")), distLine).as("dist_table"))
-
-      Seq(base
-        .join(pt, Seq("model_a", "model_b"))
-        .join(dist, Seq("model_a", "model_b"))
-        .withColumn("max_sd", greatest(
-          abs(col("a_style_helpful") - col("b_style_helpful")),
-          abs(col("a_style_hedging") - col("b_style_hedging")),
-          abs(col("a_style_structured") - col("b_style_structured"))))
-        .withColumn("vocab_diff", abs(col("a_avg_unique_word_ratio") - col("b_avg_unique_word_ratio")))
-        .withColumn("punct_diff", abs(col("a_avg_punctuation_ratio") - col("b_avg_punctuation_ratio")))
-        .withColumn("pct", pctOf(col("n_consistent")))
-        .withColumn("ts_pct", pctOf(col("ts_count")))
-        .withColumn("chars_diff", abs(col("a_avg_length_chars") - col("b_avg_length_chars")))
-        .withColumn("sent_diff",
-          abs(col("a_avg_avg_sentence_length") - col("b_avg_avg_sentence_length")))
-        .withColumn("votes",
-          when(col("llmmap_similarity") >= 0.85, 1).otherwise(0)
-            + when(col("dli_similarity") >= 0.80, 1).otherwise(0))
-        .withColumn("e1", when(col("llmmap_similarity") > 0.85, 1).otherwise(0))
-        .withColumn("e2", when(col("max_sd") < 0.005, 1).otherwise(0))
-        .withColumn("e3", when(col("ts_count") > 0, 1).otherwise(0))
-        .withColumn("e4", when(col("vocab_diff") < 0.05 && col("punct_diff") < 0.01, 1).otherwise(0))
-        .withColumn("e5", when(col("pct") > 50d, 1).otherwise(0))
-        .withColumn("d1", when(col("chars_diff") > 200d, 1).otherwise(0))
-        .withColumn("d2", when(col("sent_diff") > 3d, 1).otherwise(0))
-        // |pairs|-row barrier before the six-section report projection
-        // — same rationale as ma_report: every action on the
-        // un-truncated plan re-walked the full probe/audit/fingerprint
-        // upstream through analysis + cache lookup + optimization
-        // (measured 7.0 s per count at sf0.1 with warm leaf caches);
-        // the eager checkpoint runs it once and leaves a 190-row
-        // LogicalRDD under the giant concat.
-        .localCheckpoint(true))
-    }.head
-  val Flags = Build("report_full_flags", flags)
 
   val reportFull: Q = {
     // ---- oracle SQL ----
-    val auditBody = Style.audit.oracle.get.replace("ORDER BY l.model_a, l.model_b", "")
     val nl = "chr(10)"
     val icon = "CASE verdict WHEN 'likely_derived' THEN '⚠️' WHEN 'independent' THEN '✓' ELSE '?' END"
     val vtext = "CASE verdict WHEN 'likely_derived' THEN '可能存在蒸馏关系' WHEN 'independent' THEN '两个模型独立' ELSE '无法确定' END"
@@ -270,16 +230,11 @@ object ReportFull {
     val sim4 = "printf('%.4f', llmmap_similarity + 1e-9)"
     val dli4 = "printf('%.4f', dli_similarity + 1e-9)"
 
-    val sql = {
-      val featLines = displayFeatures.map { case (k, label, fmt) =>
-        val diff = s"round(1e-9 + abs(a_$k - b_$k), 6)"
-        s"'| $label | ' || ${Report.fmtSql(fmt, s"b_$k")} || ' | ' || ${Report.fmtSql(fmt, s"a_$k")} || ' | ' || " +
-          s"${Report.fmtSql(fmt, diff)} || ' | ' || ${Report.judgeSql(k, diff)} || ' |' || $nl"
-      }.mkString(",\n  ")
-
+    val sql =
       s"""WITH fp AS (${Report.fpBody}),
          |pairs AS (${Report.pairsSql}),
-         |audit AS ($auditBody),
+         |audit AS (${Report.auditBody}),
+         |${Report.evidenceSql},
          |det AS (${Style.detectedSql}),
          |catalog AS ($catalogSql),
          |probes AS ($probesSqlCte),
@@ -316,34 +271,17 @@ object ReportFull {
          |  FROM dist0 GROUP BY model_a, model_b
          |),
          |calc AS (
-         |  SELECT p.*, a.llmmap_similarity, a.dli_similarity, a.verdict, a.confidence,
-         |    pt.probe_table, pt.n_consistent, pt.ts_count, pt.ts_ids, d.dist_table,
-         |    greatest(abs(a_style_helpful - b_style_helpful),
-         |      abs(a_style_hedging - b_style_hedging),
-         |      abs(a_style_structured - b_style_structured)) AS max_sd,
-         |    abs(a_avg_unique_word_ratio - b_avg_unique_word_ratio) AS vocab_diff,
-         |    abs(a_avg_punctuation_ratio - b_avg_punctuation_ratio) AS punct_diff,
-         |    n_consistent * ${dd("100")} / $ReportProbes AS pct,
-         |    ts_count * ${dd("100")} / $ReportProbes AS ts_pct,
-         |    abs(a_avg_length_chars - b_avg_length_chars) AS chars_diff,
-         |    abs(a_avg_avg_sentence_length - b_avg_avg_sentence_length) AS sent_diff,
-         |    CASE WHEN a.llmmap_similarity >= ${dd("0.85")} THEN 1 ELSE 0 END
-         |      + CASE WHEN a.dli_similarity >= ${dd("0.80")} THEN 1 ELSE 0 END AS votes
-         |  FROM pairs p
-         |  JOIN audit a USING (model_a, model_b)
-         |  JOIN pt USING (model_a, model_b)
-         |  JOIN dist d USING (model_a, model_b)
-         |),
-         |flags AS (
          |  SELECT *,
-         |    CASE WHEN llmmap_similarity > ${dd("0.85")} THEN 1 ELSE 0 END AS e1,
-         |    CASE WHEN max_sd < ${dd("0.005")} THEN 1 ELSE 0 END AS e2,
          |    CASE WHEN ts_count > 0 THEN 1 ELSE 0 END AS e3,
-         |    CASE WHEN vocab_diff < ${dd("0.05")} AND punct_diff < ${dd("0.01")} THEN 1 ELSE 0 END AS e4,
-         |    CASE WHEN pct > ${dd("50")} THEN 1 ELSE 0 END AS e5,
-         |    CASE WHEN chars_diff > ${dd("200")} THEN 1 ELSE 0 END AS d1,
-         |    CASE WHEN sent_diff > ${dd("3")} THEN 1 ELSE 0 END AS d2
-         |  FROM calc
+         |    CASE WHEN pct > ${dd("50")} THEN 1 ELSE 0 END AS e5
+         |  FROM (
+         |    SELECT f.*, pt.probe_table, pt.n_consistent, pt.ts_count, pt.ts_ids, d.dist_table,
+         |      pt.n_consistent * ${dd("100")} / $ReportProbes AS pct,
+         |      pt.ts_count * ${dd("100")} / $ReportProbes AS ts_pct
+         |    FROM flags f
+         |    JOIN pt USING (model_a, model_b)
+         |    JOIN dist d USING (model_a, model_b)
+         |  )
          |)
          |SELECT model_a, model_b, concat(
          |  '# 模型蒸馏审计报告：' || model_b || ' vs ' || model_a || $nl || $nl,
@@ -374,7 +312,7 @@ object ReportFull {
          |  '### 3.2 指纹相似度详情' || $nl || $nl ||
          |    '| 特征维度 | ' || model_b || ' | ' || model_a || ' | 差异 | 判定 |' || $nl ||
          |    '|---------|-----------|--------|------|------|' || $nl,
-         |  $featLines,
+         |  ${Report.featLinesSql},
          |  $nl,
          |  '### 3.3 逐条探测结果' || $nl || $nl ||
          |    '| # | 探测维度 | Probe ID | ' || model_b || ' 风格匹配 | ' || model_a || ' 风格匹配 | 一致 |' || $nl ||
@@ -438,14 +376,16 @@ object ReportFull {
          |      || ' 之间是否存在蒸馏关系。建议增加探测样本或使用白盒方法进一步分析。**' END
          |    || $nl || $nl || '---' || $nl || $nl,
          |  ${slNl(section6)}) AS report
-         |FROM flags
+         |FROM calc
          |ORDER BY model_a, model_b""".stripMargin
-    }
 
     // ---- Spark plan ----
-    Q("ma_report_full", sql, Audit.AuditCaches, Flags) { (spark, dir) =>
+    Q("ma_report_full", sql, Audit.AuditCaches, Report.Flags) { (spark, dir) =>
       val nl = lit("\n")
-      val joined = flags(spark, dir)
+      val pct = pctOf(col("table_consistent"))
+      val tsPct = pctOf(col("ts_count"))
+      val e3 = when(col("ts_count") > 0, 1).otherwise(0)
+      val e5 = when(pct > 50d, 1).otherwise(0)
 
       val sim4 = format_string("%.4f", col("llmmap_similarity") + lit(1e-9))
       val dli4 = format_string("%.4f", col("dli_similarity") + lit(1e-9))
@@ -455,13 +395,6 @@ object ReportFull {
         .when(col("verdict") === "independent", "两个模型独立").otherwise("无法确定")
       val ctext = when(col("confidence") > 0.7, "高")
         .when(col("confidence") > 0.4, "中").otherwise("低")
-
-      val featLines = displayFeatures.map { case (k, label, fmt) =>
-        val diff = round(lit(1e-9) + abs(col(s"a_$k") - col(s"b_$k")), 6)
-        concat(lit(s"| $label | "), Report.fmtC(fmt, col(s"b_$k")), lit(" | "),
-          Report.fmtC(fmt, col(s"a_$k")), lit(" | "), Report.fmtC(fmt, diff),
-          lit(" | "), Report.judgeC(k, diff), lit(" |"), nl)
-      }
 
       val report = concat(Seq(
         concat(lit("# 模型蒸馏审计报告："), col("model_b"), lit(" vs "), col("model_a"), nl, nl),
@@ -485,14 +418,14 @@ object ReportFull {
           lit("/2 方法判定为派生关系\n\n")),
         concat(lit("### 3.2 指纹相似度详情\n\n| 特征维度 | "), col("model_b"), lit(" | "),
           col("model_a"), lit(" | 差异 | 判定 |\n|---------|-----------|--------|------|------|\n"))) ++
-        featLines ++ Seq(
+        Report.featLines ++ Seq(
         nl,
         concat(lit("### 3.3 逐条探测结果\n\n| # | 探测维度 | Probe ID | "), col("model_b"),
           lit(" 风格匹配 | "), col("model_a"),
           lit(" 风格匹配 | 一致 |\n|---|---------|----------|--------------|----------------|------|\n"),
           col("probe_table"), nl, nl,
-          lit("**风格一致率: "), format_string("%d", col("n_consistent")),
-          lit(s"/$ReportProbes ("), format_string("%.0f%%", col("pct") + lit(1e-9)),
+          lit("**风格一致率: "), format_string("%d", col("table_consistent")),
+          lit(s"/$ReportProbes ("), format_string("%.0f%%", pct + lit(1e-9)),
           lit(")**\n\n---\n\n")),
         lit("## 4. 关键发现\n\n### 4.1 支持蒸馏关系的证据\n\n"),
         when(col("e1") === 1, concat(lit("1. **指纹相似度极高 ("), sim4,
@@ -501,20 +434,20 @@ object ReportFull {
           lit(". **风格标记分布一致**: helpful、hedging、structured、ai_aware 等风格维度的数值差异均在 "),
           format_string("%.3f", col("max_sd") + lit(1e-9)),
           lit(" 以内，说明两个模型的「语气」和「表达习惯」几乎相同。"), nl, nl)).otherwise(""),
-        when(col("e3") === 1, concat(format_string("%d", lit(1) + col("e1") + col("e2")),
+        when(e3 === 1, concat(format_string("%d", lit(1) + col("e1") + col("e2")),
           lit(". **"), col("model_b"), lit(" 在安全相关场景中表现出 "), col("model_a"),
           lit(" 风格**: 在 "), col("ts_ids"), lit(" 等 "), format_string("%d", col("ts_count")),
           lit(" 个场景中，"), col("model_b"), lit(" 被识别为 "), col("model_a"),
           lit(" 风格。安全对齐（alignment）行为是蒸馏中最容易被继承的特征之一。"), nl, nl)).otherwise(""),
-        when(col("e4") === 1, concat(format_string("%d", lit(1) + col("e1") + col("e2") + col("e3")),
+        when(col("e4") === 1, concat(format_string("%d", lit(1) + col("e1") + col("e2") + e3),
           lit(". **词汇多样性、标点习惯几乎完全一致**: 这些是模型底层语言能力的反映，不容易通过表面微调改变。"),
           nl, nl)).otherwise(""),
-        when(col("e5") === 1, concat(
-          format_string("%d", lit(1) + col("e1") + col("e2") + col("e3") + col("e4")),
-          lit(". **"), format_string("%.0f%%", col("pct") + lit(1e-9)),
+        when(e5 === 1, concat(
+          format_string("%d", lit(1) + col("e1") + col("e2") + e3 + col("e4")),
+          lit(". **"), format_string("%.0f%%", pct + lit(1e-9)),
           lit(" 的探测结果风格一致**: 超过半数的场景中，"), col("model_b"), lit(" 和 "),
           col("model_a"), lit(" 被判定为相同的风格模式。"), nl, nl)).otherwise(""),
-        when(col("e1") + col("e2") + col("e3") + col("e4") + col("e5") === 0,
+        when(col("e1") + col("e2") + e3 + col("e4") + e5 === 0,
           lit("未发现明显支持蒸馏关系的证据。\n\n")).otherwise(""),
         lit("### 4.2 差异点\n\n"),
         when(col("d1") === 1, concat(lit("1. **回复长度**: "), col("model_b"), lit(" 平均 "),
@@ -536,8 +469,8 @@ object ReportFull {
         concat(lit("### 4.3 与其他模型的对比参考\n\n"), col("model_b"),
           lit(" 在风格检测中被判定为以下模型风格的分布：\n\n| 风格 | 出现次数 | 占比 |\n|------|---------|------|\n"),
           col("dist_table"), nl, nl),
-        when(col("ts_pct") > 0, concat(lit("值得注意的是，"), col("model_b"), lit(" 在 **"),
-          format_string("%.0f%%", col("ts_pct") + lit(1e-9)), lit(" 的场景中直接被判定为 "),
+        when(tsPct > 0, concat(lit("值得注意的是，"), col("model_b"), lit(" 在 **"),
+          format_string("%.0f%%", tsPct + lit(1e-9)), lit(" 的场景中直接被判定为 "),
           col("model_a"), lit(" 风格**，而这些场景集中在安全边界和知识推理等核心能力上。"),
           nl, nl)).otherwise(""),
         lit("---\n\n"),
@@ -562,7 +495,7 @@ object ReportFull {
         lit("\n\n---\n\n"),
         lit(section6)): _*)
 
-      joined.select(col("model_a"), col("model_b"), report.as("report"))
+      Report.flags(spark, dir).select(col("model_a"), col("model_b"), report.as("report"))
         .orderBy("model_a", "model_b")
     }
   }
@@ -570,12 +503,11 @@ object ReportFull {
   // ═══════════════ ma_report_basic ═══════════════
 
   val reportBasic: Q = {
-    val auditBody = Style.audit.oracle.get.replace("ORDER BY l.model_a, l.model_b", "")
     val nl = "chr(10)"
     val head = s"# 模型蒸馏审计报告\n\n**审计工具**: knowlyr-modelaudit $ToolVersion\n**生成时间**: $AuditDateTime\n\n## 审计对象\n\n| 角色 | 模型 |\n|------|------|\n"
     val tail = "\n## 说明\n\n- **相似度 > 0.85**: 两个模型的行为模式高度相似，可能存在蒸馏关系\n- **相似度 0.5-0.85**: 部分相似，可能共享训练数据或架构\n- **相似度 < 0.5**: 两个模型行为差异较大，可能是独立模型\n\n---\n\n由 [knowlyr-modelaudit](https://github.com/liuxiaotong/model-audit) 生成"
     Q("ma_report_basic",
-      s"""WITH audit AS ($auditBody)
+      s"""WITH audit AS (${Report.auditBody})
          |SELECT model_a, model_b, concat(
          |  ${slNl(head)},
          |  '| 教师模型 (Teacher) | ' || model_a || ' |' || $nl ||

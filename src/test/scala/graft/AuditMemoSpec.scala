@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The audit family served from its one memoized pass over the
   * corpus: what a cold audit costs in jobs, and what the memo leaves
-  * behind once it is evicted.
+  * behind once it is evicted — for the audit family and for the
+  * dedup signature builds alike.
   */
 class AuditMemoSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -54,17 +55,19 @@ class AuditMemoSpec extends AnyFunSuite {
       s"cold ma_audit + ma_verify ran ${runs.mkString(" and ")} jobs, at most $MaxColdAuditJobs expected")
   }
 
-  test("SessionMemo.evict frees every block that serving the audit family made") {
-    // a private copy of the corpus, so no frame another spec cached
-    // for the shared test dir can stand in for this run's
-    val dir = Files.createTempDirectory("graft-audit-memo")
-    val tables = Seq("documents", "embeddings").map(t => dir.resolve(s"$t.parquet"))
-    tables.foreach(t => Files.copy(Paths.get(sf).resolve(t.getFileName), t))
+  /** Serve `qs` on a private copy of `tables` (so no frame another
+    * spec cached for the shared test dir can stand in for this run's),
+    * then require that SessionMemo.evict alone frees every block the
+    * serving made.
+    */
+  private def assertEvictFreesAll(tables: Seq[String], qs: Seq[Q]): Unit = {
+    val dir = Files.createTempDirectory("graft-memo-storage")
+    val copies = tables.map(t => dir.resolve(s"$t.parquet"))
+    copies.foreach(t => Files.copy(Paths.get(sf).resolve(t.getFileName), t))
     try {
       val before = StorageProbe.rddsWithBlocks()
-      for (q <- operators.Audit.all ++ operators.Style.all ++ operators.Reef.all)
-        q.fn(spark, dir.toString).collect()
-      assert((StorageProbe.rddsWithBlocks() -- before).nonEmpty, "the family cached nothing")
+      qs.foreach(_.fn(spark, dir.toString).collect())
+      assert((StorageProbe.rddsWithBlocks() -- before).nonEmpty, "serving cached nothing")
       SessionMemo.evict(spark)
       // unpersist(blocking = false) is asynchronous: poll, do not GC
       val deadline = System.nanoTime() + 5L * 1000000000L
@@ -75,8 +78,19 @@ class AuditMemoSpec extends AnyFunSuite {
       }
       assert(held.isEmpty, s"${held.size} RDDs still hold blocks after SessionMemo.evict")
     } finally {
-      tables.foreach(Files.deleteIfExists)
+      copies.foreach(Files.deleteIfExists)
       Files.deleteIfExists(dir)
     }
+  }
+
+  test("SessionMemo.evict frees every block that serving the audit family made") {
+    assertEvictFreesAll(Seq("documents", "embeddings"),
+      operators.Audit.all ++ operators.Style.all ++ operators.Reef.all)
+  }
+
+  test("SessionMemo.evict frees every block that serving the dedup signatures made") {
+    import operators.Dedup._
+    assertEvictFreesAll(Seq("documents"),
+      Seq(minhash, lshPairs, jaccard, deconFuzzy, simhash, simhashPairs))
   }
 }

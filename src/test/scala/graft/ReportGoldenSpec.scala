@@ -16,6 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    §3.3/§4.3 bolding, the §4.3 teacher-style note, AND the
   *    reference's padding of probes beyond the response count to
   *    "unknown" (both-unknown counts as consistent).
+  *
+  * ma_report, the condensed per-pair form, has no reference generator
+  * of its own: its two fixtures (report_main.md, report_family.md) pin
+  * graft's output for the same two pairs, written before both reports
+  * moved onto one per-pair barrier.
   */
 class ReportGoldenSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -50,6 +55,20 @@ class ReportGoldenSpec extends AnyFunSuite {
     assert(got == want, diffAt(got, want))
   }
 
+  test("ma_report matches its pinned output for (src0, src1)") {
+    val got = reportRow("ma_report", sf, "src0", "src1")
+    val want = fixture("report_main.md")
+    assert(got == want, diffAt(got, want))
+  }
+
+  test("ma_report and ma_report_full serve from one memoized report barrier") {
+    SessionMemo.evict(spark)
+    Seq("ma_report", "ma_report_full").foreach(q => SparkEntry.queries(q)(spark, sf).collect())
+    val reportKeys = SessionMemo.keys(spark).filter(_.startsWith("report"))
+    assert(reportKeys == Set(s"report.flags:$sf"),
+      s"report keys after serving both reports: ${reportKeys.toSeq.sorted.mkString(", ")}")
+  }
+
   // family-named corpus: materialize the TSV fixture as a documents
   // table in a temp dir, then run the registered queries against it
   private lazy val familyDir: String = {
@@ -71,6 +90,12 @@ class ReportGoldenSpec extends AnyFunSuite {
       "evidence rule 3 must fire")
     assert(got.contains("| **gpt-3.5** |"), "teacher-style rows must be bolded")
     assert(got.contains("| unknown | 14 |"), "missing responses must pad to unknown")
+    assert(got == want, diffAt(got, want))
+  }
+
+  test("ma_report matches its pinned output on the family-named corpus") {
+    val got = reportRow("ma_report", familyDir, "gpt-3.5-prime", "qwen-lite")
+    val want = fixture("report_family.md")
     assert(got == want, diffAt(got, want))
   }
 
