@@ -1,94 +1,90 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.{Build, Q, SessionMemo, Tables}
-import graft.functions.HashExprs.dot_product
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** REEF representation similarity: pairwise linear CKA between the
-  * embedding groups (label = model/layer axis), computed distributedly
-  * via the double-centered Gram identity — no driver-side matrices.
-  *
-  * Reference: reef.py:37-69 (_compute_cka):
+  * embedding groups (label = model/layer axis), over a bounded,
+  * rank-aligned sample of each. Reference: reef.py:37-69
+  * (_compute_cka), numpy on one host:
   *   CKA(X,Y) = ‖YᵀX‖²_F / √(‖XᵀX‖²_F·‖YᵀY‖²_F), X,Y column-centered.
   *
-  * Identity used: with G_X = X·Xᵀ (raw Gram) and H the centering
-  * matrix, ‖YᵀX‖²_F = Σ_{r,s} (H·G_X·H)_{rs} · (H·G_Y·H)_{rs}.
-  * Cost is O(N²·d) per group + O(N²) per pair — versus O(N·d²) for
-  * the cross-moment formulation — which is the only viable shape once
-  * hidden states are wide (d in the thousands), and N is capped at
-  * 128 rank-aligned samples so per-pair cost is constant regardless
-  * of corpus size.
+  * Spark selects the sample (each label's MaxN smallest vec_ids); the
+  * driver does the arithmetic, as the reference does. It uses the
+  * oracle's Gram form — with G_X = X·Xᵀ and H the centering matrix,
+  * ‖YᵀX‖²_F = Σ_{r,s} (H·G_X·H)_{rs} · (H·G_Y·H)_{rs} — so only the
+  * summation order differs from the DuckDB oracle. For L labels of n
+  * samples in dimension d the driver holds L·n·d·8 bytes (655 KB at
+  * L = 10, n = 128, d = 64) and does O(L·n²·d + L²·n²) multiply-adds.
   */
 object Reef {
 
   val MaxN = 128
 
-  /** Unordered CKA pair frame; |labels|² fixed-width rows — memoized
-    * and cached, with the centered Gram frame it reads.
+  /** Each label's MaxN smallest vec_ids as (label, rn, embedding),
+    * rn = 1 the smallest: at most L·MaxN rows. The bounded-heap top-k
+    * aggregate (score = -vec_id) carries ≤ MaxN entries per partition
+    * and merges map-side, where a row_number window would shuffle and
+    * sort every embedding; the selection is broadcast back so the
+    * corpus never shuffles.
+    */
+  private[graft] def sampleDf(spark: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    val sel = emb.groupBy("label")
+      .agg(graft.functions.TopKAgg.topk_by_score(
+        negate(col("vec_id").cast("double")), col("vec_id"), MaxN).as("tk"))
+      .select(col("label"), explode(col("tk")).as("t"))
+      .select(col("label"), col("t.id").as("vec_id"), col("t.rank").as("rn"))
+    emb.join(broadcast(sel), Seq("label", "vec_id"))
+      .select(col("label").cast("long"), col("rn"), col("embedding"))
+  }
+
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0d
+    for (i <- a.indices) s += a(i) * b(i)
+    s
+  }
+
+  /** H·(X·Xᵀ)·H, flattened, as g − mean_r − mean_s + grand mean (the
+    * Gram is symmetric, so its row means are its column means).
+    */
+  private def centredGram(x: Array[Array[Double]]): Array[Double] = {
+    val n = x.length
+    val g = Array.tabulate(n, n)((r, s) => dot(x(r), x(s)))
+    val mean = g.map(_.sum / n)
+    val grand = g.map(_.sum).sum / (n.toDouble * n)
+    Array.tabulate(n * n)(k => g(k / n)(k % n) - mean(k / n) - mean(k % n) + grand)
+  }
+
+  private val ckaSchema = StructType(Seq(StructField("label_a", LongType),
+    StructField("label_b", LongType), StructField("cka", DoubleType)))
+
+  /** The CKA pair frame, L(L−1)/2 rows in (label_a, label_b) order:
+    * the sample is collected, every label truncated to n = the
+    * smallest label's sample count (≤ MaxN) for rank alignment, and
+    * the pairs computed on the driver. The memo holds this local
+    * frame; nothing is persisted.
     */
   private def ckaDf(spark: SparkSession, dir: String): DataFrame =
     SessionMemo.frames(spark, s"reef.cka:$dir") {
-      val emb = Tables.embeddings(spark, dir)
-      // Bounded sample selection: the MaxN smallest vec_ids per label via
-      // the bounded-heap top-k aggregate (score = -vec_id, so rank 1 =
-      // smallest). A row_number window here would shuffle AND fully sort
-      // every embedding per label just to keep 128 — the aggregate
-      // carries ≤ MaxN entries per partition and merges map-side, so
-      // shuffle traffic is O(|labels|·MaxN) regardless of corpus size.
-      val sel = emb.groupBy("label")
-        .agg(graft.functions.TopKAgg.topk_by_score(
-          negate(col("vec_id").cast("double")), col("vec_id"), MaxN).as("tk"))
-        .select(col("label"), explode(col("tk")).as("t"))
-        .select(col("label"), col("t.id").as("vec_id"), col("t.rank").as("rn"))
-      // Rank alignment needs every label truncated to the same n =
-      // least(MaxN, min label count); counting the selected rows gives
-      // min(count, MaxN) per label, so min over labels is identical.
-      val n = sel.groupBy("label").agg(count(lit(1)).as("cnt"))
-        .agg(least(lit(MaxN), min("cnt")).as("n"))
-      // The selected (label, vec_id, rn) frame is ≤ |labels|·MaxN rows —
-      // broadcast it so the corpus never shuffles.
-      val ranked = emb.join(broadcast(sel), Seq("label", "vec_id"))
-        .crossJoin(broadcast(n)).filter(col("rn") <= col("n"))
-        .select(col("label"), col("rn"),
-          transform(col("embedding"), x => x.cast("double")).as("e"))
-
-      // raw Gram entries per group: g(label, r, s) = x_r · x_s
-      val a = ranked.select(col("label"), col("rn").as("r"), col("e").as("ea"))
-      val b = ranked.select(col("label"), col("rn").as("s"), col("e").as("eb"))
-      val gram = a.join(b, Seq("label"))
-        .select(col("label"), col("r"), col("s"), dot_product(col("ea"), col("eb")).as("g"))
-
-      // double-center: g̃ = g - mean_r - mean_s + grand_mean
-      val wr = Window.partitionBy("label", "r")
-      val ws = Window.partitionBy("label", "s")
-      val wl = Window.partitionBy("label")
-      val centered = gram
-        .withColumn("gc",
-          col("g") - avg("g").over(wr) - avg("g").over(ws) + avg("g").over(wl))
-        .select("label", "r", "s", "gc")
-        // barrier: the three window passes would otherwise replay for
-        // both sides of the pair join below
-        .cache()
-
-      val selfg = centered.groupBy("label").agg(sum(col("gc") * col("gc")).as("hsic_self"))
-      val ga = centered.select(col("label").as("la"), col("r"), col("s"), col("gc").as("gca"))
-      val gb = centered.select(col("label").as("lb"), col("r"), col("s"), col("gc").as("gcb"))
-      val crossg = ga.join(gb, col("la") < col("lb") && ga("r") === gb("r") && ga("s") === gb("s"))
-        .groupBy("la", "lb").agg(sum(col("gca") * col("gcb")).as("hsic_xy"))
-
-      val pairs = crossg
-        .join(selfg.select(col("label").as("la"), col("hsic_self").as("ha")), Seq("la"))
-        .join(selfg.select(col("label").as("lb"), col("hsic_self").as("hb")), Seq("lb"))
-        .select(
-          col("la").cast("long").as("label_a"),
-          col("lb").cast("long").as("label_b"),
-          round(lit(1e-9) + when(sqrt(col("ha") * col("hb")) < 1e-10, 0d)
-            .otherwise(col("hsic_xy") / sqrt(col("ha") * col("hb"))), 6).as("cka"))
-        .cache()
-      Seq(centered, pairs)
-    }.last
+      val byLabel = sampleDf(spark, dir).collect().groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      val n = byLabel.map(_._2.length).minOption.getOrElse(0)
+      val (labels, grams) = byLabel.map { case (label, rows) =>
+        label -> centredGram(rows.sortBy(_.getLong(1)).take(n)
+          .map(_.getSeq[Float](2).map(_.toDouble).toArray))
+      }.unzip
+      val hsicSelf = grams.map(g => dot(g, g))
+      val pairs = for (a <- grams.indices; b <- a + 1 until grams.size) yield {
+        val den = math.sqrt(hsicSelf(a) * hsicSelf(b))
+        Row(labels(a), labels(b), if (den < 1e-10) 0d else dot(grams(a), grams(b)) / den)
+      }
+      Seq(spark.createDataFrame(pairs.asJava, ckaSchema)
+        .withColumn("cka", round(lit(1e-9) + col("cka"), 6)))
+    }.head
   val ReefCka = Build("reef_cka", ckaDf)
 
   private val ckaBodySql: String =
@@ -128,9 +124,7 @@ object Reef {
   val cka = Q(
     "ma_reef_cka",
     s"""$ckaBodySql
-       |ORDER BY label_a, label_b""".stripMargin, ReefCka) { (spark, dir) =>
-    ckaDf(spark, dir).orderBy("label_a", "label_b")
-  }
+       |ORDER BY label_a, label_b""".stripMargin, ReefCka)(ckaDf)
 
   /** REEF compare verdict (reef.py:184-225): treat labels 0..4 as
     * model A's sampled layers and 5..9 as model B's, pair layer i
@@ -167,15 +161,12 @@ object Reef {
     * tests can assert exact values and batch-invariance.
     */
   private[operators] class FakeEncoder(layer: Int, dim: Int) extends Serializable {
-    var batchesSeen: Int = 0
-    def forward(batch: Seq[(Long, String)]): Seq[(Long, Int, Array[Float])] = {
-      batchesSeen += 1
+    def forward(batch: Seq[(Long, String)]): Seq[(Long, Int, Array[Float])] =
       batch.map { case (id, text) =>
         val h = graft.functions.PolyHashing.foldCodePoints(text)
         val emb = Array.tabulate(dim)(i => (((h + layer * 7919L) * (i + 1)) % 1000L) / 1000f)
         (id, layer, emb)
       }
-    }
   }
 
   /** The reference extracts hidden states by running texts through a

@@ -33,14 +33,15 @@ class AuditMemoSpec extends AnyFunSuite {
         jobs.incrementAndGet()
   }
 
-  private def coldAuditJobs(): Int = {
+  /** Jobs of serving and collecting `qs` in order from an evicted memo. */
+  private def coldJobs(qs: String*): Int = {
     SessionMemo.evict(spark)
     val group = "cold-audit"
     val count = new GroupJobs(group)
     val sc = spark.sparkContext
     sc.addSparkListener(count)
-    sc.setJobGroup(group, "cold ma_audit + ma_verify")
-    try Seq("ma_audit", "ma_verify").foreach(q => SparkEntry.queries(q)(spark, sf).collect())
+    sc.setJobGroup(group, s"cold ${qs.mkString(" + ")}")
+    try qs.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
     finally {
       sc.clearJobGroup()
       StorageProbe.drainListenerBus()
@@ -50,9 +51,25 @@ class AuditMemoSpec extends AnyFunSuite {
   }
 
   test("a cold ma_audit + ma_verify runs a bounded number of jobs") {
-    val runs = Seq(coldAuditJobs(), coldAuditJobs())
+    val runs = Seq(coldJobs("ma_audit", "ma_verify"), coldJobs("ma_audit", "ma_verify"))
     assert(runs.forall(_ <= MaxColdAuditJobs),
       s"cold ma_audit + ma_verify ran ${runs.mkString(" and ")} jobs, at most $MaxColdAuditJobs expected")
+  }
+
+  /** Jobs of one cold ma_reef_compare at sf0.001, measured at 8 on two
+    * runs: 6 to select and collect the CKA sample (the parquet footer
+    * read, the round-robin repartition of each of the two embeddings
+    * reads, the top-k aggregate's shuffle, the selection's broadcast,
+    * the collect), and 2 for the verdict's aggregate over the 45-row
+    * local frame (its shuffle and the result). The Gram pipeline this
+    * replaced ran 21.
+    */
+  private val MaxColdReefJobs = 8
+
+  test("a cold ma_reef_compare runs a bounded number of jobs") {
+    val runs = Seq(coldJobs("ma_reef_compare"), coldJobs("ma_reef_compare"))
+    assert(runs.forall(_ <= MaxColdReefJobs),
+      s"cold ma_reef_compare ran ${runs.mkString(" and ")} jobs, at most $MaxColdReefJobs expected")
   }
 
   /** Serve `qs` on a private copy of `tables` (so no frame another
